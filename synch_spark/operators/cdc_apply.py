@@ -121,7 +121,7 @@ def _apply_merging(
                 # sampled base and its batch silently truncated — the
                 # loser-falls-through comment below would never trigger
                 table.overwrite(upserts, spec.partition_by,
-                                expected_base=-1)
+                                expected_base=-1, key=pk[0])
                 return
             except ConcurrentWriteError:
                 # two consumers raced the FIRST batch: the loser falls
@@ -156,7 +156,7 @@ def _apply_merging(
                     F.broadcast(changed_keys), list(pk), "left_anti")
                 table.overwrite(
                     kept.unionByName(upserts.select(*current.columns)),
-                    spec.partition_by, expected_base=base)
+                    spec.partition_by, expected_base=base, key=pk[0])
 
         from synch_spark.sources.table import commit_with_retry
 
@@ -209,7 +209,7 @@ def _merge_cow(
         _rewrite_width(candidates, upserts))
     table.overwrite_cow(
         replacement, part, vals,
-        file_links=links, expected_base=base,
+        file_links=links, expected_base=base, key=pk[0],
     )
 
 
@@ -259,7 +259,8 @@ def _merge_cow_unpartitioned(table, current, changed_keys, upserts, spec,
     # but a pure-insert bulk batch must not collapse to one task either
     replacement = kept.unionByName(upserts.select(*current.columns)).coalesce(
         _rewrite_width(candidates, upserts))
-    table.overwrite_cow_files(replacement, remove_rels, expected_base=base)
+    table.overwrite_cow_files(replacement, remove_rels, expected_base=base,
+                              key=pk[0])
     return True
 
 
@@ -279,7 +280,7 @@ def _classify_files(table, changed_keys, upserts, part, pk):
     Leading-pk pruning is conservative (a first-column match without a
     full composite match just means a needless rewrite candidate), so
     correctness never depends on stats quality. When a file carries a
-    Bloom sidecar (sources.bloom, built by optimize/compaction), a
+    Bloom sidecar (sources.bloom, written by the commit that added it), a
     min/max range hit is refined by probing the bloom with just the
     batch keys inside the file's range — interleaved-key files whose
     ranges overlap everything stop being rewrite candidates unless a
@@ -334,10 +335,10 @@ def _classify_files(table, changed_keys, upserts, part, pk):
             cand_here, link_here = [], []
             for f in files:
                 base = os.path.basename(f)
-                # no leading slash for root-dir files: the manifest (and
-                # bloom sidecars) key bare basenames for unpartitioned
-                # tables — "/part-x" would never match and every merge
-                # would fall back to a per-file parquet footer read
+                # no leading slash for root-dir files: the manifest keys
+                # bare basenames for unpartitioned tables — "/part-x"
+                # would never match and every merge would fall back to a
+                # per-file parquet footer read
                 rel = f"{dirname}/{base}" if dirname else base
                 if rel in manifest:
                     rng = manifest[rel]
@@ -362,15 +363,7 @@ def _classify_files(table, changed_keys, upserts, part, pk):
                     hit = True
                     probe = sk
                 if hit:
-                    try:
-                        bl = bloom_idx.load_bloom(
-                            table.root,
-                            os.path.join(dirname, os.path.basename(f)),
-                            pk[0],
-                        )
-                    except Exception:  # noqa: BLE001 — a torn sidecar is
-                        # advisory data, never worth failing a merge over
-                        bl = None
+                    bl = bloom_idx.load_bloom(f, pk[0])
                     if bl is not None:
                         hit = bloom_idx.might_contain_any(bl, probe)
                 (cand_here if hit else link_here).append(f)
@@ -420,7 +413,7 @@ def _merge_cow_probe(table, current, changed_keys, upserts, spec, base=None):
     # (one task per touched partition, floored by the upsert volume)
     table.overwrite_cow(
         replacement.coalesce(_rewrite_width(vals, upserts)),
-        part, vals, expected_base=base)
+        part, vals, expected_base=base, key=pk[0])
 
 
 def _apply_collapsing(
@@ -481,6 +474,7 @@ def compact_table(
     # between (lost update, no ConcurrentWriteError) — the exact hazard
     # overwrite()'s docstring warns about
     base = table.current_version()
+    key = spec.pk[0] if spec.has_pk else None
     if spec.engine in (Engine.COLLAPSING_MERGE_TREE, Engine.VERSIONED_COLLAPSING_MERGE_TREE):
         # one table.read(): read_current_state would build the same
         # reconciled-read plan a second time just to recover the stored
@@ -514,31 +508,13 @@ def compact_table(
         # overwrite preserves that file layout (no cluster_by re-sort)
         table.overwrite(zorder_layout(state, list(zorder)), spec.partition_by,
                         data_change=not row_preserving, op="optimize",
-                        expected_base=base)
-        _refresh_blooms(table, spec)
+                        expected_base=base, key=key)
         return
     # re-cluster on pk so post-compaction files have tight, disjoint pk
     # ranges — restores file-level merge pruning degraded by appends
     table.overwrite(state, spec.partition_by, cluster_by=spec.pk or None,
                     data_change=not row_preserving, op="optimize",
-                    expected_base=base)
-    _refresh_blooms(table, spec)
-
-
-def _refresh_blooms(table: ParquetTable, spec: TableSpec) -> None:
-    """Maintenance hook: (re)build per-file Bloom sidecars on the leading
-    pk after compaction rewrote the file set — merge pruning then has
-    both tight min/max ranges AND membership filters."""
-    if spec.has_pk:
-        from synch_spark.sources.bloom import build_file_blooms, gc_blooms
-
-        gc_blooms(table)  # drop sidecars orphaned by the rewrite
-        # executor-side fan-out: one task per fresh file, so the rebuild
-        # scales with the cluster instead of serializing on the driver
-        build_file_blooms(table, spec.pk[0], spark=table.spark)
-        from synch_spark.sources.manifest import refresh_manifest
-
-        refresh_manifest(table, spec.pk[0])
+                    expected_base=base, key=key)
 
 
 def should_compact(

@@ -320,16 +320,26 @@ def ivf_assign(
             F.lit(None).cast("int").alias("_crank"),
         ).filter(F.lit(False))
     v = df.withColumn("_vn", F.sqrt(_dot_double(F.col(vec_col), F.col(vec_col))))
-    # ascending struct order == (sim desc, cid asc): negate the sim
-    cands = F.array(*[
-        F.struct(
-            (-_safe_div(
-                _dot_double(F.col(vec_col), F.lit(list(r["cvec"]))),
-                F.col("_vn") * F.lit(float(r["_cn"])),
-                -2.0,
-            )).alias("_ns"),
-            F.lit(r["cid"]).cast(cid_t).alias("cid"),
+
+    def neg_sim(r):
+        # ascending struct order == (sim desc, cid asc): negate the sim
+        if r["_cn"] is None:
+            # NULL cvec (or element): the join's NULL norm hit the -2.0
+            # sentinel of _safe_div
+            return F.lit(2.0)
+        sim = _safe_div(
+            _dot_double(F.col(vec_col), F.lit(list(r["cvec"]))),
+            F.col("_vn") * F.lit(float(r["_cn"])),
+            -2.0,
         )
+        # a NULL sim (dim mismatch, NULL element) ranked last under the
+        # window's `sim desc` (NULLS LAST): pin it below the sentinel,
+        # since ascending struct order would put a NULL first
+        return F.coalesce(-sim, F.lit(3.0))
+
+    cands = F.array(*[
+        F.struct(neg_sim(r).alias("_ns"),
+                 F.lit(r["cid"]).cast(cid_t).alias("cid"))
         for r in rows
     ])
     if nprobe == 1:

@@ -142,20 +142,12 @@ def etl_full(
             source_df = source_df.withColumn(
                 "_event_unixtime", F.lit(0).cast("long"))
     # cluster on pk (range-partition + in-file sort): every data file
-    # covers a narrow pk range, which is what makes footer min/max stats
-    # selective for the merge path's file-level pruning (table.py)
+    # covers a narrow pk range, which is what makes the per-file key
+    # stats selective for the merge path's file-level pruning; key= has
+    # the commit write them, so the FIRST CDC merge already prunes
     table.overwrite(source_df, spec.partition_by,
-                    cluster_by=spec.pk or None)
-    if spec.has_pk:
-        # index the freshly-loaded layout up front: the FIRST CDC merge
-        # then already prunes by bloom + manifest instead of footer-
-        # scanning the entire initial load (a no-pk table has no merge
-        # path, so nothing to index)
-        from synch_spark.sources.bloom import build_file_blooms
-        from synch_spark.sources.manifest import refresh_manifest
-
-        build_file_blooms(table, spec.pk[0], spark=table.spark)
-        refresh_manifest(table, spec.pk[0])
+                    cluster_by=spec.pk or None,
+                    key=spec.pk[0] if spec.has_pk else None)
     return True
 
 

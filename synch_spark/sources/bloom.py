@@ -1,44 +1,40 @@
-"""Per-file Bloom-filter index for the versioned parquet store.
+"""Per-file Bloom filter on the merge key, written once at commit.
 
-Footer min/max stats (file_key_range) prune a file only when the batch's
-keys miss its [lo, hi] range entirely. Files with INTERLEAVED keys —
-unclustered appends, overlapping compaction outputs — have wide ranges
-that overlap every batch, so min/max proves nothing and the CoW merge
-rewrites them for no reason. A Bloom filter answers the sharper
-question "could ANY of these keys be in this file?" with no false
-negatives, cutting rewrites to files that (almost certainly) hold a
-touched key. This is Delta's bloom-filter-index / Hudi's bloom-index
-idea, rebuilt on the same sidecar-file principle.
+Footer min/max stats (the key range in each file's log entry) prune a
+file only when the batch's keys miss its [lo, hi] range entirely. Files
+with INTERLEAVED keys — unclustered appends, overlapping compaction
+outputs — have wide ranges that overlap every batch, so min/max proves
+nothing and the CoW merge rewrites them for no reason. A Bloom filter
+answers the sharper question "could ANY of these keys be in this
+file?" with no false negatives, cutting rewrites to files that (almost
+certainly) hold a touched key. This is ClickHouse's per-part bloom skip
+index, and Delta's / Hudi's bloom index.
 
-Design constraints that make it cheap:
+Design:
 
-- Data files are IMMUTABLE pool files (`<root>/data/`); a file keeps
-  its pool-relative path (partition dirname + basename) for life,
-  across every version that references it. Sidecars are keyed by that
-  RELATIVE PATH (escaped into one flat `<root>/_bloom/` dir) —
-  basenames alone are NOT unique: one task writing a partitioned table
-  emits the same `part-00000-<uuid>` basename into every partition
-  directory, and a basename-keyed sidecar would let partition A's
-  bloom prove false absence for partition B's file (a lost update in
-  the merge). No version bookkeeping; carried files keep their bloom
-  for free; a sidecar is write-once like its file.
-- Missing sidecar = no pruning claim (falls back to min/max semantics);
-  stale sidecars for files no longer in the current version are inert
-  garbage until ``gc_blooms`` (run by compaction) unlinks them — the
-  flat ``_bloom/`` dir is OUTSIDE the version dirs, so version GC alone
-  never removes them.
-- Double hashing (Kirsch-Mitzenmacher): bit_i = (h1 + i*h2) mod m with
-  h1/h2 from one blake2b digest — k probes from one hash evaluation.
-
-The build here reads each file's key column via pyarrow on the driver —
-right for maintenance jobs at this repo's scale; a production cluster
-builds the same artifact inside the write job (per-partition
-mapInPandas emitting (basename, bits)) with identical on-disk format.
+- The bloom is built by the commit that writes the file (the writer
+  that knows the merge key passes ``key=``; ``ParquetTable`` calls
+  ``build_file_blooms`` between pooling the files and publishing the
+  log entry) and written ONCE, as a dot-prefixed sidecar beside its data
+  file: ``data/p=a/part-x.parquet`` -> ``data/p=a/.part-x.parquet.bloom``.
+  Pool files are immutable and never move, so the sidecar lives and dies
+  with its file: every store path that frees or copies a pool file
+  (``table._pool_paths``) takes the sidecar along. Spark's file listing
+  skips dot-prefixed names, and reads name their files explicitly.
+- A file with no sidecar makes no claim (callers keep min/max
+  semantics). The sidecar header records its column and hash-format
+  version (``HASH_VERSION``); a mismatch reads as "no sidecar". The
+  retired flat ``_bloom/`` store hashed ints differently and is never
+  read: its bits would be false negatives, i.e. lost updates.
+- Double hashing (Kirsch-Mitzenmacher): bit_i = (h1 + i*h2) mod m over
+  uint64 arithmetic. Int keys get (h1, h2) from a vectorised splitmix64
+  mix of their int64 value; str and bytes keys from one blake2b digest
+  per value. Build and probe share these functions, so they agree bit
+  for bit.
 """
 
 from __future__ import annotations
 
-import base64
 import hashlib
 import json
 import os
@@ -47,235 +43,159 @@ import numpy as np
 
 FPP_BITS_PER_KEY = 10  # ~1% false-positive rate at k=7
 NUM_HASHES = 7
+HASH_VERSION = 2
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+_M1 = np.uint64(0xBF58476D1CE4E5B9)
+_M2 = np.uint64(0x94D049BB133111EB)
+_GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
 
 def bloom_safe_key(value) -> bool:
-    """Key types whose build-side (pyarrow ``to_pylist``) and probe-side
-    (Spark ``collect``) python representations are IDENTICAL — the
+    """Key types whose build-side (pyarrow) and probe-side (Spark
+    ``collect``) python representations are IDENTICAL — the
     no-false-negative invariant is only type-enforceable for these.
     Timestamps (tz-aware vs naive), decimals, and floats (float32
-    widening) can stringify differently across the two paths, and a
-    divergence would be a silent false negative — in the CoW merge that
-    reclassifies a file holding a changed key from rewrite to hard link,
-    i.e. a lost update. Mirrors what _EXACT_STAT_TYPES does for min/max
-    stats.
+    widening) can differ across the two paths, and a divergence would
+    be a silent false negative — in the CoW merge that reclassifies a
+    file holding a changed key from rewrite to carry, i.e. a lost
+    update.
 
     bytearray counts as bytes: Spark ``collect()`` returns BinaryType
-    values as bytearray while pyarrow's build side yields bytes —
-    rejecting the probe-side representation made binary-pk blooms build
-    (full key-column read per file) and then never prune a single
-    merge."""
+    values as bytearray while pyarrow's build side yields bytes."""
     return (isinstance(value, (int, str, bytes, bytearray))
             and not isinstance(value, bool))
 
 
-def _hashes(value) -> tuple[int, int]:
-    """(h1, h2) for a key value; type-stable via repr of the canonical
-    python value (int/str/bytes) so build and probe agree."""
-    if isinstance(value, (bytes, bytearray)):
-        raw = b"b:" + bytes(value)
-    elif isinstance(value, int):
-        raw = b"i:" + str(value).encode()
-    else:
-        raw = b"s:" + str(value).encode()
-    d = hashlib.blake2b(raw, digest_size=16).digest()
-    return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little") | 1
+def sidecar_path(path: str) -> str:
+    """The bloom sidecar of the data file at ``path``."""
+    d, name = os.path.split(path)
+    return os.path.join(d, f".{name}.bloom")
 
 
-def _bloom_dir(root: str) -> str:
-    return os.path.join(root, "_bloom")
+def _mix(x: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer over a uint64 array (wrapping arithmetic)."""
+    x = x ^ (x >> np.uint64(30))
+    x = x * _M1
+    x = x ^ (x >> np.uint64(27))
+    x = x * _M2
+    return x ^ (x >> np.uint64(31))
 
 
-def _sidecar(root: str, relkey: str) -> str:
-    # version-relative path, "/" escaped so the flat dir stays flat
-    return os.path.join(_bloom_dir(root), relkey.replace(os.sep, "%2F") + ".bloom.json")
+def _int_hashes(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(h1, h2) uint64 arrays for int64 keys."""
+    x = values.astype(np.int64, copy=False).view(np.uint64)
+    return _mix(x), _mix(x ^ _GOLDEN) | np.uint64(1)
 
 
-def _needs_build(path: str, column: str) -> bool:
-    """A sidecar slot needs building for ``column`` when it is absent,
-    corrupt, or holds a TOMBSTONE for a different column. A REAL bloom
-    for a different column is left alone (build returns 0 for that
-    file, matching the one-bloom-column-per-table design) — rebuilding
-    it would make two maintenance paths with different columns thrash:
-    each batch re-reading every file's keys and destroying the other
-    path's pruning."""
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-    except (OSError, json.JSONDecodeError, ValueError):
-        return True
-    if doc.get("column") == column:
-        return False
-    return bool(doc.get("skip"))  # foreign tombstone: replaceable
+def _obj_hashes(values) -> tuple[np.ndarray, np.ndarray]:
+    """(h1, h2) uint64 arrays for str / bytes / bytearray keys."""
+    digests = b"".join(
+        hashlib.blake2b(
+            b"b:" + bytes(v) if isinstance(v, (bytes, bytearray))
+            else b"s:" + v.encode(),
+            digest_size=16,
+        ).digest()
+        for v in values
+    )
+    d = np.frombuffer(digests, dtype="<u8").reshape(-1, 2)
+    return d[:, 0], d[:, 1] | np.uint64(1)
 
 
-def _write_sidecar(out: str, doc: dict) -> None:
-    import uuid
-
-    tmp = out + f".tmp-{uuid.uuid4().hex[:12]}"  # pid can collide across hosts
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmp, out)
+def _positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray:
+    """(n, k) bit positions of n keys."""
+    i = np.arange(k, dtype=np.uint64)
+    return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
 
 
-def _build_one_bloom(path: str, out: str, column: str) -> int:
-    """Build one sidecar from one data file (pure function of its
-    arguments — runs on the driver for small tables, inside an executor
-    task for the distributed build). Returns 1 when a bloom was written,
-    0 when the file is unbuildable (column absent or key type not
-    bloom-safe) — then a tiny {"skip": true} TOMBSTONE sidecar is
-    written instead, so build_file_blooms never re-lists the file: a
-    table with a non-bloom-safe pk would otherwise re-open every footer
-    (and re-schedule executor tasks) on every micro-batch forever."""
+def _column_hashes(pf, key: str):
+    """(h1, h2) over the non-null ``key`` values of an open ParquetFile,
+    or None when the file has no such column (a partition column) or
+    its type has no type-stable hash (see bloom_safe_key)."""
     import pyarrow as pa
+
+    schema = pf.schema_arrow
+    if key not in schema.names:
+        return None
+    typ = schema.field(key).type
+    is_int = pa.types.is_integer(typ)
+    if not (is_int or pa.types.is_string(typ) or pa.types.is_large_string(typ)
+            or pa.types.is_binary(typ) or pa.types.is_large_binary(typ)):
+        return None
+    col = pf.read(columns=[key]).column(0).drop_null()
+    return _int_hashes(col.to_numpy()) if is_int else _obj_hashes(col.to_pylist())
+
+
+def build_file_blooms(table, rels: list[str], key: str) -> int:
+    """Write the ``key`` bloom of each freshly pooled file in ``rels``
+    beside it. Runs once per file, inside the commit that adds it.
+    Returns the number of sidecars written (a file whose key column is
+    absent or not bloom-safe gets none)."""
     import pyarrow.parquet as pq
 
-    schema = pq.ParquetFile(path).schema_arrow
-    if column not in schema.names:
-        _write_sidecar(out, {"column": column, "skip": True})
-        return 0  # partition column / pre-DDL file: no data pages
-    typ = schema.field(column).type
-    if not (
-        pa.types.is_integer(typ)
-        or pa.types.is_string(typ)
-        or pa.types.is_large_string(typ)
-        or pa.types.is_binary(typ)
-        or pa.types.is_large_binary(typ)
-    ):
-        # bloom_safe_key rationale: only int/str/bytes keys have
-        # type-stable build/probe representations — everything else
-        # stays on min/max-stat semantics
-        _write_sidecar(out, {"column": column, "skip": True})
-        return 0
-    col = pq.read_table(path, columns=[column]).column(0)
-    values = [v for v in col.to_pylist() if v is not None]
-    n = max(len(values), 1)
-    m = int(n * FPP_BITS_PER_KEY) + 8
-    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-    for v in values:
-        h1, h2 = _hashes(v)
-        for i in range(NUM_HASHES):
-            b = (h1 + i * h2) % m
-            bits[b >> 3] |= 1 << (b & 7)
-    _write_sidecar(
-        out,
-        {"column": column, "m": m, "k": NUM_HASHES,
-         "bits": base64.b64encode(bits.tobytes()).decode()},
-    )
-    return 1
-
-
-def build_file_blooms(table, column: str, spark=None) -> int:
-    """Create sidecars for every current-version data file that lacks
-    one. Returns the number of sidecars written. Idempotent; safe to run
-    after every commit or only from maintenance (optimize).
-
-    With ``spark`` given, the per-file builds fan out as one executor
-    task per file (the production shape: reading every key of every
-    file through the driver serializes the maintenance job; executors
-    write sidecars to the shared filesystem directly, and the uuid-
-    suffixed temp + atomic rename keeps concurrent builders safe).
-    Driver-side otherwise."""
-    os.makedirs(_bloom_dir(table.root), exist_ok=True)
-    todo: list[tuple[str, str]] = []
-    for rel in table.snapshot().files:
-        out = _sidecar(table.root, rel)
-        if _needs_build(out, column):
-            # a {"skip": true} tombstone for THIS column counts as
-            # built, so unbuildable files (non-bloom-safe pk types) are
-            # never re-listed batch after batch
-            todo.append((table._abs(rel), out))
-    if not todo:
-        return 0
-    if spark is not None and len(todo) > 1:
-        sc = spark.sparkContext
-        return sum(
-            sc.parallelize(todo, len(todo)).map(
-                lambda po: _build_one_bloom(po[0], po[1], column)
-            ).collect()
-        )
-    return sum(_build_one_bloom(path, out, column) for path, out in todo)
-
-
-def gc_blooms(table) -> int:
-    """Unlink sidecars whose data file is no longer in the current
-    version. Without this, every compaction (fresh uuid file set)
-    orphans the previous sidecars and ``_bloom/`` grows without bound on
-    write-heavy tables. Returns the number of sidecars removed. Safe
-    against in-flight readers of the retained previous version: a
-    missing sidecar only weakens pruning, never correctness."""
-    bdir = _bloom_dir(table.root)
-    if not os.path.isdir(bdir):
-        return 0
-    live: set[str] = set()
-    for v in table.versions():
-        for rel in table.snapshot(v).files:
-            live.add(rel.replace("/", "%2F"))
-    import time
-
-    removed = 0
-    stale_tmp = time.time() - 3600
-    for name in os.listdir(bdir):
-        path = os.path.join(bdir, name)
-        # tolerate races: a concurrent builder's os.replace (or a second
-        # GC) can delete the path between listdir and the stat/remove —
-        # a raced entry must not abort the compaction that called us
-        try:
-            if name.endswith(".bloom.json") \
-                    and name[: -len(".bloom.json")] not in live:
-                os.remove(path)
-                removed += 1
-            elif ".bloom.json.tmp-" in name and os.path.getmtime(path) < stale_tmp:
-                # a builder killed between open() and os.replace() leaves
-                # its temp behind; reclaim after a safety window
-                os.remove(path)
-                removed += 1
-        except FileNotFoundError:
+    built = 0
+    for rel in rels:
+        path = table._abs(rel)
+        hashes = _column_hashes(pq.ParquetFile(path), key)
+        if hashes is None:
             continue
-    return removed
+        h1, h2 = hashes
+        m = max(len(h1), 1) * FPP_BITS_PER_KEY + 8
+        flags = np.zeros(m, dtype=bool)
+        flags[_positions(h1, h2, m, NUM_HASHES).ravel()] = True
+        head = json.dumps({"column": key, "hash": HASH_VERSION,
+                           "m": m, "k": NUM_HASHES}).encode()
+        # "xb": write-once — a pool file is fresh, so is its sidecar
+        with open(sidecar_path(path), "xb") as f:
+            f.write(head + b"\n"
+                    + np.packbits(flags, bitorder="little").tobytes())
+        built += 1
+    return built
 
 
-def load_bloom(root: str, relkey: str, column: str):
-    """(m, k, bits ndarray) or None when absent/for a different column.
-    ``relkey`` is the file's version-relative path (e.g.
-    ``p=a/part-00000-<uuid>.parquet``; bare basename for unpartitioned
-    tables)."""
-    path = _sidecar(root, relkey)
-    if not os.path.exists(path):
+def load_bloom(path: str, column: str):
+    """(m, k, packed bits) of the data file at ``path``, or None when it
+    has no readable sidecar for ``column`` in the current hash format."""
+    try:
+        with open(sidecar_path(path), "rb") as f:
+            head, _, bits = f.read().partition(b"\n")
+        spec = json.loads(head)
+    except (OSError, ValueError):
         return None
-    with open(path) as f:
-        spec = json.load(f)
-    if spec.get("column") != column or spec.get("skip"):
-        return None  # different column, or an unbuildable-file tombstone
-    bits = np.frombuffer(base64.b64decode(spec["bits"]), dtype=np.uint8)
-    return spec["m"], spec["k"], bits
+    if (spec.get("column") != column or spec.get("hash") != HASH_VERSION
+            or len(bits) * 8 < spec["m"]):
+        return None
+    return spec["m"], spec["k"], np.frombuffer(bits, dtype=np.uint8)
 
 
 def might_contain_any(bloom, keys) -> bool:
     """True unless the bloom PROVES none of ``keys`` is in the file.
     No false negatives: a True may be spurious (~FPP per key), a False
-    is definitive. Keys outside the type-enforced domain (bloom_safe_key)
-    make no claim at all — True, never a spurious proof of absence."""
+    is definitive. Keys outside the type-enforced domain (bloom_safe_key,
+    or ints beyond int64) make no claim at all — True, never a spurious
+    proof of absence."""
     m, k, bits = bloom
-    if any(not bloom_safe_key(v) for v in keys):
+    keys = list(keys)
+    if not all(bloom_safe_key(v) for v in keys):
         return True
-    for v in keys:
-        h1, h2 = _hashes(v)
-        for i in range(k):
-            b = (h1 + i * h2) % m
-            if not (bits[b >> 3] >> (b & 7)) & 1:
-                break
-        else:
+    ints = [v for v in keys if isinstance(v, int)]
+    if any(not _I64_MIN <= v <= _I64_MAX for v in ints):
+        return True
+    objs = [v for v in keys if not isinstance(v, int)]
+    flags = np.unpackbits(bits, count=m, bitorder="little")
+    for h1, h2 in (_int_hashes(np.array(ints, dtype=np.int64)),
+                   _obj_hashes(objs)):
+        if len(h1) and flags[_positions(h1, h2, m, k)].all(axis=1).any():
             return True
     return False
 
 
 def prune_files(table, column: str, keys) -> list[str] | None:
     """Current-version data files that might hold any of ``keys`` in
-    ``column``, by footer min/max refined with Bloom sidecars — no data
-    pages read. None when pruning can't prove anything for some file
-    (missing/unorderable stats AND no bloom): callers must then scan
-    normally. An empty list is a proof that NO file holds any key."""
+    ``column``, by the log entry's key range (footer fallback for
+    entries that lack it) refined with Bloom sidecars — no data pages
+    read. None when pruning can't prove anything for some file (no
+    orderable range AND no bloom): callers must then scan normally. An
+    empty list is a proof that NO file holds any key."""
     import bisect
 
     from synch_spark.sources.manifest import load_manifest
@@ -293,7 +213,7 @@ def prune_files(table, column: str, keys) -> list[str] | None:
     manifest = load_manifest(table, column) or {}
     for rel in table.snapshot().files:
         path = table._abs(rel)
-        bl = load_bloom(table.root, rel, column)
+        bl = load_bloom(path, column)
         if rel in manifest:
             rng = manifest[rel]
         else:

@@ -1,5 +1,5 @@
-"""Per-file stats riding in the manifest log: one snapshot replay per
-merge instead of an O(files) parquet-footer storm.
+"""Per-file key stats riding in the manifest log: one snapshot replay
+per merge instead of an O(files) parquet-footer storm.
 
 ``_classify_files`` (the merge's metadata-only write-set discovery)
 needs the leading-pk min/max of EVERY current file on EVERY micro-batch.
@@ -7,20 +7,20 @@ Reading each file's footer is fine at test scale but at 100 TB it is
 thousands of small opens per batch — the dominant driver-side cost of a
 merge. File ranges are IMMUTABLE (pool files never change), so they
 belong NEXT TO THE FILE ENTRY in the table's manifest log, exactly like
-Delta's per-file stats in the transaction log:
+Delta's per-file stats in the ``add`` action:
 
 - each log entry's file map carries ``{rel: {column: [lo, hi] | null}}``
   (``null`` = computed but not provably exact — string pks, statless
   writers; the merge then treats the file by bloom/conservative rules,
-  same as a footer miss). A column KEY that is absent means "not yet
-  computed" — readers fall back to the footer, so a stale manifest only
-  costs speed, never correctness.
-- ``refresh_manifest`` footer-reads ONLY files whose entry lacks the
-  column (page-cache-hot right after the write) and patches the owning
-  log entries in place (``ParquetTable.patch_entry_stats`` — atomic
-  replace, convergent). Run where bloom maintenance already runs: per
-  micro-batch and at compaction. O(new files) footer reads + O(chain)
-  small JSON rewrites per refresh.
+  same as a footer miss). A column KEY that is absent means "never
+  computed" — a file written without ``key=``, or by an older writer —
+  and readers fall back to the footer, so a missing range only costs
+  speed, never correctness.
+- ``refresh_manifest`` computes the ranges of a commit's NEW files
+  (footers are page-cache-hot right after the write) and the commit
+  puts them into the entry it is about to publish. Published entries
+  are never rewritten: stats, membership and schema commit atomically
+  as one JSON object, once.
 
 JSON-safety: ints/floats/bools store raw; pyarrow returns DATE /
 TIMESTAMP / DECIMAL footer stats as datetime.date / datetime.datetime /
@@ -65,8 +65,8 @@ def _dec_stat(v):
 
 def load_manifest(table, column: str) -> dict | None:
     """{relpath: (lo, hi) | None} for the given stats column from the
-    current version's log entries. Files whose stats for ``column`` are
-    not yet computed are OMITTED (callers footer-fallback per file);
+    current version's log entries. Files whose entry lacks ``column``
+    (written without ``key=``) are OMITTED (callers footer-fallback per file);
     returns None only when the table has no committed version."""
     if table.current_version() < 0:
         return None
@@ -79,22 +79,16 @@ def load_manifest(table, column: str) -> dict | None:
     return out
 
 
-def refresh_manifest(table, column: str) -> int:
-    """Compute ``column`` min/max for every current-version file whose
-    log entry lacks it and patch the owning entries. Returns the number
-    of files that needed a footer read. Idempotent; concurrent refreshes
-    converge (same immutable inputs, same output)."""
+def refresh_manifest(table, rels: list[str], key: str) -> dict:
+    """The ``add`` map of a commit's freshly pooled files: each file's
+    ``key`` range from its footer, JSON-encoded (``null`` when absent,
+    inexact or unencodable)."""
     from synch_spark.sources.table import file_key_range
 
-    if table.current_version() < 0:
-        return 0
-    snap = table.snapshot()
-    patch: dict[str, dict] = {}
-    for rel, stats in snap.files.items():
-        if column in stats:
-            continue
+    add: dict = {}
+    for rel in rels:
         try:
-            rng = file_key_range(table._abs(rel), column)
+            rng = file_key_range(table._abs(rel), key)
         except Exception:  # noqa: BLE001 — unreadable footer: statless
             rng = None
         if rng is not None:
@@ -102,7 +96,5 @@ def refresh_manifest(table, column: str) -> int:
                 rng = [_enc_stat(rng[0]), _enc_stat(rng[1])]
             except TypeError:
                 rng = None  # unencodable stat type: store "not exact"
-        patch[rel] = {column: rng}
-    if patch:
-        table.patch_entry_stats(patch)
-    return len(patch)
+        add[rel] = {key: rng}
+    return add

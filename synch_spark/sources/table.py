@@ -26,11 +26,13 @@ changed) paths — never O(table):
   files — they never see partial writes, and a concurrent commit never
   changes rows under a running query (files are immutable; GC spares
   the previous version for in-flight readers).
-- per-file column stats (min/max of the merge key) ride inside the log
-  entries next to the file they describe (``sources.manifest``
-  maintains them), and the schema-evolution document rides in the
-  entry too — schema, membership, and stats commit atomically as one
-  JSON object.
+- each new file is indexed ONCE, by the commit that adds it, when the
+  writer passes the merge ``key=``: the key's min/max rides in the log
+  entry next to the file (``sources.manifest``) and its bloom is written
+  beside the file in the pool (``sources.bloom``). The schema-evolution
+  document rides in the entry too — schema, membership, and stats
+  commit atomically as one JSON object, and a published entry is never
+  rewritten.
 
 Scale notes: at 100 TB a micro-batch merge touching k of N files pays
 O(k) file writes + O(k) log bytes; the previous design hard-linked all
@@ -51,6 +53,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from synch_spark.sources import schema_evolution as se
+from synch_spark.sources.bloom import sidecar_path
 
 _CURRENT = "_CURRENT"  # informational pointer (the log is the truth)
 _MDIR = "_v"
@@ -60,6 +63,14 @@ CKPT_EVERY = 10
 #: restore/clone diffs at or above this many files copy via an executor
 #: fan-out instead of a driver-serial loop
 _COPY_FANOUT_MIN = 64
+
+
+def _pool_paths(data_dir: str, rel: str) -> tuple[str, str]:
+    """A pool file's paths on disk: the data file and its bloom sidecar.
+    Every path that frees or copies a pool file goes through here, so
+    the sidecar lives and dies with its file."""
+    path = os.path.join(data_dir, rel)
+    return path, sidecar_path(path)
 
 
 def _copy_one_pool_file(src_root: str, dst_root: str, rel: str,
@@ -73,16 +84,14 @@ def _copy_one_pool_file(src_root: str, dst_root: str, rel: str,
     still in its copy..publish window would look TTL-expired to a
     concurrent vacuum and be reclaimed mid-flight. A fresh mtime gives
     the in-flight copy the same grace window every staged write gets."""
-    dst = os.path.join(dst_root, _DATA, new_rel)
+    src, src_sidecar = _pool_paths(os.path.join(src_root, _DATA), rel)
+    dst, dst_sidecar = _pool_paths(os.path.join(dst_root, _DATA), new_rel)
     os.makedirs(os.path.dirname(dst), exist_ok=True)
-    shutil.copyfile(os.path.join(src_root, _DATA, rel), dst)
-    from synch_spark.sources import bloom as _bloom
+    shutil.copyfile(src, dst)
+    if os.path.exists(src_sidecar):
+        shutil.copyfile(src_sidecar, dst_sidecar)
 
-    src_sc = _bloom._sidecar(src_root, rel)
-    if os.path.exists(src_sc):
-        dst_sc = _bloom._sidecar(dst_root, new_rel)
-        os.makedirs(os.path.dirname(dst_sc), exist_ok=True)
-        shutil.copyfile(src_sc, dst_sc)
+
 _UNSET = object()
 
 
@@ -307,9 +316,7 @@ class ParquetTable:
         # memoized snapshots keyed by resolved version: committed
         # versions are immutable, so one metadata operation (point
         # lookup, merge classify) re-reading the same version pays the
-        # checkpoint parse once instead of 4-5 times. Stats patched by
-        # ANOTHER process aren't seen until this instance re-snapshots —
-        # stats are a cache over footers, so that only costs speed.
+        # checkpoint parse once instead of 4-5 times
         self._snap_cache: dict[int, Snapshot] = {}
         # versions whose data files were verified present (see
         # _files_present) — immutable once true for the current window
@@ -507,11 +514,7 @@ class ParquetTable:
             self.committer.publish(self._manifest_path(v),
                                    json.dumps(entry).encode("utf-8"))
         except AlreadyCommitted:
-            for rel in cleanup_rels or ():
-                try:
-                    os.remove(os.path.join(self._data, rel))
-                except OSError:
-                    pass
+            self._free_pool_files(cleanup_rels or ())
             raise ConcurrentWriteError(
                 f"table {self.root}: version {v} was committed by a "
                 f"concurrent writer; retry the merge"
@@ -542,14 +545,7 @@ class ParquetTable:
             except (OSError, json.JSONDecodeError):
                 prev = None
             if prev is not None:
-                for rel in prev.get("remove", ()):
-                    try:
-                        os.remove(os.path.join(self._data, rel))
-                    except OSError:
-                        pass
-        # ONE definition of the retention floor (shared with the
-        # stats-patch orphan check) — two diverging copies of this walk
-        # would let the GC and the patch path disagree on liveness
+                self._free_pool_files(prev.get("remove", ()))
         floor = self._retained_floor()
         for name in os.listdir(self._mdir):
             if name.startswith("v=") and name.endswith(".json"):
@@ -563,94 +559,29 @@ class ParquetTable:
                     except OSError:
                         pass
 
-    def patch_entry_stats(self, rels_stats: dict[str, dict]) -> None:
-        """Fold freshly computed per-file stats into the log entries that
-        own the given files (sources.manifest's refresh path). Entries
-        are rewritten in place via atomic replace — convergent (stats are
-        a pure function of the immutable file), so concurrent refreshes
-        and the exclusive-create commit protocol don't conflict."""
-        v = self.current_version()
-        if v < 0 or not rels_stats:
-            return
-        self._snap_cache.clear()  # cached snapshots hold pre-patch stats
-        cur = v
-        pending = dict(rels_stats)
-        while pending:
-            if not self._patch_one_entry(cur, pending):
-                return  # entry unreadable (GC race): remaining stats stay lazy
-            try:
-                e = self._entry(cur)
-            except (OSError, json.JSONDecodeError):
-                return
-            if e["type"] == "ckpt":
-                return
-            cur = e["base"]
+    def _free_pool_files(self, rels) -> None:
+        """Unlink pool files (with their sidecars) referenced by no
+        retained version; already-gone paths are fine."""
+        for rel in rels:
+            for path in _pool_paths(self._data, rel):
+                try:
+                    os.remove(path)
+                except OSError:
+                    pass
 
-    def _patch_one_entry(self, cur: int, pending: dict) -> bool:
-        """Merge pending stats into one entry with read-modify-write +
-        VERIFY: a concurrent refresh for a DIFFERENT column replacing
-        the same file would drop this writer's keys (last-replace-wins),
-        so after writing we re-read and retry the merge until our
-        columns survive — both refreshes converge to the union."""
-        for _attempt in range(5):
-            try:
-                e = self._entry(cur)
-            except (OSError, json.JSONDecodeError):
-                return False
-            bucket = e["files"] if e["type"] == "ckpt" else e["add"]
-            mine = {rel: st for rel, st in pending.items() if rel in bucket}
-            if not mine:
-                return True
-            missing = {
-                rel for rel, st in mine.items()
-                if any(c not in bucket[rel] for c in st)
-            }
-            if not missing:
-                for rel in mine:
-                    pending.pop(rel, None)
-                return True
-            for rel, st in mine.items():
-                bucket[rel] = {**bucket[rel], **st}
-            tmp = os.path.join(self._mdir, f".tmp-{uuid.uuid4().hex[:12]}.json")
-            with open(tmp, "w") as f:
-                json.dump(e, f)
-            dst = self._manifest_path(cur)
-            if not os.path.exists(dst):
-                # entry GC'd since we read it (a commit advanced the
-                # retention floor): os.replace would RECREATE it as an
-                # orphan that nothing ever collects. Its stats are dead
-                # anyway — drop the write.
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
-                return False
-            # carry the entry's publish mtime across the rewrite: it is
-            # history()'s committed_at, and a stats refresh patching an
-            # OLD entry must not make the commit log's timestamps run
-            # backwards
-            try:
-                mtime = os.path.getmtime(dst)
-            except OSError:
-                mtime = None
-            os.replace(tmp, dst)
-            if mtime is not None:
-                try:
-                    os.utime(dst, (mtime, mtime))
-                except OSError:
-                    pass
-            if cur < self._retained_floor():
-                # GC deleted dst in the window between the existence
-                # check and the replace; our write resurrected a
-                # below-floor entry. Remove the orphan we just made.
-                try:
-                    os.unlink(dst)
-                except OSError:
-                    pass
-                return False
-        for rel in list(pending):  # lost 5 races: leave stats lazy (footer path)
-            pending.pop(rel, None)
-        return True
+    def _index(self, rels: list[str], key: str | None) -> dict:
+        """The ``add`` map of freshly pooled files. With the merge
+        ``key`` given, each file is indexed once, here, before its entry
+        is published: the key range rides in the entry
+        (``manifest.refresh_manifest``) and the bloom is written beside
+        the file (``bloom.build_file_blooms``)."""
+        if key is None:
+            return {r: {} for r in rels}
+        from synch_spark.sources import bloom, manifest
+
+        add = manifest.refresh_manifest(self, rels, key)
+        bloom.build_file_blooms(self, rels, key)
+        return add
 
     def _retained_floor(self) -> int:
         """Oldest log-entry version the GC retains — mirrors
@@ -830,6 +761,7 @@ class ParquetTable:
         data_change: bool = True,
         op: str | None = None,
         epoch: str | None = None,
+        key: str | None = None,
     ) -> None:
         """``cluster_by`` range-partitions + sorts rows on the given key
         before writing, so every data file covers a narrow, mostly
@@ -850,7 +782,12 @@ class ParquetTable:
         flag): the caller asserts the new file set holds exactly the
         old rows, so incremental consumers (``changes_per_commit``) can
         skip the hop instead of diffing the whole rewrite to discover
-        that everything cancels."""
+        that everything cancels.
+
+        ``key``: the merge key, for writers that have one — each new
+        file's key range and bloom are written by this commit (see
+        ``_index``); the same argument on ``overwrite_cow`` /
+        ``overwrite_cow_files``."""
         base = self.current_version() if expected_base is None else expected_base
         try:
             snap = self.snapshot(base) if base >= 0 else None
@@ -873,7 +810,7 @@ class ParquetTable:
         rels = self._promote_files(staging)
         entry = self._make_entry(
             base + 1,
-            {r: {} for r in rels},
+            self._index(rels, key),
             sorted(snap.files) if snap else [],
             snap,
             schema_change=None,  # a full rewrite materializes the logical schema
@@ -920,6 +857,7 @@ class ParquetTable:
         touched_values: list,
         file_links: dict[str, list[str]] | None = None,
         expected_base: int | None = None,
+        key: str | None = None,
     ) -> None:
         """Partition-level copy-on-write commit.
 
@@ -951,7 +889,7 @@ class ParquetTable:
         """
         v_old = self.current_version() if expected_base is None else expected_base
         if v_old < 0:
-            self.overwrite(df, partition_by)
+            self.overwrite(df, partition_by, key=key)
             return
         try:
             snap = self.snapshot(v_old)
@@ -981,7 +919,7 @@ class ParquetTable:
             ):
                 remove.append(rel)
         entry = self._make_entry(
-            v_old + 1, {r: {} for r in rels}, remove, snap, op="merge"
+            v_old + 1, self._index(rels, key), remove, snap, op="merge"
         )
         self._write_entry(entry, cleanup_rels=rels)
 
@@ -990,6 +928,7 @@ class ParquetTable:
         df: DataFrame,
         remove_rels: list[str],
         expected_base: int | None = None,
+        key: str | None = None,
     ) -> None:
         """File-level copy-on-write commit for UNPARTITIONED tables.
 
@@ -1013,7 +952,7 @@ class ParquetTable:
         """
         v_old = self.current_version() if expected_base is None else expected_base
         if v_old < 0:
-            self.overwrite(df)
+            self.overwrite(df, key=key)
             return
         try:
             snap = self.snapshot(v_old)
@@ -1028,8 +967,8 @@ class ParquetTable:
         rels = self._promote_files(staging)
         live = set(snap.files)
         remove = [r for r in remove_rels if r in live]
-        entry = self._make_entry(v_old + 1, {r: {} for r in rels}, remove, snap,
-                                 op="merge")
+        entry = self._make_entry(v_old + 1, self._index(rels, key), remove,
+                                 snap, op="merge")
         self._write_entry(entry, cleanup_rels=rels)
 
     def append(self, df: DataFrame, partition_by: str | None = None,
@@ -1100,22 +1039,14 @@ class ParquetTable:
                 time.sleep(0.02 * (2**attempt) * (0.5 + random.random()))
         else:
             if epoch is None or not self._epoch_applied(epoch):
-                for r in rels:
-                    try:
-                        os.remove(self._abs(r))
-                    except OSError:
-                        pass
+                self._free_pool_files(rels)
                 raise ConcurrentWriteError(
                     f"table {self.root}: append lost the commit race 8 times"
                 )
         # duplicate-epoch exit: the rows are already committed by the
         # concurrent replay — drop this attempt's staged files
-        for r in rels:
-            try:
-                os.remove(self._abs(r))
-            except OSError:
-                pass
-        return
+        self._free_pool_files(rels)
+
     def vacuum(self, staging_ttl_s: float = 3600.0) -> int:
         """Remove crash debris: ``.staging-*`` dirs and ``_v/.tmp-*``
         files older than the TTL (a writer that died mid-prepare leaves
@@ -1159,6 +1090,10 @@ class ParquetTable:
                 if expired:
                     shutil.rmtree(path, ignore_errors=True)
                     removed += 1
+        legacy = os.path.join(self.root, "_bloom")  # retired store, never read
+        if os.path.isdir(legacy):
+            shutil.rmtree(legacy, ignore_errors=True)
+            removed += 1
         if os.path.isdir(self._mdir):
             for name in os.listdir(self._mdir):
                 if name.startswith(".tmp-"):
@@ -1170,15 +1105,16 @@ class ParquetTable:
                     except OSError:
                         continue
         if self.current_version() >= 0 and os.path.isdir(self._data):
-            live: set[str] = set()
-            for v in self.versions():
-                live.update(self.snapshot(v).files)
+            # a live file's sidecar is live with it
+            live = {
+                path for v in self.versions() for rel in self.snapshot(v).files
+                for path in _pool_paths(self._data, rel)
+            }
             for dirpath, _dirs, names in os.walk(self._data):
                 for n in names:
                     path = os.path.join(dirpath, n)
-                    rel = os.path.relpath(path, self._data).replace(os.sep, "/")
                     try:
-                        if rel not in live and os.path.getmtime(path) < cutoff:
+                        if path not in live and os.path.getmtime(path) < cutoff:
                             os.remove(path)
                             removed += 1
                     except OSError:
@@ -1318,8 +1254,8 @@ class ParquetTable:
         later entry already removed would let that deferred GC delete a
         file the restore made live again; a new identity can never be on
         an old remove-list. Stats ride along (same bytes); bloom
-        sidecars are copied to the new identity too, so point-lookup
-        pruning survives a rollback."""
+        sidecars are copied with their file, so point-lookup pruning
+        survives a rollback."""
         cur_v = self.current_version()
         if cur_v < 0:
             raise FileNotFoundError(f"table {self.root} has no committed version")

@@ -132,14 +132,6 @@ class CdcPipeline:
     value_schemas: dict[str, T.StructType] = field(default_factory=dict)
     alias: str = "default"
     monitor: bool = True
-    # keep Bloom sidecars current for the files each merge writes: without
-    # this, post-merge files carry no membership filter and stay rewrite
-    # candidates in EVERY later batch whose keys overlap their (wide,
-    # unclustered) min/max range — rewrite amplification that compounds
-    # until the next compaction. The per-batch cost is reading the pk
-    # column of just the NEW files (build is idempotent per relpath;
-    # hard-linked files keep their sidecars).
-    maintain_blooms: bool = True
     # incremental materialized views, refreshed in the SAME micro-batch as
     # the table apply (operators.mv); keyed implicitly by their .source
     views: list = field(default_factory=list)
@@ -357,32 +349,6 @@ class CdcPipeline:
                 continue
             table = self.table_for(spec)
             apply_cdc_batch(table, typed, spec, epoch=epoch)
-            from synch_spark.config import Engine as _E
-
-            if (
-                self.maintain_blooms
-                and spec.has_pk
-                # unpartitioned tables merge through the same stats+bloom
-                # file classification (overwrite_cow_files), so they need
-                # sidecars just as much as partitioned ones
-                # collapsing engines append-only and never consult blooms
-                # (_apply_collapsing has no merge pruning) — building
-                # them would be pure wasted I/O per batch
-                and spec.engine
-                not in (_E.COLLAPSING_MERGE_TREE, _E.VERSIONED_COLLAPSING_MERGE_TREE)
-            ):
-                from synch_spark.sources.bloom import build_file_blooms, gc_blooms
-                from synch_spark.sources.manifest import refresh_manifest
-
-                # gc first: each merge orphans its rewritten files'
-                # sidecars; without this the flat _bloom/ dir grows by
-                # O(rewritten files) per micro-batch forever
-                gc_blooms(table)
-                build_file_blooms(table, spec.pk[0], spark=self.spark)
-                # stats manifest: footer-reads only this batch's new
-                # files; the NEXT merge then opens one JSON, not O(files)
-                # parquet footers
-                refresh_manifest(table, spec.pk[0])
             for view in self.views:
                 if view.source == spec.qualified_name:
                     # base read AFTER apply: min/max partial recompute must

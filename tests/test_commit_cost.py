@@ -332,10 +332,8 @@ def test_unpartitioned_merge_bloom_refines_overlapping_ranges(spark, tmp_path):
     the partitioned one: two files with fully OVERLAPPING pk min/max
     (interleaved even/odd keys) are both range-hits for any batch key,
     but the bloom proves the odd-keyed file holds no even key — one
-    file rewrites, the other carries by name."""
-    from synch_spark.sources.bloom import build_file_blooms
-    from synch_spark.sources.manifest import refresh_manifest
-
+    file rewrites, the other carries by name. Both blooms are written
+    by the commits that add the files."""
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
     t = ParquetTable(spark, str(tmp_path / "t"))
@@ -343,11 +341,9 @@ def test_unpartitioned_merge_bloom_refines_overlapping_ranges(spark, tmp_path):
                                   "k long, p string, v double").coalesce(1)
     odds = spark.createDataFrame([(k, "a", 1.0) for k in range(1, 2000, 2)],
                                  "k long, p string, v double").coalesce(1)
-    t.overwrite(evens)
-    t.append(odds)
+    t.overwrite(evens, key="k")
+    t.overwrite_cow_files(odds, [], key="k")  # add-only commit
     assert len(t.snapshot().files) == 2
-    build_file_blooms(t, "k")
-    refresh_manifest(t, "k")
 
     before = set(t.snapshot().files)
     apply_cdc_batch(t, _events(spark, [("insert", 500, "a", -1.0, 10)]),

@@ -192,6 +192,28 @@ def test_zero_vector_neither_crashes_nor_wins(spark):
     assert len(assigned) == 6  # zero vector still lands in some bucket
 
 
+def test_ivf_assign_ranks_null_similarity_and_null_centroid_last(spark):
+    """A centroid whose dim differs from the vector's yields a NULL
+    similarity, and a NULL cvec yields no norm at all. Both must rank
+    below every real centroid (the join + `sim desc` window ranked them
+    last), and the NULL centroid must not crash the literal build."""
+    from synch_spark.operators.similarity import ivf_assign
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id int, embedding array<double>")
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 5.0]), (1, None), (2, [1.0, 0.1]), (3, [0.1, 1.0])],
+        "cid int, cvec array<double>")
+    got = {r["vec_id"]: r["_cid"]
+           for r in ivf_assign(emb, cents, "embedding", "vec_id").collect()}
+    assert got == {1: 2, 2: 3}
+    ranked = ivf_assign(emb, cents, "embedding", "vec_id", nprobe=4).collect()
+    order = {i: [r["_cid"] for r in sorted(ranked, key=lambda r: r["_crank"])
+                 if r["vec_id"] == i] for i in (1, 2)}
+    # real centroids first, then the NULL-norm sentinel, then NULL sim
+    assert order == {1: [2, 3, 1, 0], 2: [3, 2, 1, 0]}
+
+
 def test_gopher_stats_keeps_null_and_empty_text(spark):
     """NULL/empty/whitespace-only docs must appear in the output with
     gopher_pass=False — an inner join would silently drop them, and an
@@ -377,29 +399,32 @@ def test_out_of_range_temporals_null_not_crash(spark):
 def test_unpartitioned_merge_uses_manifest_not_footers(spark, tmp_path, monkeypatch):
     """The unpartitioned classifier must hit the manifest-log stats (bare
     basename keys), not re-read a parquet footer per file per batch —
-    the 'footer storm' the manifest exists to avoid."""
+    the 'footer storm' the manifest exists to avoid. A table written
+    with ``key=`` carries those stats from its first commit, and each
+    merge commits stats for its own new files, so consecutive merges
+    never fall back to a footer."""
     from synch_spark.operators import cdc_apply
-    from synch_spark.sources.manifest import refresh_manifest
 
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(spark.range(1000).select(
         F.col("id").alias("k"), F.lit("a").alias("p"), F.lit(1.0).alias("v"))
-        .repartitionByRange(10, "k"))
-    refresh_manifest(t, "k")
+        .repartitionByRange(10, "k"), key="k")
 
     calls = []
     real = cdc_apply.file_key_range
     monkeypatch.setattr(cdc_apply, "file_key_range",
                         lambda *a: calls.append(a) or real(*a))
-    ev = spark.createDataFrame(
-        [("insert", 500, "a", -1.0, 10)],
-        "action string, k long, p string, v double, event_unixtime long"
-    ).withColumn("action_seq", F.lit(0)).withColumn("schema", F.lit("db")) \
-     .withColumn("table", F.lit("t"))
-    apply_cdc_batch(t, ev, spec, value_columns=["k", "p", "v"])
-    assert calls == [], f"footer reads despite manifest: {len(calls)}"
+    for i, k in enumerate((500, 501, 900)):
+        ev = spark.createDataFrame(
+            [("insert", k, "a", -1.0, 10 + i)],
+            "action string, k long, p string, v double, event_unixtime long"
+        ).withColumn("action_seq", F.lit(0)).withColumn("schema", F.lit("db")) \
+         .withColumn("table", F.lit("t"))
+        apply_cdc_batch(t, ev, spec, value_columns=["k", "p", "v"])
+        assert calls == [], f"footer reads despite manifest: {len(calls)}"
+    assert t.read().filter("v = -1.0").count() == 3
     assert t.read().filter("k = 500").collect()[0]["v"] == -1.0
 
 

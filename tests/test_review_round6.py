@@ -33,7 +33,7 @@ def test_manifest_survives_date_and_timestamp_pk(spark, tmp_path):
     the manifest layer must encode them JSON-safe (the old json.dump
     crashed every micro-batch of a temporal-pk table) and decode them
     back to the same comparable objects."""
-    from synch_spark.sources.manifest import load_manifest, refresh_manifest
+    from synch_spark.sources.manifest import load_manifest
 
     t = ParquetTable(spark, str(tmp_path / "t"), retain=4)
     t.overwrite(
@@ -41,16 +41,16 @@ def test_manifest_survives_date_and_timestamp_pk(spark, tmp_path):
             F.date_add(F.lit("2020-01-01").cast("date"),
                        F.col("id").cast("int")).alias("d"),
             F.col("id").alias("v"),
-        ).repartitionByRange(4, "d")
+        ).repartitionByRange(4, "d"),
+        key="d",  # crashed with TypeError before the fix
     )
-    n = refresh_manifest(t, "d")  # crashed with TypeError before the fix
-    assert n >= 1
     man = load_manifest(t, "d")
+    assert len(man) >= 1
     assert man and all(rng is not None for rng in man.values())
     los = [rng[0] for rng in man.values()]
     assert all(isinstance(lo, datetime.date) for lo in los)
     assert min(los) == datetime.date(2020, 1, 1)
-    # the patched stats are really in the log (fresh handle, no cache)
+    # the committed stats are really in the log (fresh handle, no cache)
     t2 = ParquetTable(spark, str(tmp_path / "t"))
     assert load_manifest(t2, "d") == man
 

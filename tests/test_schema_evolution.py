@@ -34,16 +34,16 @@ def _inodes(t):
     return {rel: os.stat(t._abs(rel)).st_ino for rel in t.snapshot().files}
 
 
-def _mk_table(spark, path, partitioned=False):
+def _mk_table(spark, path, partitioned=False, key=None):
     df = spark.createDataFrame(
         [(i, f"n{i}", float(i), "a" if i % 2 else "b") for i in range(100)],
         "id long, name string, v double, p string",
     )
     t = ParquetTable(spark, str(path))
     if partitioned:
-        t.overwrite(df.repartition(3), "p")
+        t.overwrite(df.repartition(3), "p", key=key)
     else:
-        t.overwrite(df.repartition(3))
+        t.overwrite(df.repartition(3), key=key)
     return t
 
 
@@ -272,8 +272,9 @@ def test_point_lookup_after_metadata_rename(spark, tmp_path):
     (the raw candidate read would surface physical names and fail)."""
     from synch_spark.sources import bloom
 
-    t = _mk_table(spark, tmp_path / "t")
-    bloom.build_file_blooms(t, "id")
+    t = _mk_table(spark, tmp_path / "t", key="id")
+    assert all(bloom.load_bloom(t._abs(r), "id") is not None
+               for r in t.snapshot().files)
     ts, reasons = evolve_schema(
         TableSchema.from_struct(t.read().schema),
         parse_alter("alter table db.t change column name title varchar(32)"),

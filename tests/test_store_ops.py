@@ -43,12 +43,13 @@ def _events(spark, rows):
      .withColumn("table", F.lit("t"))
 
 
-def _clustered(spark, t, n=2000, files=20):
+def _clustered(spark, t, n=2000, files=20, key=None):
     t.overwrite(
         spark.range(n).select(F.col("id").alias("k"),
                               (F.col("id") % 5).cast("string").alias("p"),
                               F.col("id").cast("double").alias("v"))
-        .repartitionByRange(files, "k")
+        .repartitionByRange(files, "k"),
+        key=key,
     )
 
 
@@ -111,7 +112,7 @@ def test_restore_is_o_diff_not_o_table(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(shutil, "copyfile", counting)
     t.restore(v0)
-    data_copies = [d for _s, d in copies if "/_bloom/" not in d.replace(os.sep, "/")]
+    data_copies = [d for _s, d in copies if not d.endswith(".bloom")]
     assert len(data_copies) == diff, (
         f"restore copied {len(data_copies)} files for a {diff}-file diff "
         f"on a {n_files}-file table"
@@ -148,16 +149,15 @@ def test_restore_carries_bloom_sidecars(spark, tmp_path):
     from synch_spark.sources import bloom as bloom_idx
 
     t = ParquetTable(spark, str(tmp_path / "t"), retain=4)
-    _clustered(spark, t)
+    _clustered(spark, t, key="k")
     v0 = t.current_version()
-    bloom_idx.build_file_blooms(t, "k")
     apply_cdc_batch(t, _events(spark, [("insert", 5, "px", -1.0, 10)]),
                     SPEC, value_columns=["k", "p", "v"])
     t.restore(v0)
     restored = [r for r in t.snapshot().files if "restore-" in r]
     assert restored, "restore should have re-materialized the merged file"
     for rel in restored:
-        assert os.path.exists(bloom_idx._sidecar(t.root, rel)), (
+        assert os.path.exists(bloom_idx.sidecar_path(t._abs(rel))), (
             f"bloom sidecar not carried to restored identity {rel}"
         )
     # pruned lookup still works against the restored layout
@@ -207,12 +207,9 @@ def test_clone_carries_schema_doc_and_stats(spark, tmp_path):
     from synch_spark.ddl import parse_alter
     from synch_spark.sources import bloom as bloom_idx
     from synch_spark.sources import schema_evolution as se
-    from synch_spark.sources.manifest import refresh_manifest
 
     src = ParquetTable(spark, str(tmp_path / "src"))
-    _clustered(spark, src, n=300, files=3)
-    refresh_manifest(src, "k")
-    bloom_idx.build_file_blooms(src, "k")
+    _clustered(spark, src, n=300, files=3, key="k")
     ts = se.TableSchema.from_struct(src.read().schema)
     evolved, reasons = se.evolve_schema(
         ts, parse_alter("alter table db.t change column v val double"))

@@ -154,12 +154,15 @@ def test_ddl_barrier_mid_stream(spark, tmp_path, pipeline):
 
 
 def test_pipeline_maintains_blooms_for_partitioned_tables(spark, tmp_path):
-    """Every micro-batch leaves the new merge files bloom-indexed, so
-    later batches can prune them instead of rewriting on every range
-    overlap (rewrite amplification until compaction)."""
+    """Every micro-batch commit leaves its new merge files indexed (key
+    range in the entry, bloom beside the file), so later batches can
+    prune them instead of rewriting on every range overlap (rewrite
+    amplification until compaction)."""
     import os
 
     from pyspark.sql import types as T
+
+    from synch_spark.sources.bloom import sidecar_path
 
     from synch_spark.config import Engine, SyncConfig, TableSpec
 
@@ -184,12 +187,12 @@ def test_pipeline_maintains_blooms_for_partitioned_tables(spark, tmp_path):
     q = pipe.start_file_stream(str(events_dir), available_now=True)
     q.awaitTermination(120)
     table = pipe.table_for(cfg.tables["db.pt"])
-    bdir = os.path.join(table.root, "_bloom")
-    assert os.path.isdir(bdir) and os.listdir(bdir), "merge files must be bloomed"
-    have = {f[: -len(".bloom.json")] for f in os.listdir(bdir)
-            if f.endswith(".bloom.json")}
-    need = {r.replace("/", "%2F") for r in table.snapshot().files}
-    assert need <= have, "every current data file must carry a bloom"
+    files = table.snapshot().files
+    assert files
+    for rel, stats in files.items():
+        assert "id" in stats, "every current data file must carry its range"
+        assert os.path.exists(sidecar_path(table._abs(rel))), \
+            "every current data file must carry a bloom"
     assert table.read().count() == 50
 
 
