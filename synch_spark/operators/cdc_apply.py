@@ -16,10 +16,14 @@ engine-specific ``handle_event`` accumulators:
   makes this order-free: each pk resolves to ONE net action (the
   latest), so delete+reinsert in one batch nets to insert, and
   insert+delete nets to delete. Equivalent final state, one pass.
-- The merge itself is MERGE emulation without Delta: target rows whose
-  pk appears in the batch are dropped (left_anti), then net-inserts are
-  unioned in (SCD0 upsert). At scale this is copy-on-write; with
-  ``partition_by`` only affected partitions rewrite.
+- The merge itself is MERGE emulation without Delta, one path for
+  every pk-keyed table (partitioned or not, with or without key stats):
+  the stats+bloom pruned candidate files are semi-joined with the
+  batch's pks to find the (file, row position) of every superseded
+  target row; each touched file gets a deletion vector masking those
+  rows (ClickHouse lightweight DELETE, Delta deletion vectors), and
+  only the net upserts are written. No file is rewritten; a file whose
+  rows are all masked is removed instead.
 - W6 collapsing engines never merge: they append sign-annotated rows
   (/root/reference/synch/writer/collapsing_merge_tree.py:37-58); state
   is recovered at read time by engines.collapsing_view.
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from synch_spark.config import Engine, TableSpec, WIRE_SEQ_COL
 from synch_spark.operators import engines
-from synch_spark.sources.table import ParquetTable, _partition_dir_value, file_key_range
+from synch_spark.sources.table import ParquetTable
 
 
 def compact_batch(events: DataFrame, pk: tuple[str, ...]) -> DataFrame:
@@ -130,290 +134,77 @@ def _apply_merging(
                 # stream on a one-off bootstrap race
                 pass
 
-        def merge_once():
-            # anchor the whole read-classify-commit cycle to ONE
-            # version: a concurrent commit (compaction, second
-            # consumer) in between fails the CoW commit with
-            # ConcurrentWriteError — and commit_with_retry re-runs the
-            # WHOLE cycle against the new head, so the loser's merge
-            # converges instead of silently double-writing rows or
-            # killing the stream on one transient race
-            base = table.current_version()
-            current = table.read()
-            changed_keys = net.select(*pk)
-            if spec.partition_by and spec.partition_by in current.columns:
-                _merge_cow(table, current, changed_keys, upserts, spec, base)
-            elif _merge_cow_unpartitioned(table, current, changed_keys,
-                                          upserts, spec, base):
-                pass  # file-level CoW committed (or proven no-op)
-            else:
-                # Stats couldn't prove anything (null keys / unorderable
-                # types): full MERGE fallback. Drop every target row
-                # whose pk is touched, add net inserts. changed_keys is
-                # one row per pk in the batch — micro-batch sized, so
-                # Catalyst broadcasts it; the big side never shuffles.
-                kept = current.join(
-                    F.broadcast(changed_keys), list(pk), "left_anti")
-                table.overwrite(
-                    kept.unionByName(upserts.select(*current.columns)),
-                    spec.partition_by, expected_base=base, key=pk[0])
+        # one job over the cached net rows: the batch's leading-pk keys
+        # (the pruning probe) and its upsert count (the write width)
+        batch = net.select(pk[0], F.col("action") != "delete").collect()
+        if not batch:
+            return
+        n_up = sum(1 for r in batch if r[1])
+        keys = [r[0] for r in batch]
 
         from synch_spark.sources.table import commit_with_retry
 
-        commit_with_retry(merge_once, retries=3)
+        # the whole find-mask-commit cycle re-runs against the new head
+        # on a lost race (commit_with_retry), so a concurrent commit
+        # never sees masks computed against files it replaced
+        commit_with_retry(
+            lambda: _merge(table, net.select(*pk), upserts, keys, n_up, spec),
+            retries=3)
     finally:
         net.unpersist()
 
 
-def _merge_cow(
-    table: ParquetTable,
-    current: DataFrame,
-    changed_keys: DataFrame,
-    upserts: DataFrame,
-    spec: TableSpec,
-    base: int | None = None,
-) -> None:
-    """Partition-scoped MERGE (copy-on-write).
+def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
+           keys: list, n_up: int, spec: TableSpec) -> None:
+    """One merge attempt against the current head: mask every target
+    row whose pk is in the batch, append the net upserts, commit both
+    in one entry anchored to the head it read."""
+    import numpy as np
+    import pyarrow.parquet as pq
 
-    Touched partitions = partitions holding a target row whose pk is in
-    the batch (the pk may have *moved* partitions, so the target side is
-    probed too, not just the new rows) ∪ partitions the upserts land in.
-    Only those partitions are anti-joined and rewritten;
-    ``ParquetTable.overwrite_cow`` hard-links the rest. The probe scan
-    reads only (partition, pk) columns — column-pruned — and at scale is
-    the one piece file-level min/max stats would further cut (PERF.md).
-    """
-    part, pk = spec.partition_by, spec.pk
-    pruned = _classify_files(table, changed_keys, upserts, part, pk)
-    if pruned is None:
-        _merge_cow_probe(table, current, changed_keys, upserts, spec, base)
-        return
-    candidates, links, vals = pruned
-    if not vals:
-        return
-    # read_files applies the same schema reconciliation as table.read(),
-    # so candidate files written before a metadata-only DDL still surface
-    # the current logical columns
-    affected = (
-        table.read_files(candidates)
-        if candidates
-        else current.limit(0)
-    )
-    kept = affected.join(F.broadcast(changed_keys), list(pk), "left_anti")
-    # coalesce to the rewrite's own width: without it the upsert side
-    # keeps its shuffle partitioning and a 2-file merge lands as ~32
-    # splinter files — small-file proliferation that compounds per
-    # micro-batch (and inflates every downstream change feed). One
-    # output task per rewritten input file keeps parallelism O(touched).
-    replacement = kept.unionByName(upserts.select(*current.columns)).coalesce(
-        _rewrite_width(candidates, upserts))
-    table.overwrite_cow(
-        replacement, part, vals,
-        file_links=links, expected_base=base, key=pk[0],
-    )
+    from synch_spark.sources import bloom
+    from synch_spark.sources.dv import read as read_dv
+    from synch_spark.sources.table import ConcurrentWriteError
 
-
-def _rewrite_width(candidates: list, upserts) -> int:
-    """Output tasks for a CoW rewrite: one per rewritten input file,
-    floored by the upsert volume so a pure-insert BULK batch (zero
-    candidate files — e.g. a backfill of brand-new keys) doesn't
-    collapse to one jumbo single-threaded file. The count is taken only
-    when the candidate set is tiny, and upserts derive from the
-    merge's persisted `net`, so it reads cached blocks."""
-    width = len(candidates)
-    if width < 4:
-        rows = upserts.count()
-        width = max(width, (rows + 1_999_999) // 2_000_000)
-    return max(1, width)
-
-
-def _merge_cow_unpartitioned(table, current, changed_keys, upserts, spec,
-                             base=None) -> bool:
-    """File-level MERGE for a table with no partition column.
-
-    Runs the same stats+bloom file classification as the partitioned
-    path, with the table root acting as a single pseudo-partition, and
-    commits through ``overwrite_cow_files``: only files whose leading-pk
-    min/max (refined by the Bloom sidecar) intersect the batch keys are
-    anti-joined and rewritten; every other file is carried by name. This
-    replaces the former full-table rewrite — the one remaining
-    O(table)-per-batch path — so an unpartitioned 100 TB pk-keyed table
-    pays O(intersecting files) per micro-batch like everything else.
-    Returns False when stats can't prove anything (caller falls back to
-    the full merge).
-    """
-    pk = spec.pk
-    pruned = _classify_files(table, changed_keys, upserts, None, pk)
-    if pruned is None:
-        return False
-    candidates, _links, _vals = pruned
-    if not candidates and upserts.isEmpty():
-        return True  # pure no-op batch: deletes that provably hit no file
-    affected = table.read_files(candidates) if candidates else current.limit(0)
-    kept = affected.join(F.broadcast(changed_keys), list(pk), "left_anti")
-    remove_rels = [
-        os.path.relpath(p, table._data).replace(os.sep, "/") for p in candidates
-    ]
-    # one output task per rewritten file (see _rewrite_width): a k-file
-    # merge must add O(k) files, not O(shuffle partitions) splinters —
-    # but a pure-insert bulk batch must not collapse to one task either
-    replacement = kept.unionByName(upserts.select(*current.columns)).coalesce(
-        _rewrite_width(candidates, upserts))
-    table.overwrite_cow_files(replacement, remove_rels, expected_base=base,
-                              key=pk[0])
-    return True
-
-
-def _classify_files(table, changed_keys, upserts, part, pk):
-    """Metadata-only discovery of the merge's write set.
-
-    Walks the table's partition directories and classifies every data
-    file by its leading-pk footer min/max against the batch key set
-    (Delta-style stats pruning; the batch is micro-batch sized so
-    collecting its keys is the same O(batch) cost as the broadcast we
-    already do). A partition is touched when it holds an intersecting
-    (candidate) file or receives upserts; candidate files get rewritten
-    through the anti-join, every other file hard-links into the new
-    version. No table scan happens at all — the 100 TB target's merge
-    cost is O(batch + intersecting files) plus a directory walk.
-
-    Leading-pk pruning is conservative (a first-column match without a
-    full composite match just means a needless rewrite candidate), so
-    correctness never depends on stats quality. When a file carries a
-    Bloom sidecar (sources.bloom, written by the commit that added it), a
-    min/max range hit is refined by probing the bloom with just the
-    batch keys inside the file's range — interleaved-key files whose
-    ranges overlap everything stop being rewrite candidates unless a
-    key (almost certainly) lives there; no false negatives, so a bloom
-    can only ever turn a needless rewrite into a link. Returns
-    (candidates, links, touched_values) or None when stats can't prove
-    anything (null keys, missing/unorderable stats) — caller falls back
-    to the scan-based probe.
-    """
-    import bisect
-
-    from synch_spark.sources import bloom as bloom_idx
-    from synch_spark.sources.manifest import load_manifest
-
-    keys = [r[0] for r in changed_keys.select(pk[0]).distinct().collect()]
-    if not keys or any(k is None for k in keys):
-        return None
-    try:
-        # the sort is as fallible as the range comparisons below: batch
-        # keys of heterogeneous Python types (a mid-stream type widening
-        # can mix str/int) raise TypeError — degrade to the probe/full
-        # merge like every other unprovable case, don't crash the stream
-        sk = sorted(keys)
-    except TypeError:
-        return None
-    # stats from the manifest log replace the per-file parquet-footer
-    # storm (files are immutable, ranges ride in the log entry that
-    # added them); any file missing from it falls back to its footer
-    manifest = load_manifest(table, pk[0]) or {}
-    if part is None:
-        upsert_vals: list = []
-    else:
-        upsert_vals = [r[0] for r in upserts.select(part).distinct().collect()]
-    from synch_spark.sources.table import _part_str
-
-    # canonical Hive dir-value strings (str(True) != 'true') so bool /
-    # every partition type compares against _partition_dir_value output
-    upsert_strs = {_part_str(v) for v in upsert_vals}
-    candidates: list[str] = []
-    links: dict[str, list[str]] = {}
-    touched: list = list(upsert_vals)
-    if part is None:
-        # pseudo-partition view of an unpartitioned table: every live
-        # file grouped by its (usually root) directory
-        by_dir: dict[str, list[str]] = {}
-        for rel in sorted(table.snapshot().files):
-            by_dir.setdefault(rel.rpartition("/")[0], []).append(table._abs(rel))
-    else:
-        by_dir = table.partition_files(part)
-    try:
-        for dirname, files in by_dir.items():
-            cand_here, link_here = [], []
-            for f in files:
-                base = os.path.basename(f)
-                # no leading slash for root-dir files: the manifest keys
-                # bare basenames for unpartitioned tables — "/part-x"
-                # would never match and every merge would fall back to a
-                # per-file parquet footer read
-                rel = f"{dirname}/{base}" if dirname else base
-                if rel in manifest:
-                    rng = manifest[rel]
-                else:
-                    try:
-                        rng = file_key_range(f, pk[0])
-                    except Exception:  # noqa: BLE001 — a corrupt/unreadable
-                        # footer must degrade to "no stats" (candidate +
-                        # bloom probe), not crash-loop every merge; if the
-                        # file truly is unreadable the rewrite's data read
-                        # will say so with a real error
-                        rng = None
-                if rng is not None:
-                    i = bisect.bisect_left(sk, rng[0])
-                    j = bisect.bisect_right(sk, rng[1])
-                    hit = j > i
-                    probe = sk[i:j]
-                else:
-                    # no exact range stats (string pks: BYTE_ARRAY stats
-                    # may be truncated) — the bloom is then the ONLY
-                    # pruning lever, probed with the full batch key set
-                    hit = True
-                    probe = sk
-                if hit:
-                    bl = bloom_idx.load_bloom(f, pk[0])
-                    if bl is not None:
-                        hit = bloom_idx.might_contain_any(bl, probe)
-                (cand_here if hit else link_here).append(f)
-            if part is None:
-                candidates.extend(cand_here)
-                continue
-            dval = _partition_dir_value(dirname)
-            if cand_here or dval in upsert_strs:
-                candidates.extend(cand_here)
-                if link_here:
-                    links[dirname] = link_here
-                if dval not in upsert_strs:
-                    touched.append(dval)
-    except TypeError:  # stats type doesn't order against key values
-        return None
-    return candidates, links, touched
-
-
-def _merge_cow_probe(table, current, changed_keys, upserts, spec, base=None):
-    """Scan-based fallback: find touched partitions with a column-pruned
-    (partition, pk) semi-join probe and rewrite them whole."""
-    part, pk = spec.partition_by, spec.pk
-    touched_rows = (
-        # dict.fromkeys: when the partition column IS a pk column
-        # (dedup_index buckets: pk=(id, band), partition_by=band) a
-        # plain (part, *pk) projection duplicates it and the pk join
-        # dies with AMBIGUOUS_REFERENCE — the fallback must fall back,
-        # not crash the stream
-        current.select(*dict.fromkeys([part, *pk]))
-        .join(F.broadcast(changed_keys), list(pk), "left_semi")
-        .select(part)
-        .unionByName(upserts.select(part))
-        .distinct()
-        .collect()
-    )
-    vals = [r[0] for r in touched_rows]
-    if not vals:
-        return
-    cond = F.col(part).isin([v for v in vals if v is not None])
-    if any(v is None for v in vals):
-        cond = cond | F.col(part).isNull()
-    affected = current.filter(cond)  # partition-pruned scan
-    kept = affected.join(F.broadcast(changed_keys), list(pk), "left_anti")
-    replacement = kept.unionByName(upserts.select(*current.columns))
-    # same splinter-file guard as every other CoW path: without the
-    # coalesce the rewrite lands as ~shuffle-partitions files per batch
-    # (one task per touched partition, floored by the upsert volume)
-    table.overwrite_cow(
-        replacement.coalesce(_rewrite_width(vals, upserts)),
-        part, vals, expected_base=base, key=pk[0])
+    pk = list(spec.pk)
+    base = table.current_version()
+    snap = table.snapshot(base)
+    found = bloom.prune_files(table, pk[0], keys)
+    if table.current_version() != base:
+        raise ConcurrentWriteError(f"table {table.root}: head moved mid-merge")
+    rels = sorted(snap.files) if found is None else sorted(
+        os.path.relpath(p, table._data).replace(os.sep, "/") for p in found)
+    # the position of every target row the batch supersedes, wherever
+    # it lives (a pk that moved partition is found in its old one). Masked
+    # rows may match again: the new mask is a set union, so that is free.
+    hits = table.locate(rels, snap, pks, pk) if rels else {}
+    dvs, remove = {}, []
+    for rel, rows in hits.items():
+        d = snap.dv(rel)
+        old = read_dv(table._abs(d)) if d else np.empty(0, np.int64)
+        rows = np.union1d(np.asarray(rows, dtype=np.int64), old)
+        if len(rows) == len(old):
+            continue  # only already-masked rows matched
+        if len(rows) == pq.ParquetFile(table._abs(rel)).metadata.num_rows:
+            remove.append(rel)  # every row superseded: drop the file
+        else:
+            dvs[rel] = rows
+    if not (dvs or remove or n_up):
+        return  # deletes of keys the table does not hold
+    # the new rows take the table's column types: they share reads with
+    # the masked files, so a wider batch type (a long key into an int
+    # table) would split the table's physical schema. The partition
+    # column keeps the batch's type (its table type is inferred from
+    # directory names). One output file per partition for a
+    # micro-batch; bulk batches split at ~2M rows so a backfill doesn't
+    # land as one jumbo file.
+    schema = table.read(base).schema
+    df = (upserts.select(*[
+        F.col(f.name) if f.name == spec.partition_by
+        else F.col(f.name).cast(f.dataType) for f in schema])
+          .coalesce(max(1, -(-n_up // 2_000_000))) if n_up else None)
+    table.overwrite_cow_files(df, remove, expected_base=base, key=pk[0],
+                              partition_by=spec.partition_by, dvs=dvs)
 
 
 def _apply_collapsing(

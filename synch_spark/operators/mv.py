@@ -81,8 +81,9 @@ class MaterializedView:
     commits a NEW immutable version dir, so the lazy read-fold-overwrite
     cycle has no read-after-write hazard. State size is group-space
     cardinality; when that itself is huge, pass cluster_by to keep the
-    state pk-clustered and swap overwrite for overwrite_cow keyed on the
-    group columns — refresh stays O(delta + affected files)."""
+    state pk-clustered and fold the delta in as a pk-keyed merge on the
+    group columns (cdc_apply's deletion-vector merge) — refresh stays
+    O(delta + affected files)."""
 
     SPEC_FILE = "_mv_spec.json"
 

@@ -51,6 +51,11 @@ def ivf_refine(
     (cid, position) aggregation — fully distributed, no driver math.
     A centroid that loses all members drops out (fewer, denser buckets).
 
+    The centroid dim is the contract for ragged members: each round
+    averages the first d positions, d the longest current centroid, so
+    a member longer than every centroid contributes only its first d
+    positions and a refined centroid never grows.
+
     ``sample_fraction`` < 1 refines on a uniform sample of the corpus —
     centroid positions are means, so a sample estimates them with
     error O(1/sqrt(sample size)) while cutting each iteration's scan
@@ -81,13 +86,16 @@ def ivf_refine(
     # an assignment-side collect AND the mean job each round
     sch = centroids.select("cid", "cvec").schema
     rows = centroids.select("cid", "cvec").collect()
-    if not rows:
-        if exact:
-            raise ValueError(
-                "assign_to_centroids: empty centroid set — build centroids "
-                "over a non-empty corpus (ivf_centroids / ivf_refine) first")
-        return spark.createDataFrame(rows, sch)
     for _ in range(iters):
+        # re-checked every round: an empty sample, or every centroid
+        # losing all its members, empties the set mid-refinement
+        if not rows:
+            if exact:
+                raise ValueError(
+                    "assign_to_centroids: empty centroid set — build "
+                    "centroids over a non-empty corpus (ivf_centroids / "
+                    "ivf_refine) first")
+            return spark.createDataFrame(rows, sch)
         rows.sort(key=lambda r: r["cid"])
         local_cents = spark.createDataFrame(rows, sch)
         d = max(len(r["cvec"]) for r in rows)

@@ -2956,8 +2956,8 @@ def q121_change_feed(spark, sf_dir):
     surface: over q117's scratch table (three CDC merge commits), diff
     version 0 against version 2 keyed on the pk and report every row a
     downstream consumer would apply — insert / delete /
-    update_preimage / update_postimage — with CoW carry-over rows
-    suppressed. The oracle reconstructs both states from the event
+    update_preimage / update_postimage — with carried-over rows of
+    re-masked files suppressed. The oracle reconstructs both states from the event
     history (q117's window CTE) and classifies via a null-safe FULL
     OUTER JOIN, so the whole feed — file-diff selection, image
     comparison, pair emission — is hash-gated per row, not just

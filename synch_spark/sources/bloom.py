@@ -4,7 +4,7 @@ Footer min/max stats (the key range in each file's log entry) prune a
 file only when the batch's keys miss its [lo, hi] range entirely. Files
 with INTERLEAVED keys — unclustered appends, overlapping compaction
 outputs — have wide ranges that overlap every batch, so min/max proves
-nothing and the CoW merge rewrites them for no reason. A Bloom filter
+nothing and the merge scans them for no reason. A Bloom filter
 answers the sharper question "could ANY of these keys be in this
 file?" with no false negatives, cutting rewrites to files that (almost
 certainly) hold a touched key. This is ClickHouse's per-part bloom skip
@@ -56,9 +56,9 @@ def bloom_safe_key(value) -> bool:
     no-false-negative invariant is only type-enforceable for these.
     Timestamps (tz-aware vs naive), decimals, and floats (float32
     widening) can differ across the two paths, and a divergence would
-    be a silent false negative — in the CoW merge that reclassifies a
-    file holding a changed key from rewrite to carry, i.e. a lost
-    update.
+    be a silent false negative — in the merge that drops a file
+    holding a changed key from the candidates, so its old row is never
+    masked, i.e. a lost update.
 
     bytearray counts as bytes: Spark ``collect()`` returns BinaryType
     values as bytearray while pyarrow's build side yields bytes."""
@@ -248,17 +248,16 @@ def point_lookup(table, column: str, keys) -> "object":
     back to a full-scan filter when pruning can't prove coverage."""
     from pyspark.sql import functions as F
 
-    current = table.read()
     keys = list(keys)  # materialize ONCE: a generator would be exhausted
     # by the prune call and the exact filter below would see [] — every
     # lookup silently empty
     files = prune_files(table, column, keys)
     flt = F.col(column).isin(keys)
     if files is None:
-        return current.filter(flt)
+        return table.read().filter(flt)
     if not files:
-        return current.limit(0)
+        return table.read().limit(0)
     # read_files applies the table's schema reconciliation (metadata-only
-    # DDL): a raw parquet read of pre-rename files would surface physical
-    # names and the logical-column select/filter would fail
-    return table.read_files(files).select(*current.columns).filter(flt)
+    # DDL) and DVs: a raw parquet read of pre-rename files would surface
+    # physical names and the logical-column select/filter would fail
+    return table.read_files(files).filter(flt)

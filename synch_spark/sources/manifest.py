@@ -1,8 +1,9 @@
 """Per-file key stats riding in the manifest log: one snapshot replay
 per merge instead of an O(files) parquet-footer storm.
 
-``_classify_files`` (the merge's metadata-only write-set discovery)
-needs the leading-pk min/max of EVERY current file on EVERY micro-batch.
+``bloom.prune_files`` (the merge's and point lookup's metadata-only
+candidate discovery) needs the leading-pk min/max of EVERY current file
+on EVERY micro-batch.
 Reading each file's footer is fine at test scale but at 100 TB it is
 thousands of small opens per batch — the dominant driver-side cost of a
 merge. File ranges are IMMUTABLE (pool files never change), so they

@@ -49,7 +49,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 SCHEMA_FILE = "_schema.json"
 GEN_COL = "_sgen"
@@ -167,13 +167,6 @@ class TableSchema:
 
     def reconcile(self, raw: DataFrame) -> DataFrame:
         return raw.select(*self.select_exprs())
-
-    def reconciled_read(self, spark: SparkSession, path, base_path: str | None = None):
-        reader = spark.read.schema(self.read_struct())
-        if base_path:
-            reader = reader.option("basePath", base_path)
-        paths = path if isinstance(path, list) else [path]
-        return self.reconcile(reader.parquet(*paths))
 
 
 def load_schema(version_dir: str) -> TableSchema | None:

@@ -33,13 +33,17 @@ changed) paths — never O(table):
   document rides in the entry too — schema, membership, and stats
   commit atomically as one JSON object, and a published entry is never
   rewritten.
+- a merge never rewrites a file: it appends its net rows and masks the
+  superseded rows of each touched file with a deletion vector
+  (``sources.dv``), named in the entry beside the file's stats. Every
+  read drops the masked rows, so ``read(v)`` is pk-unique at every
+  version; a (file, DV) pair is a file's identity for the change feed.
 
 Scale notes: at 100 TB a micro-batch merge touching k of N files pays
-O(k) file writes + O(k) log bytes; the previous design hard-linked all
-N untouched files into every new version dir (a million link() calls
-per commit at 10^6 files, impossible on object storage). Version GC is
-also O(touched): the files freed by expiring version v-2 are exactly
-the previous entry's remove-list.
+one write of its net rows, k small mask writes and O(k) log bytes —
+never a rewrite of the k files. Version GC is O(touched): the files
+and masks freed by expiring version v-2 are exactly the previous
+entry's remove-lists.
 """
 
 from __future__ import annotations
@@ -48,17 +52,14 @@ import json
 import os
 import shutil
 import uuid
-from urllib.parse import unquote
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from synch_spark.sources import schema_evolution as se
+from synch_spark.sources import dv, schema_evolution as se
 from synch_spark.sources.bloom import sidecar_path
 
 _CURRENT = "_CURRENT"  # informational pointer (the log is the truth)
 _MDIR = "_v"
 _DATA = "data"
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 CKPT_EVERY = 10
 #: restore/clone diffs at or above this many files copy via an executor
 #: fan-out instead of a driver-serial loop
@@ -128,23 +129,32 @@ def commit_with_retry(txn, retries: int = 5, backoff_s: float = 0.05):
             attempt += 1
 
 
-def _partition_dir_value(dirname: str) -> str | None:
-    """Decode ``col=escaped_value`` (Hive-style %XX escaping) -> value str."""
-    raw = dirname.split("=", 1)[1]
-    return None if raw == _HIVE_NULL else unquote(raw)
+# ASCII characters java.net.URI leaves unquoted in a path
+_URI_PATH_SAFE = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    "_-!.~'()*,;:$&+=/@")
+# the reader's columns carrying a row's (file, position)
+_POS_FILE, _POS_ROW = "_dv_file", "_dv_row"
 
 
-def _part_str(v) -> str | None:
-    """Canonical partition-VALUE string matching Spark's Hive dir
-    encoding (post-unquote). Plain str() is WRONG for booleans — Python
-    renders 'True' where the directory says 'true', so a touched
-    boolean partition would never match its own dir name and CoW
-    removal would silently skip it (duplicate / resurrected rows)."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
+def _file_uri(path: str) -> str:
+    """The ``_metadata.file_path`` Spark reports for the local file at
+    ``path``: ``file:`` plus the path quoted as Hadoop's
+    ``Path.toUri`` (java.net.URI) quotes it. ASCII outside the URI path
+    set, ``%`` included, becomes UTF-8 %XX; other non-ASCII stays as is
+    unless it is a space or control character. Hive-escaped partition
+    dirs (``p=a%3Ab``) therefore read back as ``p=a%253Ab``."""
+    import unicodedata
+
+    out = []
+    for ch in os.path.abspath(path):
+        o = ord(ch)
+        if ch in _URI_PATH_SAFE or (
+                o > 0x9F and unicodedata.category(ch) not in ("Zs", "Zl", "Zp")):
+            out.append(ch)
+        else:
+            out.extend(f"%{b:02X}" for b in ch.encode())
+    return "file:" + "".join(out)
 
 
 # physical types whose footer min/max are exact values. BYTE_ARRAY
@@ -162,7 +172,7 @@ def file_key_range(path: str, column: str):
     """(min, max) of ``column`` across the parquet file's row groups from
     footer statistics only — no data pages read. None when stats are
     absent or not provably exact (then the file must be treated as a
-    rewrite candidate)."""
+    merge candidate)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -267,6 +277,12 @@ def zorder_layout(
     )
 
 
+def _dv_of(rel: str, stats: dict | None) -> str | None:
+    """Pool-relative path of the DV named in the file map ``stats``."""
+    name = stats.get(dv.DV_KEY) if stats else None
+    return dv.dv_rel(rel, name) if name else None
+
+
 class Snapshot:
     """Materialized view of one committed version: file membership (with
     per-file stats), the schema-evolution document, and the logical
@@ -277,9 +293,18 @@ class Snapshot:
     def __init__(self, version: int, files: dict, schema_raw: str | None,
                  sschema: str | None):
         self.version = version
-        self.files = files  # rel path -> {stats_col: [lo, hi] | None}
+        # rel path -> {stats_col: [lo, hi] | None, dv.DV_KEY: dv name}
+        self.files = files
         self.schema_raw = schema_raw
         self.sschema = sschema
+
+    def dv(self, rel: str) -> str | None:
+        """Pool-relative path of ``rel``'s deletion vector, if it has one."""
+        return _dv_of(rel, self.files[rel])
+
+    def pool_rels(self) -> list[str]:
+        """Every pool file this version reads: its data files and DVs."""
+        return [p for r in self.files for p in (r, self.dv(r)) if p]
 
     @property
     def schema_doc(self) -> "se.TableSchema | None":
@@ -312,7 +337,9 @@ class ParquetTable:
         # leaves a few already-spared files for vacuum() to reclaim.
         self.retain = max(2, int(retain))
         self._mdir = os.path.join(root, _MDIR)
-        self._data = os.path.join(root, _DATA)
+        # absolute: DV masks match rows by the path Spark reports
+        # (``_file_uri``), whatever the working directory
+        self._data = os.path.abspath(os.path.join(root, _DATA))
         # memoized snapshots keyed by resolved version: committed
         # versions are immutable, so one metadata operation (point
         # lookup, merge classify) re-reading the same version pays the
@@ -395,13 +422,20 @@ class ParquetTable:
         keeping partition subdirs. Returns the pool-relative paths.
         O(new files) renames; Spark part filenames embed a per-job UUID
         so names are collision-free across commits (a uuid prefix is
-        added in the impossible case)."""
+        added in the impossible case). A file whose footer reports 0
+        rows is dropped: Spark writes one for an empty task (a one-row
+        frame on several cores), and it would only add a file to every
+        later read."""
+        import pyarrow.parquet as pq
+
         rels: list[str] = []
         for dirpath, _dirs, names in os.walk(staging):
             for name in names:
                 if not name.endswith(".parquet"):
                     continue  # _SUCCESS / .crc sidecars are dropped
                 src = os.path.join(dirpath, name)
+                if pq.ParquetFile(src).metadata.num_rows == 0:
+                    continue
                 rel = os.path.relpath(src, staging)
                 dst = os.path.join(self._data, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -447,21 +481,26 @@ class ParquetTable:
                 "sschema": (sschema if sschema is not _UNSET
                             else (snap.sschema if snap else None)),
             }
-            if not data_change:
-                e["dc"] = False
-            if op:
-                e["op"] = op
-            self._attach_epochs(e, v, epoch)
-            return e
-        e = {"v": v, "type": "delta", "base": v - 1,
-             "add": add, "remove": sorted(remove)}
-        if schema_change is not _UNSET:
-            e["schema"] = schema_change
-        if sschema is not _UNSET:
-            # an explicit None REINSTATES the no-physical-schema state
-            # (restore to a pre-sschema version); replay distinguishes
-            # "key present, None" from "key absent" below
-            e["sschema"] = sschema
+        else:
+            e = {"v": v, "type": "delta", "base": v - 1,
+                 "add": add, "remove": sorted(remove)}
+            if schema_change is not _UNSET:
+                e["schema"] = schema_change
+            if sschema is not _UNSET:
+                # an explicit None REINSTATES the no-physical-schema state
+                # (restore to a pre-sschema version); replay distinguishes
+                # "key present, None" from "key absent" below
+                e["sschema"] = sschema
+        # DVs last referenced by version v-1 — a removed file's, and one
+        # a re-added file's new map replaces — are freed on the same
+        # schedule as the remove-list (see _post_commit)
+        gone_dvs = []
+        for rel in (*remove, *add):
+            old = _dv_of(rel, snap.files.get(rel)) if snap else None
+            if old and (rel not in add or _dv_of(rel, add[rel]) != old):
+                gone_dvs.append(old)
+        if gone_dvs:
+            e["remove_dv"] = sorted(gone_dvs)
         if not data_change:
             e["dc"] = False
         if op:
@@ -523,8 +562,8 @@ class ParquetTable:
 
     def _post_commit(self, v: int) -> None:
         """O(touched) housekeeping after publishing version v: refresh
-        the informational pointer, free the data files that expired with
-        version v-2 (exactly entry(v-1)'s remove-list), and drop log
+        the informational pointer, free the data files and DVs that
+        expired with version v-2 (exactly entry(v-1)'s remove-lists), and drop log
         entries older than the retained window's checkpoint floor."""
         ptr = os.path.join(self.root, _CURRENT)
         try:
@@ -545,7 +584,8 @@ class ParquetTable:
             except (OSError, json.JSONDecodeError):
                 prev = None
             if prev is not None:
-                self._free_pool_files(prev.get("remove", ()))
+                self._free_pool_files([*prev.get("remove", ()),
+                                       *prev.get("remove_dv", ())])
         floor = self._retained_floor()
         for name in os.listdir(self._mdir):
             if name.startswith("v=") and name.endswith(".json"):
@@ -560,8 +600,8 @@ class ParquetTable:
                         pass
 
     def _free_pool_files(self, rels) -> None:
-        """Unlink pool files (with their sidecars) referenced by no
-        retained version; already-gone paths are fine."""
+        """Unlink pool files — data files with their sidecars, and DVs —
+        referenced by no retained version; already-gone paths are fine."""
         for rel in rels:
             for path in _pool_paths(self._data, rel):
                 try:
@@ -577,6 +617,8 @@ class ParquetTable:
         the file (``bloom.build_file_blooms``)."""
         if key is None:
             return {r: {} for r in rels}
+        if key == dv.DV_KEY:
+            raise ValueError("the merge key needs a non-empty column name")
         from synch_spark.sources import bloom, manifest
 
         add = manifest.refresh_manifest(self, rels, key)
@@ -630,7 +672,7 @@ class ParquetTable:
             snap = self._snapshot_at(x)
         except (OSError, json.JSONDecodeError, FileNotFoundError):
             return False
-        ok = all(os.path.exists(self._abs(r)) for r in snap.files)
+        ok = all(os.path.exists(self._abs(r)) for r in snap.pool_rels())
         if ok:
             self._verified_versions.add(x)
         return ok
@@ -693,15 +735,53 @@ class ParquetTable:
         When the version carries a schema document (metadata-only DDL,
         sources.schema_evolution) the read reconciles heterogeneous
         physical files against it — renamed/added/dropped columns
-        resolve without any file having been rewritten."""
+        resolve without any file having been rewritten.
+
+        The version's deletion vectors mask the rows merges superseded."""
         snap = self.snapshot(version)
-        paths = [self._abs(r) for r in sorted(snap.files)]
-        if not paths:
+        return self._scan(sorted(snap.files), snap, snap)
+
+    def _scan(self, rels: list[str], snap: Snapshot, mask: Snapshot | None,
+              positions: bool = False) -> DataFrame:
+        """Read the pool files ``rels`` under ``snap``'s schema document,
+        dropping the rows masked by ``mask``'s DVs of those files (None:
+        drop nothing). The DVs are read on the driver and the rows
+        dropped by ONE broadcast left-anti join on (file, row_index),
+        before schema reconciliation. ``positions`` keeps each row's
+        (file URI, row_index) as ``_POS_FILE`` / ``_POS_ROW``."""
+        if not rels:
             return self._empty_df(snap)
         spec = snap.schema_doc
+        reader = self.spark.read.option("basePath", self._data)
+        if spec is not None:
+            reader = reader.schema(spec.read_struct())
+        raw = reader.parquet(*[self._abs(r) for r in rels])
+        masked = [(r, d) for r in rels
+                  if mask and (d := _dv_of(r, mask.files.get(r)))]
+        if not masked and not positions:
+            return raw if spec is None else spec.reconcile(raw)
+        meta = raw.metadataColumn("_metadata")
+        raw = raw.select("*", meta.getField("file_path").alias(_POS_FILE),
+                         meta.getField("row_index").alias(_POS_ROW))
+        if masked:
+            import numpy as np
+            import pyarrow as pa
+
+            rows = [dv.read(self._abs(d)) for _, d in masked]
+            uris = np.array([_file_uri(self._abs(r)) for r, _ in masked],
+                            dtype=object)
+            # an Arrow table becomes a LocalRelation: the broadcast side
+            # is built on the driver, with no Spark job
+            gone = self.spark.createDataFrame(pa.table({
+                _POS_FILE: pa.array(np.repeat(uris, [len(x) for x in rows]),
+                                    pa.string()),
+                _POS_ROW: pa.array(np.concatenate(rows), pa.int64()),
+            }))
+            raw = raw.join(F.broadcast(gone), [_POS_FILE, _POS_ROW], "left_anti")
+        pos = [_POS_FILE, _POS_ROW] if positions else []
         if spec is None:
-            return self.spark.read.option("basePath", self._data).parquet(*paths)
-        return spec.reconciled_read(self.spark, paths, base_path=self._data)
+            return raw if positions else raw.drop(_POS_FILE, _POS_ROW)
+        return raw.select(*spec.select_exprs(), *pos)
 
     def _empty_df(self, snap: Snapshot) -> DataFrame:
         spec = snap.schema_doc
@@ -719,15 +799,29 @@ class ParquetTable:
             f"no recorded schema"
         )
 
+    def locate(self, rels: list[str], snap: Snapshot, keys: DataFrame,
+               on: list[str]) -> dict[str, list[int]]:
+        """{rel: row positions} of the rows of the pool files ``rels``
+        (read under ``snap``'s schema, masked rows included) whose ``on``
+        columns match a row of ``keys`` — one broadcast semi-join, the
+        merge's search for the rows a batch supersedes."""
+        by_uri = {_file_uri(self._abs(r)): r for r in rels}
+        hits: dict[str, list[int]] = {}
+        for f, i in (self._scan(rels, snap, None, positions=True)
+                     .join(F.broadcast(keys), on, "left_semi")
+                     .select(_POS_FILE, _POS_ROW).collect()):
+            hits.setdefault(by_uri[f], []).append(i)
+        return hits
+
     def read_files(self, paths: list[str], version: int | None = None) -> DataFrame:
-        """Read a subset of the given version's data files (merge-pruning
-        path) with the SAME logical schema as ``read()`` — including
-        partition-dir columns (basePath) and schema reconciliation."""
+        """Read a subset of the given version's data files (lookup-pruning
+        path) with the SAME logical schema and DVs as ``read()`` —
+        including partition-dir columns (basePath) and schema
+        reconciliation."""
         snap = self.snapshot(version)
-        spec = snap.schema_doc
-        if spec is None:
-            return self.spark.read.option("basePath", self._data).parquet(*paths)
-        return spec.reconciled_read(self.spark, paths, base_path=self._data)
+        rels = [os.path.relpath(p, self._data).replace(os.sep, "/")
+                for p in paths]
+        return self._scan(rels, snap, snap)
 
     def commit_schema(self, ts: "se.TableSchema | None") -> None:
         """Metadata-only DDL commit: a new log entry carrying the evolved
@@ -786,8 +880,7 @@ class ParquetTable:
 
         ``key``: the merge key, for writers that have one — each new
         file's key range and bloom are written by this commit (see
-        ``_index``); the same argument on ``overwrite_cow`` /
-        ``overwrite_cow_files``."""
+        ``_index``); the same argument on ``overwrite_cow_files``."""
         base = self.current_version() if expected_base is None else expected_base
         try:
             snap = self.snapshot(base) if base >= 0 else None
@@ -822,71 +915,30 @@ class ParquetTable:
         )
         self._write_entry(entry, cleanup_rels=rels)
 
-    def partition_files(
-        self, partition_by: str, values: list | None = None
-    ) -> dict[str, list[str]]:
-        """Data files of the current version for the given partition
-        values (or every partition when ``values`` is None):
-        {partition_dirname: [absolute file paths]}. Pure log-entry
-        lookup — no directory walk."""
-        if self.current_version() < 0:
-            return {}
-        snap = self.snapshot()
-        wanted = (
-            # _part_str, not str(): plain str() writes 'True' where the
-            # Hive directory says 'true' — boolean partitions would
-            # never match (the helper's own documented hazard)
-            None if values is None
-            else {None if x is None else _part_str(x) for x in values}
-        )
-        prefix = f"{partition_by}="
-        out: dict[str, list[str]] = {}
-        for rel in sorted(snap.files):
-            dirname, _, base = rel.rpartition("/")
-            if not dirname.startswith(prefix):
-                continue
-            if wanted is not None and _partition_dir_value(dirname) not in wanted:
-                continue
-            out.setdefault(dirname, []).append(self._abs(rel))
-        return out
-
-    def overwrite_cow(
+    def overwrite_cow_files(
         self,
-        df: DataFrame,
-        partition_by: str,
-        touched_values: list,
-        file_links: dict[str, list[str]] | None = None,
+        df: DataFrame | None,
+        remove_rels: list[str],
         expected_base: int | None = None,
         key: str | None = None,
+        partition_by: str | None = None,
+        dvs: dict | None = None,
     ) -> None:
-        """Partition-level copy-on-write commit.
+        """The merge commit: ONE delta entry that adds ``df``'s rows as
+        new files (None: no rows), removes ``remove_rels`` (relpaths of
+        the base version — files whose rows are all superseded) and
+        gives each file named in ``dvs`` ({rel: sorted int64 row
+        positions}) a new deletion vector holding its complete mask.
+        Every other live file is carried by name with zero file
+        operations, so a merge touching k of N files costs one write of
+        its net rows plus k small masks, never a rewrite.
 
-        ``df`` holds the complete new content of the *touched* partitions
-        only (``touched_values`` — raw values, ``None`` for the Hive null
-        partition). It is written as version v+1 via a DELTA log entry:
-        add = the freshly written files, remove = the touched partitions'
-        old files. Untouched partitions appear in NEITHER list — carrying
-        them costs zero file operations (the hard-link mirror this
-        replaces paid O(all files) per commit). A touched partition that
-        ends up with zero rows is naturally dropped.
-
-        ``file_links`` ({partition_dirname: [old file paths]}) carries
-        file-level data skipping one step further: inside a *touched*
-        partition, files whose pk min/max/bloom stats prove they hold no
-        touched key are simply kept out of the remove-list (zero IO).
-        ``df`` must then contain only the rewritten remainder of the
-        partition.
-
-        This is the Delta/Hudi CoW strategy the reference outsources to
-        ClickHouse background merges: at 100 TB a micro-batch touching k
-        of N files pays O(k) data writes + O(k) log bytes, never O(N)
-        anything.
-
-        ``expected_base``: the version the caller classified/probed
-        against — a concurrent commit in between then fails this commit
-        with ConcurrentWriteError instead of silently double-writing
-        the touched partitions' rows (see overwrite_cow_files).
-        """
+        ``expected_base`` anchors the read-modify-write exactly like
+        ``overwrite``: pass the version the caller found its row
+        positions in. Without it, a concurrent commit (e.g. a
+        compaction) landing in between would get masks computed against
+        files it already replaced — lost deletes, duplicate pks. A lost
+        race frees this commit's new files and DVs."""
         v_old = self.current_version() if expected_base is None else expected_base
         if v_old < 0:
             self.overwrite(df, partition_by, key=key)
@@ -898,78 +950,25 @@ class ParquetTable:
                 f"table {self.root}: base version {v_old} no longer retained; "
                 f"retry the merge"
             ) from e
-        df = self._stamp_gen(df, snap.schema_doc)
-        staging = self._staging_dir()
-        df.write.mode("overwrite").partitionBy(partition_by).parquet(staging)
-        rels = self._promote_files(staging)
-        keep = {
-            os.path.relpath(p, self._data).replace(os.sep, "/")
-            for files in (file_links or {}).values()
-            for p in files
-        }
-        touched = {_part_str(v) for v in touched_values}
-        prefix = f"{partition_by}="
-        remove = []
-        for rel in snap.files:
-            dirname = rel.rpartition("/")[0]
-            if (
-                dirname.startswith(prefix)
-                and _partition_dir_value(dirname) in touched
-                and rel not in keep
-            ):
-                remove.append(rel)
-        entry = self._make_entry(
-            v_old + 1, self._index(rels, key), remove, snap, op="merge"
-        )
-        self._write_entry(entry, cleanup_rels=rels)
-
-    def overwrite_cow_files(
-        self,
-        df: DataFrame,
-        remove_rels: list[str],
-        expected_base: int | None = None,
-        key: str | None = None,
-    ) -> None:
-        """File-level copy-on-write commit for UNPARTITIONED tables.
-
-        ``df`` is the complete replacement content for exactly the files
-        named in ``remove_rels`` (relpaths of the current version). The
-        commit publishes a delta entry: add = the fresh write, remove =
-        ``remove_rels``; every other live file is carried by name with
-        zero file operations. This closes the last O(table)-per-batch
-        path: without it an unpartitioned pk-keyed table paid a full
-        rewrite per micro-batch merge — at 100 TB a scale-killer. With
-        it, a merge intersecting k of N files costs O(k) I/O + one log
-        publish, same as the partitioned ``overwrite_cow``.
-
-        ``expected_base`` anchors the read-modify-write exactly like
-        ``overwrite``: pass the version the caller CLASSIFIED against.
-        Without it, a concurrent commit (e.g. a compaction) landing
-        between classification and this call would be silently merged
-        into duplicates — the remove-list's files are gone from the new
-        head, so nothing is removed, while the caller's rewrite of
-        their contents is added on top (lost update, duplicate pks).
-        """
-        v_old = self.current_version() if expected_base is None else expected_base
-        if v_old < 0:
-            self.overwrite(df, key=key)
-            return
-        try:
-            snap = self.snapshot(v_old)
-        except FileNotFoundError as e:
-            raise ConcurrentWriteError(
-                f"table {self.root}: base version {v_old} no longer retained; "
-                f"retry the merge"
-            ) from e
-        df = self._stamp_gen(df, snap.schema_doc)
-        staging = self._staging_dir()
-        df.write.mode("overwrite").parquet(staging)
-        rels = self._promote_files(staging)
-        live = set(snap.files)
-        remove = [r for r in remove_rels if r in live]
-        entry = self._make_entry(v_old + 1, self._index(rels, key), remove,
-                                 snap, op="merge")
-        self._write_entry(entry, cleanup_rels=rels)
+        rels: list[str] = []
+        if df is not None:
+            df = self._stamp_gen(df, snap.schema_doc)
+            staging = self._staging_dir()
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(staging)
+            rels = self._promote_files(staging)
+        add = self._index(rels, key)
+        written = list(rels)
+        for rel, rows in (dvs or {}).items():
+            name = dv.new_name(rel)
+            written.append(dv.dv_rel(rel, name))
+            dv.write(self._abs(written[-1]), rows)
+            add[rel] = {**snap.files[rel], dv.DV_KEY: name}
+        remove = [r for r in remove_rels if r in snap.files]
+        entry = self._make_entry(v_old + 1, add, remove, snap, op="merge")
+        self._write_entry(entry, cleanup_rels=written)
 
     def append(self, df: DataFrame, partition_by: str | None = None,
                epoch: str | None = None) -> None:
@@ -1105,9 +1104,10 @@ class ParquetTable:
                     except OSError:
                         continue
         if self.current_version() >= 0 and os.path.isdir(self._data):
-            # a live file's sidecar is live with it
+            # a live file's sidecar is live with it, and so is its DV
             live = {
-                path for v in self.versions() for rel in self.snapshot(v).files
+                path for v in self.versions()
+                for rel in self.snapshot(v).pool_rels()
                 for path in _pool_paths(self._data, rel)
             }
             for dirpath, _dirs, names in os.walk(self._data):
@@ -1164,7 +1164,12 @@ class ParquetTable:
             except (OSError, json.JSONDecodeError):
                 continue
             if e["type"] == "delta":
-                n_added = len(e.get("add", {}))
+                # a file re-added under a new DV is not a new file
+                try:
+                    before = self._snapshot_at(v - 1).files
+                except (OSError, json.JSONDecodeError):
+                    before = {}
+                n_added = sum(1 for r in e.get("add", {}) if r not in before)
             else:
                 # a checkpoint folds the full live set into `files`; the
                 # commit's own additions are the delta vs the previous
@@ -1255,7 +1260,9 @@ class ParquetTable:
         file the restore made live again; a new identity can never be on
         an old remove-list. Stats ride along (same bytes); bloom
         sidecars are copied with their file, so point-lookup pruning
-        survives a rollback."""
+        survives a rollback. A DV is a pool file too: a file the target
+        reads under a different DV than the head gets a fresh copy of
+        the target's DV (or none), for the same GC reason."""
         cur_v = self.current_version()
         if cur_v < 0:
             raise FileNotFoundError(f"table {self.root} has no committed version")
@@ -1266,14 +1273,22 @@ class ParquetTable:
         add: dict = {}
         pairs: list[tuple] = []
         for rel in sorted(target.files):
+            old_dv = target.dv(rel)
             if rel in head.files:
-                continue
-            d, name = os.path.split(rel)
-            new_rel = f"{d}/" if d else ""
-            new_rel += f"restore-{uuid.uuid4().hex[:12]}-{name}"
-            pairs.append((rel, new_rel))
-            stats = target.files[rel]
-            add[new_rel] = dict(stats) if stats else {}
+                if head.dv(rel) == old_dv:
+                    continue
+                new_rel = rel
+            else:
+                d, name = os.path.split(rel)
+                new_rel = f"{d}/" if d else ""
+                new_rel += f"restore-{uuid.uuid4().hex[:12]}-{name}"
+                pairs.append((rel, new_rel))
+            stats = dict(target.files[rel] or {})
+            stats.pop(dv.DV_KEY, None)
+            if old_dv:
+                stats[dv.DV_KEY] = dv.new_name(new_rel)
+                pairs.append((old_dv, dv.dv_rel(new_rel, stats[dv.DV_KEY])))
+            add[new_rel] = stats
         self._copy_pool_files(self.root, pairs)
         copied = [new_rel for _, new_rel in pairs]
         remove = sorted(r for r in head.files if r not in target.files)
@@ -1319,7 +1334,8 @@ class ParquetTable:
         for rel in sorted(snap.files):
             stats = snap.files[rel]
             files[rel] = dict(stats) if stats else {}
-        dest._copy_pool_files(self.root, [(r, r) for r in sorted(snap.files)])
+        dest._copy_pool_files(self.root,
+                              [(r, r) for r in sorted(snap.pool_rels())])
         entry = dest._make_entry(
             0, files, [], None,
             schema_change=snap.schema_raw,
@@ -1327,7 +1343,7 @@ class ParquetTable:
             force_ckpt=True,
             op="clone",
         )
-        dest._write_entry(entry, cleanup_rels=sorted(files))
+        dest._write_entry(entry, cleanup_rels=snap.pool_rels())
         return dest
 
     def changes(self, v_from: int, v_to: int | None = None,
@@ -1347,10 +1363,12 @@ class ParquetTable:
         O(changed rows), not O(table).
 
         Scale design: the diff touches ONLY files added/removed between
-        the two snapshots — pure log arithmetic picks them, copy-on-write
-        keeps them few — so a 100 TB table with a 10 GB merge diff reads
-        ~20 GB. Rows carried over verbatim by a CoW rewrite (same pk,
-        same values, new file) cancel out: without ``pk`` via
+        the two snapshots — pure log arithmetic picks them — so a 100 TB
+        table with a 10 GB merge diff reads ~20 GB. A file's identity is
+        (file, DV): a file whose DV changed is on both sides, the old
+        side masked by ``v_from``'s DV and the new by ``v_to``'s. Rows
+        carried over verbatim (same pk, same values — a re-masked file's
+        surviving rows, a compaction's rewrite) cancel out: without ``pk`` via
         ``exceptAll`` multiset semantics, with ``pk`` via a null-safe
         image comparison after one full-outer join on the key (shuffles
         only the changed-file rows). Schema evolution between the two
@@ -1377,23 +1395,19 @@ class ParquetTable:
             added: list[str] = []
             removed: list[str] = []
         else:
-            added = sorted(r for r in sto.files if r not in sfrom.files)
-            removed = sorted(r for r in sfrom.files if r not in sto.files)
-        new_df = (
-            self.read_files([self._abs(r) for r in added], version=sto.version)
-            if added else self._empty_df(sto)
-        )
+            def diff(a: Snapshot, b: Snapshot) -> list[str]:
+                return sorted(r for r in a.files
+                              if r not in b.files or a.dv(r) != b.dv(r))
+
+            added, removed = diff(sto, sfrom), diff(sfrom, sto)
+        new_df = self._scan(added, sto, sto)
         # BOTH sides read through v_to's schema document: the feed is
         # expressed in the destination schema, and reconciled reads
         # resolve pre-DDL physical files against a newer doc by design
         # (that's the metadata-only-DDL read path). Reading the old side
         # with v_from's doc instead would misalign images across a
         # rename — every carried-over row would stop cancelling.
-        old_raw = (
-            self.read_files([self._abs(r) for r in removed],
-                            version=sto.version)
-            if removed else self._empty_df(sto)
-        )
+        old_raw = self._scan(removed, sto, sfrom)
         cols = new_df.columns
         old_df = old_raw.select([
             F.col(c).alias(c) if c in old_raw.columns
@@ -1423,7 +1437,7 @@ class ParquetTable:
                    .when(new_c.isNull() & old_c.isNotNull(), F.lit("delete")))
         post_lbl = (F.when(upd, F.lit("update_postimage"))
                     .when(old_c.isNull() & new_c.isNotNull(), F.lit("insert")))
-        # one pass over the join: each row yields 0 (CoW carry-over),
+        # one pass over the join: each row yields 0 (carry-over),
         # 1 (insert/delete), or 2 (update pre+post) output rows
         images = F.array_compact(F.array(
             F.when(pre_lbl.isNotNull(),

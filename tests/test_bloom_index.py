@@ -88,8 +88,9 @@ def test_interleaved_files_pruned_by_bloom_not_minmax(spark, tmp_path):
     """Two files in one partition with fully OVERLAPPING key ranges
     (evens vs odds): min/max cannot prune either, but the bloom proves
     the odd file holds no touched (even) key — after the merge the odd
-    file must be CARRIED in the manifest (same pool file), not
-    rewritten, and the table content must be exactly the merged state."""
+    file must be CARRIED in the manifest (same pool file) with no
+    deletion vector, and the table content must be exactly the merged
+    state."""
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by="p")
     t = ParquetTable(spark, str(tmp_path / "t3"))
@@ -98,7 +99,7 @@ def test_interleaved_files_pruned_by_bloom_not_minmax(spark, tmp_path):
     df_e = spark.createDataFrame(evens, "k long, p string, v double").coalesce(1)
     df_o = spark.createDataFrame(odds, "k long, p string, v double").coalesce(1)
     t.overwrite(df_e, "p", key="k")
-    t.overwrite_cow(df_o, "p", [], key="k")  # add-only commit
+    t.overwrite_cow_files(df_o, [], key="k", partition_by="p")  # add-only
     before = _rels(t, "p=a")
     assert len(before) == 2
     # touch two EVEN keys only
@@ -108,6 +109,8 @@ def test_interleaved_files_pruned_by_bloom_not_minmax(spark, tmp_path):
     after = _rels(t, "p=a")
     carried = set(before) & set(after)
     assert carried, "odd-keys file should be carried, not rewritten"
+    snap = t.snapshot()
+    assert sum(1 for r in before if snap.dv(r)) == 1, "odd file was masked"
     # and the merged content is right
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got[0] == 100.0 and 2 not in got and got[3] == 3.0
@@ -338,8 +341,9 @@ def test_string_pk_files_pruned_by_bloom_alone(spark, tmp_path):
     g2 = [(f"key_b{i:04d}", "a", float(i)) for i in range(100)]
     t.overwrite(spark.createDataFrame(g1, "k string, p string, v double")
                 .coalesce(1), "p", key="k")
-    t.overwrite_cow(spark.createDataFrame(g2, "k string, p string, v double")
-                    .coalesce(1), "p", [], key="k")
+    t.overwrite_cow_files(spark.createDataFrame(
+        g2, "k string, p string, v double").coalesce(1), [], key="k",
+        partition_by="p")
     before = _rels(t, "p=a")
     assert len(before) == 2
     batch = spark.createDataFrame(
@@ -351,6 +355,8 @@ def test_string_pk_files_pruned_by_bloom_alone(spark, tmp_path):
     after = _rels(t, "p=a")
     carried = set(before) & set(after)
     assert carried, "the untouched key_b file must be carried"
+    snap = t.snapshot()
+    assert sum(1 for r in before if snap.dv(r)) == 1, "key_b file was masked"
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got["key_a0001"] == 99.0 and len(got) == 200
 

@@ -176,8 +176,8 @@ def test_cow_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
 def test_cow_file_level_pruning(spark, tmp_path):
     """Within a touched partition, files whose pk footer range excludes
-    every batch key are carried in the manifest, not rewritten; state
-    stays exact."""
+    every batch key are carried in the manifest untouched, and the one
+    holding the key is masked, not rewritten; state stays exact."""
     t = ParquetTable(spark, str(tmp_path / "t"))
     s = _part_spec()
     init = spark.createDataFrame(
@@ -189,14 +189,17 @@ def test_cow_file_level_pruning(spark, tmp_path):
     )
     before = _part_files(t, "a")
     assert len(before) == 4
-    # touch a single pk: only the file covering id=5 may be rewritten
+    # touch a single pk: only the file covering id=5 may be masked
     apply_cdc_batch(t, _typed_part(spark, [
         ("update", {"id": 5, "amount": "5", "day": "a"},
          {"id": 5, "amount": "x", "day": "a"}, 100),
     ]), s)
     after = _part_files(t, "a")
     shared = set(before) & set(after)
-    assert len(shared) == 3  # three untouched files carried through
+    assert len(shared) == 4  # no file rewritten: all carried through
+    snap = t.snapshot()
+    assert len([r for r in before if snap.dv(r)]) == 1  # three untouched
+    assert len(after) == 5  # plus the batch's one new file
     got = {r["id"]: r["amount"] for r in read_current_state(t, s).collect()}
     assert got == {i: ("x" if i == 5 else str(i)) for i in range(1, 101)}
 

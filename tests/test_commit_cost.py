@@ -134,21 +134,24 @@ def test_version_gc_frees_only_expired_files(spark, tmp_path):
     t.overwrite(spark.createDataFrame(
         [(k, f"p{k % 4}", float(k)) for k in range(400)],
         "k long, p string, v double").coalesce(1), "p")
-    v0_files = set(t.snapshot().files)
-    # v1: rewrite partition p1
+    # v1 writes k=1's new row as a one-row file; v2 supersedes that row,
+    # so the merge removes the whole file instead of masking it
     apply_cdc_batch(t, _events(spark, [("insert", 1, "p1", -1.0, 10)]),
                     spec, value_columns=["k", "p", "v"])
     v1_files = set(t.snapshot().files)
-    replaced = v0_files - v1_files  # p1's old file(s)
+    apply_cdc_batch(t, _events(spark, [("insert", 1, "p1", -2.0, 11)]),
+                    spec, value_columns=["k", "p", "v"])
+    v2_files = set(t.snapshot().files)
+    replaced = v1_files - v2_files  # k=1's one-row file
     assert replaced
-    for rel in replaced:  # still on disk: v0 is retained for readers
+    for rel in replaced:  # still on disk: v1 is retained for readers
         assert os.path.exists(t._abs(rel))
-    # v2 commit expires v0 -> exactly the replaced files are deleted
-    apply_cdc_batch(t, _events(spark, [("insert", 2, "p2", -2.0, 11)]),
+    # v3 commit expires v1 -> exactly the replaced files are deleted
+    apply_cdc_batch(t, _events(spark, [("insert", 2, "p2", -2.0, 12)]),
                     spec, value_columns=["k", "p", "v"])
     for rel in replaced:
         assert not os.path.exists(t._abs(rel)), f"{rel} should be GC'd"
-    for rel in v1_files & set(t.snapshot().files):  # carried files survive
+    for rel in v2_files & set(t.snapshot().files):  # carried files survive
         assert os.path.exists(t._abs(rel))
     assert t.read().count() == 400
 
@@ -215,10 +218,11 @@ def test_vacuum_reclaims_crash_debris(spark, tmp_path):
 
 def test_unpartitioned_merge_is_file_level_cow(spark, tmp_path, monkeypatch):
     """The round-3 verdict's last O(table)-per-batch path: a merge into
-    an UNPARTITIONED pk-keyed table must rewrite only the files whose
+    an UNPARTITIONED pk-keyed table must touch only the files whose
     footer min/max intersect the batch keys — not the whole table.
     40 pk-clustered files, a batch touching keys inside 2 of them:
-    >= 38 files must carry over by name, and the commit's file-op count
+    every file carries over by name (the two touched ones under a new
+    deletion vector, none rewritten), and the commit's file-op count
     must stay bounded by the touched set."""
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
@@ -247,7 +251,9 @@ def test_unpartitioned_merge_is_file_level_cow(spark, tmp_path, monkeypatch):
     assert {r["v"] for r in t.read().filter("k = 5").collect()} == {-1.0}
     assert t.read().filter("k = 3777").count() == 0
     assert t.read().count() == 3999
-    # CoW: only the two intersecting files replaced, rest carried by name
+    # only the two intersecting files masked, all carried by name
+    snap = t.snapshot()
+    assert len([r for r in before if snap.dv(r)]) == 2
     assert len(before & after) >= n_files - 2, (
         f"carried {len(before & after)} of {n_files} files — merge "
         f"rewrote the table instead of the touched files"
@@ -259,7 +265,7 @@ def test_unpartitioned_merge_is_file_level_cow(spark, tmp_path, monkeypatch):
 def test_unpartitioned_merge_delete_only_noop(spark, tmp_path):
     """A batch of deletes whose keys provably miss every file commits
     nothing at all (no version bump), and a delete that hits commits a
-    delta entry removing just that file."""
+    delta entry masking just that row."""
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
     t = ParquetTable(spark, str(tmp_path / "t"))
@@ -328,12 +334,15 @@ def test_commit_latency_flat_between_checkpoints_at_10k_files(spark, tmp_path):
 
 @pytest.mark.slow
 def test_unpartitioned_merge_bloom_refines_overlapping_ranges(spark, tmp_path):
-    """The unpartitioned CoW path consults Bloom sidecars exactly like
-    the partitioned one: two files with fully OVERLAPPING pk min/max
+    """The unpartitioned merge consults Bloom sidecars exactly like the
+    partitioned one: two files with fully OVERLAPPING pk min/max
     (interleaved even/odd keys) are both range-hits for any batch key,
-    but the bloom proves the odd-keyed file holds no even key — one
-    file rewrites, the other carries by name. Both blooms are written
-    by the commits that add the files."""
+    but the bloom proves the odd-keyed file holds no even key — it is
+    no candidate of the merge's semi-join, gets no DV and is not
+    removed. Both blooms are written by the commits that add the
+    files."""
+    from synch_spark.sources import bloom
+
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
     t = ParquetTable(spark, str(tmp_path / "t"))
@@ -342,24 +351,28 @@ def test_unpartitioned_merge_bloom_refines_overlapping_ranges(spark, tmp_path):
     odds = spark.createDataFrame([(k, "a", 1.0) for k in range(1, 2000, 2)],
                                  "k long, p string, v double").coalesce(1)
     t.overwrite(evens, key="k")
+    even_file = next(iter(t.snapshot().files))
     t.overwrite_cow_files(odds, [], key="k")  # add-only commit
     assert len(t.snapshot().files) == 2
+    odd_file = next(r for r in t.snapshot().files if r != even_file)
+    assert bloom.prune_files(t, "k", [500]) == [t._abs(even_file)]
 
-    before = set(t.snapshot().files)
     apply_cdc_batch(t, _events(spark, [("insert", 500, "a", -1.0, 10)]),
                     spec, value_columns=["k", "p", "v"])
-    after = set(t.snapshot().files)
-    carried = before & after
-    # the odd-keyed file survived by name despite its range covering 500
-    assert len(carried) == 1, f"bloom did not refine: carried {carried}"
+    snap = t.snapshot()
+    # the odd-keyed file survived by name, unmasked, despite its range
+    # covering 500; the even one masks k=500's old row
+    assert odd_file in snap.files and snap.dv(odd_file) is None
+    assert even_file in snap.files and snap.dv(even_file)
     assert t.read().filter("k = 500").collect()[0]["v"] == -1.0
     assert t.read().count() == 2000
 
 def test_merge_rewrite_adds_o_touched_files_not_splinters(spark, tmp_path):
-    """A merge rewriting k files must ADD O(k) files — not one splinter
-    per shuffle partition. Without the rewrite-width coalesce a 1-file
-    merge on a 64-file table added ~33 files per micro-batch, compounding
-    into small-file sprawl (and inflating every change feed's read set)."""
+    """A merge touching k files must ADD O(1) files for its net rows —
+    not one splinter per shuffle partition. Without the write-width
+    coalesce a 1-file merge on a 64-file table added ~33 files per
+    micro-batch, compounding into small-file sprawl (and inflating
+    every change feed's read set)."""
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
     t = ParquetTable(spark, str(tmp_path / "t"), retain=3)
@@ -374,10 +387,14 @@ def test_merge_rewrite_adds_o_touched_files_not_splinters(spark, tmp_path):
     batch = _events(spark, [("insert", k, "px", -1.0, 10)
                             for k in range(1000, 3000, 1)])
     apply_cdc_batch(t, batch, spec, value_columns=["k", "p", "v"])
-    added = set(t.snapshot().files) - set(t.snapshot(v0).files)
-    removed = set(t.snapshot(v0).files) - set(t.snapshot().files)
-    assert 1 <= len(removed) <= 4, sorted(removed)
-    assert len(added) <= len(removed) + 1, (
-        f"merge added {len(added)} files for a {len(removed)}-file rewrite"
+    snap = t.snapshot()
+    added = set(snap.files) - set(t.snapshot(v0).files)
+    # touched: masked, or removed when every row was superseded
+    touched = [r for r in t.snapshot(v0).files
+               if r not in snap.files or snap.dv(r)]
+    assert 1 <= len(touched) <= 4, sorted(touched)
+    assert len(added) == 1, (
+        f"merge added {len(added)} files for a {len(touched)}-file merge"
     )
     assert t.read().filter("v = -1.0").count() == 2000
+    assert t.read().count() == 64_000

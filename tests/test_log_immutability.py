@@ -1,6 +1,7 @@
 """A published log entry is never modified: the committer's
 publish-if-absent contract (sources.committer) holds across every store
-operation — snapshot, merges, compaction, lookups, restore and clone."""
+operation — snapshot, merges (each re-masking files with a new deletion
+vector), compaction, lookups, restore and clone."""
 
 from __future__ import annotations
 
@@ -76,6 +77,14 @@ def test_published_entries_are_never_rewritten(spark, tmp_path, monkeypatch):
                                            ("delete", 7, "1", 0.0, 10 + i)]),
                         spec, value_columns=["k", "p", "v"])
         check(f"{name} merge")
+        # re-mask a file the first merge masked: a NEW DV, named in the
+        # new entry, never patched into the old one
+        apply_cdc_batch(t, _events(spark, [("insert", 8, "2", -8.0, 30 + i),
+                                           ("insert", 4, "1", -4.0, 30 + i)]),
+                        spec, value_columns=["k", "p", "v"])
+        check(f"{name} second merge")
+        snap = t.snapshot()
+        assert any(snap.dv(r) for r in snap.files), f"{name}: nothing masked"
         compact_table(t, spec)
         check(f"{name} compact_table")
         got = {r["k"]: r["v"] for r in
@@ -84,7 +93,9 @@ def test_published_entries_are_never_rewritten(spark, tmp_path, monkeypatch):
         check(f"{name} point_lookup")
 
     t, spec = tables["flat"]
-    t.restore(t.versions()[0])
+    first = t.versions()[0]  # a masked version: restore copies its DVs
+    assert any(t.snapshot(first).dv(r) for r in t.snapshot(first).files)
+    t.restore(first)
     check("restore")
     dup = t.clone(str(tmp_path / "dup"))
     check("clone")

@@ -46,9 +46,9 @@ def test_refresh_reads_only_new_files(spark, tmp_path, monkeypatch):
         assert rng is not None and rng[0] <= rng[1]
 
     # add one file: only it is read
-    t.overwrite_cow(spark.createDataFrame([(500, "0", 2.0)],
-                                          "k long, p string, v double")
-                    .coalesce(1), "p", [], key="k")
+    t.overwrite_cow_files(spark.createDataFrame(
+        [(500, "0", 2.0)], "k long, p string, v double").coalesce(1), [],
+        key="k", partition_by="p")
     assert len(calls) == n1 + 1
     assert len(load_manifest(t, "k")) == n1 + 1
 
@@ -89,8 +89,9 @@ def test_classify_uses_manifest_same_result(spark, tmp_path):
         key = "k" if with_manifest else None
         t.overwrite(spark.createDataFrame(evens, "k long, p string, v double")
                     .coalesce(1), "p", key=key)
-        t.overwrite_cow(spark.createDataFrame(odds, "k long, p string, v double")
-                        .coalesce(1), "p", [], key=key)
+        t.overwrite_cow_files(spark.createDataFrame(
+            odds, "k long, p string, v double").coalesce(1), [], key=key,
+            partition_by="p")
         batch = _events(spark, [("delete", 2, "a", 2.0, 11)])
         apply_cdc_batch(t, batch, spec, value_columns=["k", "p", "v"])
         files = sorted(r for r in t.snapshot().files if r.startswith("p=a/"))

@@ -397,13 +397,14 @@ def test_out_of_range_temporals_null_not_crash(spark):
 
 
 def test_unpartitioned_merge_uses_manifest_not_footers(spark, tmp_path, monkeypatch):
-    """The unpartitioned classifier must hit the manifest-log stats (bare
-    basename keys), not re-read a parquet footer per file per batch —
+    """The unpartitioned merge's file pruning must hit the manifest-log
+    stats (bare basename keys), not re-read a parquet footer per file
+    per batch —
     the 'footer storm' the manifest exists to avoid. A table written
     with ``key=`` carries those stats from its first commit, and each
     merge commits stats for its own new files, so consecutive merges
     never fall back to a footer."""
-    from synch_spark.operators import cdc_apply
+    from synch_spark.sources import bloom, table as table_mod
 
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by=None)
@@ -412,10 +413,21 @@ def test_unpartitioned_merge_uses_manifest_not_footers(spark, tmp_path, monkeypa
         F.col("id").alias("k"), F.lit("a").alias("p"), F.lit(1.0).alias("v"))
         .repartitionByRange(10, "k"), key="k")
 
-    calls = []
-    real = cdc_apply.file_key_range
-    monkeypatch.setattr(cdc_apply, "file_key_range",
-                        lambda *a: calls.append(a) or real(*a))
+    # count the footer reads of the pruning probe only (a commit reads
+    # its own new files' footers once, by design)
+    calls, probing = [], []
+    real, real_prune = table_mod.file_key_range, bloom.prune_files
+
+    def prune(*a):
+        probing.append(a)
+        try:
+            return real_prune(*a)
+        finally:
+            probing.pop()
+
+    monkeypatch.setattr(bloom, "prune_files", prune)
+    monkeypatch.setattr(table_mod, "file_key_range",
+                        lambda *a: (probing and calls.append(a)) or real(*a))
     for i, k in enumerate((500, 501, 900)):
         ev = spark.createDataFrame(
             [("insert", k, "a", -1.0, 10 + i)],

@@ -9,9 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from synch_spark.config import Engine, TableSpec
-from synch_spark.operators import cdc_apply
 from synch_spark.operators.cdc_apply import apply_cdc_batch
-from synch_spark.sources.table import ConcurrentWriteError, ParquetTable, _part_str
+from synch_spark.sources.table import ConcurrentWriteError, ParquetTable
 
 
 @pytest.fixture(scope="module")
@@ -19,13 +18,6 @@ def spark():
     from synch_spark.session import get_spark
 
     return get_spark("test-review-r6", cpus=8)
-
-
-def test_part_str_matches_hive_dir_encoding():
-    assert _part_str(True) == "true" and _part_str(False) == "false"
-    assert _part_str(None) is None
-    assert _part_str(7) == "7"
-    assert _part_str(datetime.date(2020, 1, 2)) == "2020-01-02"
 
 
 def test_manifest_survives_date_and_timestamp_pk(spark, tmp_path):
@@ -56,10 +48,11 @@ def test_manifest_survives_date_and_timestamp_pk(spark, tmp_path):
 
 
 def test_bool_partition_merge_probe_path_removes_old_files(spark, tmp_path):
-    """The probe fallback rewrites touched partitions whole; with a
-    BOOLEAN partition column the old touched={'True'} never matched the
-    'is=true' dir, so old files stayed live and every carried-over row
-    duplicated. Force the probe path and assert no duplicates."""
+    """A merge into a BOOLEAN-partitioned table: the copy-on-write
+    probe once matched touched={'True'} against the 'hot=true' dir, so
+    old files stayed live and every carried-over row duplicated. With
+    no pruning proof (every file a candidate) the merge must mask the
+    superseded row and leave no duplicates."""
     spec = TableSpec(schema="db", table="t", pk=("k",),
                      engine=Engine.REPLACING_MERGE_TREE, partition_by="hot")
     t = ParquetTable(spark, str(tmp_path / "t"), retain=4)
@@ -75,13 +68,15 @@ def test_bool_partition_merge_probe_path_removes_old_files(spark, tmp_path):
     ).withColumn("action_seq", F.lit(0)) \
      .withColumn("schema", F.lit("db")).withColumn("table", F.lit("t"))
 
-    # force the scan-based probe (the path with no compensating decode)
-    orig = cdc_apply._classify_files
-    cdc_apply._classify_files = lambda *a, **k: None
+    # no pruning proof: every live file is a semi-join candidate
+    from synch_spark.sources import bloom
+
+    orig = bloom.prune_files
+    bloom.prune_files = lambda *a, **k: None
     try:
         apply_cdc_batch(t, batch, spec, value_columns=["k", "hot", "v"])
     finally:
-        cdc_apply._classify_files = orig
+        bloom.prune_files = orig
     rows = t.read().groupBy("k").count().filter("count > 1").collect()
     assert rows == [], f"duplicated pks after bool-partition merge: {rows}"
     got = {r["k"]: r["v"] for r in t.read().collect()}

@@ -150,10 +150,13 @@ def test_restore_carries_bloom_sidecars(spark, tmp_path):
 
     t = ParquetTable(spark, str(tmp_path / "t"), retain=4)
     _clustered(spark, t, key="k")
-    v0 = t.current_version()
     apply_cdc_batch(t, _events(spark, [("insert", 5, "px", -1.0, 10)]),
                     SPEC, value_columns=["k", "p", "v"])
-    t.restore(v0)
+    v1 = t.current_version()
+    # superseding k=5 again removes v1's one-row file from the head
+    apply_cdc_batch(t, _events(spark, [("insert", 5, "px", -2.0, 11)]),
+                    SPEC, value_columns=["k", "p", "v"])
+    t.restore(v1)
     restored = [r for r in t.snapshot().files if "restore-" in r]
     assert restored, "restore should have re-materialized the merged file"
     for rel in restored:
@@ -255,8 +258,11 @@ def test_changes_reads_only_diff_files(spark, tmp_path):
     n_files = len(t.snapshot().files)
     apply_cdc_batch(t, _events(spark, [("insert", 5, "px", -1.0, 10)]),
                     SPEC, value_columns=["k", "p", "v"])
-    touched = {os.path.basename(r)
-               for r in set(t.snapshot().files) ^ set(t.snapshot(v0).files)}
+    s0, s1 = t.snapshot(v0), t.snapshot()
+    # a file's identity is (file, DV): a re-masked file is in the diff
+    touched = {os.path.basename(r) for r in set(s0.files) | set(s1.files)
+               if r not in s0.files or r not in s1.files
+               or s0.dv(r) != s1.dv(r)}
     assert 0 < len(touched) < n_files // 2
     scanned = {os.path.basename(p)
                for p in t.changes(v0, pk="k").inputFiles()}

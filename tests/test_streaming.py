@@ -228,6 +228,23 @@ def test_monitor_log_self_compacts(spark, tmp_path, monkeypatch):
     assert {r["num"] for r in rows} == set(range(7))
 
 
+def test_monitor_append_adds_exactly_one_data_file(spark, tmp_path):
+    """A one-row monitor append pools one data file: the empty part
+    files Spark writes for the frame's empty tasks are dropped at
+    promotion instead of joining every later read."""
+    from synch_spark.sources.table import ParquetTable
+    from synch_spark.streaming import pipeline as sp
+
+    wh = str(tmp_path / "wh")
+    sp.log_monitor_row(spark, wh, "a1", "db", "t", 0, 1)
+    t = ParquetTable(spark, f"{wh}/_synch_log")
+    before = set(t.snapshot().files)
+    sp.log_monitor_row(spark, wh, "a1", "db", "t", 1, 1)
+    added = set(t.snapshot().files) - before
+    assert len(added) == 1, f"one row pooled {len(added)} files"
+    assert t.read().count() == 2
+
+
 def test_kafka_source_options_assign_passthrough():
     """B4 parity contract (no broker needed): subscribe by default;
     assign_partitions switches to Kafka manual assignment with the

@@ -256,3 +256,36 @@ def test_ivf_refine_exact_mode_is_run_reproducible(spark):
     for cid in a:
         for x, y in zip(a[cid], d[cid]):
             assert math.isclose(x, y, rel_tol=1e-5, abs_tol=1e-6)
+
+
+def _seed_centroids(spark, vecs):
+    return spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "cid int, cvec array<float>")
+
+
+def test_ivf_refine_empty_later_iteration(spark):
+    """A corpus that empties the centroid set after the first round
+    (here: an empty corpus, so every centroid loses all its members)
+    returns the empty centroid frame in the default mode and raises the
+    empty-centroid error in exact mode — never ``max()`` of an empty
+    sequence."""
+    from synch_spark.operators.vector_index import ivf_refine
+
+    seed = _seed_centroids(spark, [[1.0, 0.0], [0.0, 1.0]])
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert ivf_refine(empty, seed, iters=2).collect() == []
+    with pytest.raises(ValueError, match="empty centroid set"):
+        ivf_refine(empty, seed, iters=2, exact=True)
+
+
+def test_ivf_refine_centroid_dim_is_the_ragged_contract(spark):
+    """Members longer than every centroid contribute only the centroid's
+    positions: the refined centroid keeps the centroid dim."""
+    from synch_spark.operators.vector_index import ivf_refine
+
+    seed = _seed_centroids(spark, [[1.0, 0.0]])
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 5.0]), (2, [3.0, 0.0, 7.0])],
+        "vec_id long, embedding array<float>")
+    out = ivf_refine(emb, seed, iters=1).collect()
+    assert [list(r["cvec"]) for r in out] == [[2.0, 0.0]]
