@@ -9,7 +9,7 @@ into ClickHouse), re-expressed Spark-first:
 - ClickHouse engine semantics (Replacing/Collapsing/VersionedCollapsing
   MergeTree) -> native DataFrame window/aggregate views
 - DDL sync (ALTER translate) -> schema evolution on parquet tables
-- count/checksum verification, monitoring log
+- count/checksum verification, per-batch monitor records in the commit log
 - beyond-reference LLM-data-pipeline operators: dedup (exact, minhash
   LSH, simhash, n-gram jaccard, embedding cosine), similarity search,
   text analysis, multimodal column plumbing.

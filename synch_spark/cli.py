@@ -107,6 +107,7 @@ def cmd_produce(args) -> int:
     from synch_spark.broker import write_event_spool
     from synch_spark.sources.snapshot_diff import diff_snapshots
     from synch_spark.sources.table import ParquetTable as _PT
+    from synch_spark.streaming.pipeline import log_monitor_row
 
     raw = _load(args.config)
     cfg = config_from_dict(raw)
@@ -191,17 +192,14 @@ def cmd_produce(args) -> int:
                     else:
                         write_event_spool(events, events_dir, basename)
                     emitted += n
-                    # producer-side monitor row (type=1): the reference
-                    # logs every produced chunk the same way
-                    # (/root/reference/synch/reader/__init__.py:84)
-                    from synch_spark.streaming.pipeline import log_monitor_row
-
-                    log_monitor_row(spark, warehouse,
-                                    args.alias or "default", spec.schema,
-                                    spec.table, n, 1)
             finally:
                 events.unpersist()
-            state.overwrite(src)
+            # producer-side monitor record (type=1), in the state commit
+            # the round makes anyway: the reference logs every produced
+            # chunk the same way (synch/reader/__init__.py:84)
+            info = {"alias": args.alias or "default", "num": n, "type": 1}
+            state.overwrite(src, info=info)
+            log_monitor_row(spec.schema, spec.table, info)
         print(json.dumps({"produce_round": i, "events": emitted}))
         if i + 1 < rounds:
             _time.sleep(interval)
@@ -1612,7 +1610,9 @@ def cmd_check(args) -> int:
 def cmd_history(args) -> int:
     """DESCRIBE HISTORY analog: per-table commit log of the retained
     time-travel window (version, entry type, files added/removed, live
-    size, schema-change flag, commit mtime). Metadata-only — no data
+    size, schema-change flag, commit mtime, and the writer's ``info``
+    record — a micro-batch's or producer round's monitor row, see
+    ``cmd_status``). Metadata-only — no data
     files are read, so it is safe to run against live tables."""
     raw = _load(args.config)
     cfg = config_from_dict(raw)
@@ -1898,18 +1898,24 @@ def cmd_status(args) -> int:
 
     Per table: target existence, current version, and file-layout
     health (file_stats — no data read; pass ``--counts`` to also pay a
-    count scan). Throughput: the newest producer/consumer monitor rows
-    per table from ``_synch_log`` (the reference's synch_log, what its
-    web UI charts). Broker: spool backlog computed as files on disk
-    MINUS files the consumer's checkpoint has committed (read from the
-    file source's own log — exact, not mtime heuristics), with bytes.
+    count scan). Throughput: ``last_consumer`` / ``last_producer`` are
+    the newest monitor records (``{num, at}``, ``at`` = the commit's
+    ``committed_at``) in the ``history()`` of the target and of
+    ``_producer_state/<schema>/<table>`` — the reference's synch_log
+    rows, read from log entries, no Spark job. Only the retained
+    versions' records exist; a batch that committed nothing (deletes of
+    absent keys, a replayed append) left none; a producer round that
+    emitted nothing records ``num: 0``; a JDBC-sunk table's records go
+    to the log only; the separate monitor table older versions kept
+    under the warehouse is neither read nor written any more.
+    Broker: spool backlog computed as files on disk MINUS files the
+    consumer's checkpoint has committed (read from the file source's
+    own log — exact, not mtime heuristics), with bytes.
     Cursors: the binlog socket cursor file (file/pos/gtid_set) when
     present. Everything is best-effort: a missing piece reports as
     absent rather than failing the whole status."""
     import glob as _glob
     import os
-
-    from pyspark.sql import functions as F
 
     raw = _load(args.config)
     cfg = config_from_dict(raw)
@@ -1928,26 +1934,15 @@ def cmd_status(args) -> int:
             entry["files"] = t.file_stats()
             if args.counts:
                 entry["rows"] = t.count()
+        state = ParquetTable(
+            spark, f"{warehouse}/_producer_state/{spec.schema}/{spec.table}")
+        for side, tbl in (("consumer", t), ("producer", state)):
+            rec = next((h for h in reversed(tbl.history()) if h["info"]),
+                       None)
+            if rec is not None:
+                entry[f"last_{side}"] = {"num": rec["info"]["num"],
+                                         "at": rec["committed_at"]}
         out["tables"][name] = entry
-
-    log = ParquetTable(spark, f"{warehouse}/_synch_log")
-    if log.exists:
-        from pyspark.sql import Window as W
-
-        rows = (
-            log.read()
-            .withColumn("_rn", F.row_number().over(
-                W.partitionBy("schema", "table", "type")
-                .orderBy(F.col("created_at").desc())))
-            .filter(F.col("_rn") == 1)
-            .collect()
-        )
-        for r in rows:
-            key = f"{r['schema']}.{r['table']}"
-            if key in out["tables"]:
-                side = "producer" if r["type"] == 1 else "consumer"
-                out["tables"][key][f"last_{side}"] = {
-                    "num": r["num"], "at": str(r["created_at"])}
 
     events_dir = (raw["spark"] or {}).get("events_dir")
     if events_dir and os.path.isdir(events_dir):
@@ -2446,7 +2441,7 @@ def main(argv=None) -> int:
     p.add_argument("--config", required=True)
     p.add_argument(
         "--alias", default=None,
-        help="pipeline alias recorded in the _synch_log monitor table "
+        help="pipeline alias recorded in each commit's monitor record "
              "(reference parity: synch --alias)",
     )
     sub = p.add_subparsers(dest="cmd", required=True)

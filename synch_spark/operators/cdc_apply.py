@@ -67,6 +67,7 @@ def apply_cdc_batch(
     spec: TableSpec,
     value_columns: list[str] | None = None,
     epoch: str | None = None,
+    info: dict | None = None,
 ) -> None:
     """Merge one micro-batch of typed change events into ``table``.
 
@@ -81,11 +82,18 @@ def apply_cdc_batch(
     entry; a replay that finds it in the retained window skips the
     append. Streaming passes (checkpoint, batch, segment); direct batch
     callers can leave it None.
+
+    ``info``: the caller's record of the batch, stored in whichever
+    commit the apply makes (bootstrap overwrite, merge, or append —
+    see ``ParquetTable.overwrite``). An apply that commits nothing
+    (deletes of absent keys, a replayed append) stores no record.
     """
     if spec.engine in (Engine.COLLAPSING_MERGE_TREE, Engine.VERSIONED_COLLAPSING_MERGE_TREE):
-        _apply_collapsing(table, events, spec, value_columns, epoch=epoch)
+        _apply_collapsing(table, events, spec, value_columns, epoch=epoch,
+                          info=info)
     else:
-        _apply_merging(table, events, spec, value_columns, epoch=epoch)
+        _apply_merging(table, events, spec, value_columns, epoch=epoch,
+                       info=info)
 
 
 def _row_cols(events: DataFrame, value_columns: list[str] | None) -> list[str]:
@@ -100,13 +108,14 @@ def _apply_merging(
     spec: TableSpec,
     value_columns: list[str] | None,
     epoch: str | None = None,
+    info: dict | None = None,
 ) -> None:
     if not spec.has_pk:
         # no pk: reference skips delete/update and appends inserts only
         # (/root/reference/synch/replication/etl.py:33-35 analog)
         cols = _row_cols(events, value_columns)
         table.append(events.filter(F.col("action") == "insert").select(*cols),
-                     spec.partition_by, epoch=epoch)
+                     spec.partition_by, epoch=epoch, info=info)
         return
 
     pk = spec.pk
@@ -125,7 +134,7 @@ def _apply_merging(
                 # sampled base and its batch silently truncated — the
                 # loser-falls-through comment below would never trigger
                 table.overwrite(upserts, spec.partition_by,
-                                expected_base=-1, key=pk[0])
+                                expected_base=-1, key=pk[0], info=info)
                 return
             except ConcurrentWriteError:
                 # two consumers raced the FIRST batch: the loser falls
@@ -148,14 +157,16 @@ def _apply_merging(
         # on a lost race (commit_with_retry), so a concurrent commit
         # never sees masks computed against files it replaced
         commit_with_retry(
-            lambda: _merge(table, net.select(*pk), upserts, keys, n_up, spec),
+            lambda: _merge(table, net.select(*pk), upserts, keys, n_up, spec,
+                           info),
             retries=3)
     finally:
         net.unpersist()
 
 
 def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
-           keys: list, n_up: int, spec: TableSpec) -> None:
+           keys: list, n_up: int, spec: TableSpec,
+           info: dict | None = None) -> None:
     """One merge attempt against the current head: mask every target
     row whose pk is in the batch, append the net upserts, commit both
     in one entry anchored to the head it read."""
@@ -204,7 +215,8 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
         else F.col(f.name).cast(f.dataType) for f in schema])
           .coalesce(max(1, -(-n_up // 2_000_000))) if n_up else None)
     table.overwrite_cow_files(df, remove, expected_base=base, key=pk[0],
-                              partition_by=spec.partition_by, dvs=dvs)
+                              partition_by=spec.partition_by, dvs=dvs,
+                              info=info)
 
 
 def _apply_collapsing(
@@ -213,6 +225,7 @@ def _apply_collapsing(
     spec: TableSpec,
     value_columns: list[str] | None,
     epoch: str | None = None,
+    info: dict | None = None,
 ) -> None:
     """W6: append-only write with sign = +1 insert / -1 delete.
 
@@ -228,7 +241,7 @@ def _apply_collapsing(
     signed = annotate_sign(events, spec.sign_column)  # T6, one definition
     out = signed.select(*cols, spec.sign_column,
                         F.col("event_unixtime").alias("_event_unixtime"))
-    table.append(out, spec.partition_by, epoch=epoch)
+    table.append(out, spec.partition_by, epoch=epoch, info=info)
 
 
 def compact_table(

@@ -8,10 +8,10 @@ this engine instead rewrote the whole table on every DDL
 ``ADD COLUMN`` into a full-table rewrite while the stream's DDL barrier
 holds the pipeline. This module restores the metadata-only behavior on
 plain parquet, Delta-style: the logical schema is a tiny JSON document
-committed atomically WITH each table version (``v=<n>/_schema.json`` is
-written into the staging dir before the version promote-rename, so a
-crash can never separate data from schema), and reads reconcile the
-physical files against it.
+committed atomically WITH each table version (it rides in the
+version's log entry, ``ParquetTable.commit_schema``, so a crash can
+never separate data from schema), and reads reconcile the physical
+files against it.
 
 Reconciliation mechanics:
 
@@ -45,13 +45,11 @@ trade Delta's column-mapping mode makes).
 from __future__ import annotations
 
 import json
-import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-SCHEMA_FILE = "_schema.json"
 GEN_COL = "_sgen"
 
 _INT_CHAIN = ["tinyint", "smallint", "int", "bigint"]
@@ -136,9 +134,6 @@ class TableSchema:
     def active_physical(self) -> set[str]:
         return {p for c in self.columns for p in c.physical}
 
-    def logical_names(self) -> list[str]:
-        return [c.name for c in self.columns]
-
     # -- read-side reconciliation --------------------------------------------
     def read_struct(self):
         """Explicit read schema over every physical name (plus _sgen when
@@ -167,26 +162,6 @@ class TableSchema:
 
     def reconcile(self, raw: DataFrame) -> DataFrame:
         return raw.select(*self.select_exprs())
-
-
-def load_schema(version_dir: str) -> TableSchema | None:
-    p = os.path.join(version_dir, SCHEMA_FILE)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return TableSchema.loads(f.read())
-
-
-def save_schema(version_dir: str, ts: TableSchema | None) -> None:
-    p = os.path.join(version_dir, SCHEMA_FILE)
-    if ts is None or ts.is_trivial:
-        if os.path.exists(p):
-            os.remove(p)
-        return
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(ts.dumps())
-    os.replace(tmp, p)
 
 
 def is_widening(old: str, new: str) -> bool:

@@ -110,7 +110,7 @@ def commit_with_retry(txn, retries: int = 5, backoff_s: float = 0.05):
     propagates.
 
     This is the multi-writer story: each host stages its own files
-    (``_staging_dir`` is per-writer), publication is an atomic
+    (``_stage`` writes a per-writer dir), publication is an atomic
     exclusive-create of the version's log entry, and losers rebuild
     from the new current version — serializable commits without a lock
     service, the Delta/Hudi optimistic pattern.
@@ -414,8 +414,16 @@ class ParquetTable:
         self._snap_cache[v] = snap
         return snap
 
-    def _staging_dir(self) -> str:
-        return os.path.join(self.root, f".staging-{uuid.uuid4().hex[:12]}")
+    def _stage(self, df: DataFrame, partition_by: str | None) -> list[str]:
+        """Write ``df`` as parquet into a private ``.staging-*`` dir and
+        pool the files (``_promote_files``); returns the pool-relative
+        paths. Nothing is visible to readers until an entry names them."""
+        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:12]}")
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(staging)
+        return self._promote_files(staging)
 
     def _promote_files(self, staging: str) -> list[str]:
         """Move staged parquet files into the shared ``data/`` pool,
@@ -462,6 +470,7 @@ class ParquetTable:
         data_change: bool = True,
         op: str | None = None,
         epoch: str | None = None,
+        info: dict | None = None,
     ) -> dict:
         if force_ckpt or snap is None or v % CKPT_EVERY == 0:
             gone = set(remove)
@@ -505,6 +514,10 @@ class ParquetTable:
             e["dc"] = False
         if op:
             e["op"] = op
+        if info:
+            # the writer's own record of the commit (a micro-batch's
+            # monitor row), published with the entry and never patched
+            e["info"] = info
         self._attach_epochs(e, v, epoch)
         return e
 
@@ -856,6 +869,7 @@ class ParquetTable:
         op: str | None = None,
         epoch: str | None = None,
         key: str | None = None,
+        info: dict | None = None,
     ) -> None:
         """``cluster_by`` range-partitions + sorts rows on the given key
         before writing, so every data file covers a narrow, mostly
@@ -880,7 +894,13 @@ class ParquetTable:
 
         ``key``: the merge key, for writers that have one — each new
         file's key range and bloom are written by this commit (see
-        ``_index``); the same argument on ``overwrite_cow_files``."""
+        ``_index``); the same argument on ``overwrite_cow_files``.
+
+        ``info``: a small JSON-able record stored in the entry as
+        ``"info"`` and reported by ``history()`` — the streaming
+        consumer's per-batch monitor row rides here (Delta's
+        ``commitInfo``); the same argument on ``overwrite_cow_files``
+        and ``append``."""
         base = self.current_version() if expected_base is None else expected_base
         try:
             snap = self.snapshot(base) if base >= 0 else None
@@ -895,12 +915,7 @@ class ParquetTable:
             cols = ([partition_by] if partition_by else []) + list(cluster_by)
             df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
         sschema = df.schema.json()
-        staging = self._staging_dir()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(staging)
-        rels = self._promote_files(staging)
+        rels = self._stage(df, partition_by)
         entry = self._make_entry(
             base + 1,
             self._index(rels, key),
@@ -912,6 +927,7 @@ class ParquetTable:
             data_change=data_change,
             op=op or ("optimize" if not data_change else "overwrite"),
             epoch=epoch,
+            info=info,
         )
         self._write_entry(entry, cleanup_rels=rels)
 
@@ -923,6 +939,7 @@ class ParquetTable:
         key: str | None = None,
         partition_by: str | None = None,
         dvs: dict | None = None,
+        info: dict | None = None,
     ) -> None:
         """The merge commit: ONE delta entry that adds ``df``'s rows as
         new files (None: no rows), removes ``remove_rels`` (relpaths of
@@ -941,7 +958,7 @@ class ParquetTable:
         race frees this commit's new files and DVs."""
         v_old = self.current_version() if expected_base is None else expected_base
         if v_old < 0:
-            self.overwrite(df, partition_by, key=key)
+            self.overwrite(df, partition_by, key=key, info=info)
             return
         try:
             snap = self.snapshot(v_old)
@@ -952,13 +969,8 @@ class ParquetTable:
             ) from e
         rels: list[str] = []
         if df is not None:
-            df = self._stamp_gen(df, snap.schema_doc)
-            staging = self._staging_dir()
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(staging)
-            rels = self._promote_files(staging)
+            rels = self._stage(self._stamp_gen(df, snap.schema_doc),
+                               partition_by)
         add = self._index(rels, key)
         written = list(rels)
         for rel, rows in (dvs or {}).items():
@@ -967,11 +979,12 @@ class ParquetTable:
             dv.write(self._abs(written[-1]), rows)
             add[rel] = {**snap.files[rel], dv.DV_KEY: name}
         remove = [r for r in remove_rels if r in snap.files]
-        entry = self._make_entry(v_old + 1, add, remove, snap, op="merge")
+        entry = self._make_entry(v_old + 1, add, remove, snap, op="merge",
+                                 info=info)
         self._write_entry(entry, cleanup_rels=written)
 
     def append(self, df: DataFrame, partition_by: str | None = None,
-               epoch: str | None = None) -> None:
+               epoch: str | None = None, info: dict | None = None) -> None:
         """Pure-insert fast path: pool the new files and publish a delta
         entry that only ADDS them. Safe under concurrency by
         construction — an add-only commit conflicts with nothing, so a
@@ -979,7 +992,7 @@ class ParquetTable:
         restaging (the pooled files are reused). Used by the collapsing
         engines' append-only write strategy
         (/root/reference/synch/writer/collapsing_merge_tree.py:37-58 —
-        never deletes, only appends) and the monitor log.
+        never deletes, only appends) and the dead-letter tables.
 
         ``epoch``: idempotence marker for at-least-once callers
         (streaming micro-batch replays). The marker rides in the commit
@@ -1002,19 +1015,14 @@ class ParquetTable:
                 # sampled base and its rows silently truncated instead
                 # of surfacing ConcurrentWriteError -> append fallback
                 self.overwrite(df, partition_by, epoch=epoch,
-                               expected_base=-1)
+                               expected_base=-1, info=info)
                 return
             except ConcurrentWriteError:
                 # another writer created version 0 between the check and
                 # the commit — append against the now-existing table
                 v = self.current_version()
-        df = self._stamp_gen(df, self.snapshot(v).schema_doc)
-        staging = self._staging_dir()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(staging)
-        rels = self._promote_files(staging)
+        rels = self._stage(self._stamp_gen(df, self.snapshot(v).schema_doc),
+                           partition_by)
         add = {r: {} for r in rels}
         for attempt in range(8):
             # re-check the epoch EVERY iteration: two concurrent replays
@@ -1030,7 +1038,7 @@ class ParquetTable:
             base = self.current_version()
             snap = self.snapshot(base) if base >= 0 else None
             entry = self._make_entry(base + 1, add, [], snap, op="append",
-                                     epoch=epoch)
+                                     epoch=epoch, info=info)
             try:
                 self._write_entry(entry)  # no cleanup: rels are reusable
                 return
@@ -1150,7 +1158,8 @@ class ParquetTable:
         delta), files added/removed by the commit, live file count and
         bytes after it, whether the commit carried a metadata-only
         schema change (None for checkpoints, which always embed one),
-        and the entry file's publish mtime as the commit timestamp."""
+        the entry file's publish mtime as the commit timestamp, and the
+        writer's ``info`` record (None when the commit carried none)."""
         out: list[dict] = []
         for v in self.versions():
             try:
@@ -1203,6 +1212,7 @@ class ParquetTable:
                 "data_change": e.get("dc", True),
                 "op": e.get("op"),
                 "committed_at": round(mtime, 3),
+                "info": e.get("info"),
             })
         return out
 
@@ -1210,15 +1220,6 @@ class ParquetTable:
         return self.read().count()
 
     # -- store operations: restore / clone / change feed ---------------------
-    def _copy_pool_file(self, src_root: str, rel: str, new_rel: str) -> None:
-        """Duplicate one pool data file (and its bloom sidecar, if built)
-        under a new identity. A plain byte copy — on object storage this
-        is a single server-side COPY per object (no download, no decode,
-        no Spark job); hard links are deliberately not used because the
-        data plane must not depend on them (test_no_hard_link_dependence,
-        object-storage semantics)."""
-        _copy_one_pool_file(src_root, self.root, rel, new_rel)
-
     def _copy_pool_files(self, src_root: str, pairs: list[tuple]) -> None:
         """Copy many (rel, new_rel) pool files from ``src_root`` into this
         table. Small diffs copy in a driver loop (no job overhead); past

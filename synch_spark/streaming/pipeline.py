@@ -18,8 +18,10 @@ Parity map (SURVEY §2.3-§2.4, reference EP3
   at-least-once delivery yields exactly-once table state (an upgrade
   over the reference's skip-error-and-hope, continuous.py:120-152)
 - graceful drain (W9)              -> query.stop() / availableNow trigger
-- monitoring (E4)                  -> per-flush counts appended to a
-  `_synch_log` table (factory.py:129-151 analog)
+- monitoring (E4)                  -> per-table, per-batch record
+  {alias, batch, num, type} stored in the commit the apply makes
+  (``history()``'s ``info``, Delta's commitInfo) and logged as one JSON
+  line (the reference's synch_log rows, factory.py:129-151)
 """
 
 from __future__ import annotations
@@ -60,65 +62,17 @@ def hidden_target_columns(spec) -> set[str]:
 
     return {spec.sign_column, "_event_unixtime", GEN_COL}
 
-MONITOR_SCHEMA = T.StructType(
-    [
-        T.StructField("alias", T.StringType()),
-        T.StructField("schema", T.StringType()),
-        T.StructField("table", T.StringType()),
-        T.StructField("num", T.LongType()),
-        T.StructField("type", T.IntegerType()),  # 1=producer 2=consumer
-        T.StructField("created_at", T.TimestampType()),
-    ]
-)
-
-
-#: fold the append-only monitor log back into a few files every N
-#: appends (each append is a one-file commit)
-MONITOR_COMPACT_EVERY = 128
-
-
-def log_monitor_row(spark, warehouse: str, alias: str, schema: str,
-                    table: str, num: int, row_type: int) -> None:
-    """BEST-EFFORT monitor row into ``<warehouse>/_synch_log`` (the
-    reference's synch_log table, factory.py:129-151). Producer (type=1)
-    and consumer (type=2) run as SEPARATE Spark applications appending
-    concurrently; ParquetTable.append is commit-race-safe (add-only
-    delta entries retried against the new head), and any residual
-    failure is logged and swallowed — a monitoring row must never kill
-    a produce round or a micro-batch."""
+def log_monitor_row(schema: str, table: str, info: dict) -> None:
+    """One JSON line at INFO on the ``synch_spark`` logger per table per
+    micro-batch or produce round: the long-term monitor series for
+    whatever collects logs (no Spark job, no file). The same record
+    rides in the table's commit (``ParquetTable.history()``'s
+    ``info``); for JDBC-sunk tables this line is the only record."""
     import logging
 
-    try:
-        row = spark.createDataFrame(
-            [(alias, schema, table, num, row_type)], MONITOR_SCHEMA[:5]
-        ).withColumn("created_at", F.current_timestamp())
-        t = ParquetTable(spark, f"{warehouse}/_synch_log")
-        t.append(row)
-        v = t.current_version()
-        if v > 0 and v % MONITOR_COMPACT_EVERY == 0:
-            # every append is a one-file commit, so the file list (and
-            # each checkpoint entry naming it) grows one entry per
-            # monitor row forever; fold the log back into a handful of
-            # files periodically. Optimistic: a concurrent appender
-            # winning the version is fine — compaction retries next
-            # multiple of 128.
-            from synch_spark.sources.table import commit_with_retry
-
-            def _compact():
-                # Pin the base BEFORE reading and read that explicit
-                # version: t.read() fixes its file list at plan time, so
-                # sampling expected_base afterwards would let an append
-                # that lands in between commit our OLDER content against
-                # the NEWER base — silently dropping the concurrent row.
-                base = t.current_version()
-                t.overwrite(t.read(base).coalesce(1), expected_base=base)
-
-            commit_with_retry(_compact, retries=2)
-    except Exception as e:  # noqa: BLE001 — monitoring is best-effort
-        logging.getLogger("synch_spark").warning(
-            "monitor row dropped for %s.%s (type=%s): %s",
-            schema, table, row_type, e,
-        )
+    logging.getLogger("synch_spark").info(
+        "monitor %s", json.dumps({"schema": schema, "table": table, **info},
+                                 default=str))
 
 
 @dataclass
@@ -131,7 +85,6 @@ class CdcPipeline:
     checkpoint_dir: str
     value_schemas: dict[str, T.StructType] = field(default_factory=dict)
     alias: str = "default"
-    monitor: bool = True
     # incremental materialized views, refreshed in the SAME micro-batch as
     # the table apply (operators.mv); keyed implicitly by their .source
     views: list = field(default_factory=list)
@@ -267,14 +220,13 @@ class CdcPipeline:
                 .collect()
             )
             # filter raw events FIRST (skip semantics distinguish standalone
-            # deletes from update-halves), then split updates
-            data = split_updates(
-                filter_dml(
-                    batch.filter(F.col("action") != "query"),
-                    self.cfg.skip_dmls,
-                    self.cfg.skip_delete_tables,
-                    self.cfg.skip_update_tables,
-                )
+            # deletes from update-halves); each segment splits updates
+            # after counting its source events
+            data = filter_dml(
+                batch.filter(F.col("action") != "query"),
+                self.cfg.skip_dmls,
+                self.cfg.skip_delete_tables,
+                self.cfg.skip_update_tables,
             )
             # a NULL event_unixtime fails BOTH sides of every segment
             # filter below — with a DDL in the batch the row would apply
@@ -311,14 +263,13 @@ class CdcPipeline:
         epoch = (f"{self.checkpoint_dir}:{epoch_id}:{segment}"
                  if epoch_id is not None else None)
         # one merge per table present in the segment; table list is tiny.
-        # Piggyback the per-table row counts on the same scan: the
-        # monitor log previously launched one extra count() job per
-        # table per segment over the persisted batch just for the
-        # best-effort _synch_log row
+        # The same scan counts each table's source events (an update is
+        # one) for its monitor record
         counts = {
             (r["schema"], r["table"]): r["count"]
             for r in seg.groupBy("schema", "table").count().collect()
         }
+        seg = split_updates(seg)
         present = list(counts)
         for schema, tbl in present:
             spec = self.cfg.tables.get(f"{schema}.{tbl}")
@@ -341,14 +292,16 @@ class CdcPipeline:
                                  debezium_types=debezium_types,
                                  decimal_mode=self._decimal_mode(debezium_types),
                                  string_values=self.string_values)
+            # the monitor record (type 2 = consumer; the producer's is 1)
+            info = {"alias": self.alias, "batch": epoch_id,
+                    "num": counts[(schema, tbl)], "type": 2}
             sink = self.jdbc_sinks.get(spec.qualified_name)
             if sink is not None:
                 sink.apply_batch(typed, spec)
-                if self.monitor:
-                    self._log(spec, counts[(schema, tbl)])
+                log_monitor_row(schema, tbl, info)
                 continue
             table = self.table_for(spec)
-            apply_cdc_batch(table, typed, spec, epoch=epoch)
+            apply_cdc_batch(table, typed, spec, epoch=epoch, info=info)
             for view in self.views:
                 if view.source == spec.qualified_name:
                     # base read AFTER apply: min/max partial recompute must
@@ -357,8 +310,7 @@ class CdcPipeline:
                     # micro-batch would double-count without the guard
                     view.refresh_from_batch(typed, base=table.read(),
                                             epoch=epoch)
-            if self.monitor:
-                self._log(spec, counts[(schema, tbl)])
+            log_monitor_row(schema, tbl, info)
 
     def _restore_evolved_schema(self, spec: TableSpec) -> None:
         """Once per pipeline lifetime per table: if the MANAGED table
@@ -544,10 +496,6 @@ class CdcPipeline:
         vschema = self.value_schemas.get(spec.qualified_name)
         if vschema is not None:
             self.value_schemas[spec.qualified_name] = _evolve_schema(vschema, ops)
-
-    def _log(self, spec: TableSpec, num: int) -> None:
-        log_monitor_row(self.spark, self.warehouse, self.alias,
-                        spec.schema, spec.table, num, 2)
 
     # -- stream wiring -------------------------------------------------------
     def start_file_stream(

@@ -422,3 +422,35 @@ def test_concurrent_writers_threaded_stress(spark, tmp_path):
     assert len(rows) == 10 + 40
     for wid in range(4):
         assert all(rows[k] == f"w{wid}" for k in range(100 + wid * 10, 110 + wid * 10))
+
+
+def test_apply_record_rides_in_the_commit_it_makes(spark, tmp_path):
+    """``info`` lands in whichever commit the apply makes — bootstrap
+    overwrite, merge, collapsing append — and history() reports it; an
+    apply that commits nothing (deletes of absent keys, a replayed
+    append) leaves no record and no version."""
+    t = ParquetTable(spark, str(tmp_path / "r"))
+    rec = {"alias": "a", "batch": 0, "num": 2, "type": 2}
+    apply_cdc_batch(t, _typed(spark, [
+        ("insert", None, {"id": 1, "amount": "1"}, 1),
+        ("insert", None, {"id": 2, "amount": "2"}, 2)]), spec(), info=rec)
+    apply_cdc_batch(t, _typed(spark, [
+        ("update", {"id": 1, "amount": "1"}, {"id": 1, "amount": "9"}, 3)]),
+        spec(), info={**rec, "batch": 1, "num": 1})
+    apply_cdc_batch(t, _typed(spark, [
+        ("delete", {"id": 7, "amount": "7"}, None, 4)]),
+        spec(), info={**rec, "batch": 2, "num": 1})
+    hist = t.history()
+    assert [(h["op"], h["info"]["batch"]) for h in hist] == [
+        ("overwrite", 0), ("merge", 1)]
+    assert hist[-1]["info"] == {**rec, "batch": 1, "num": 1}
+
+    c = ParquetTable(spark, str(tmp_path / "c"))
+    ins = _typed(spark, [("insert", None, {"id": 1, "amount": "1"}, 1)])
+    for b in (0, 1):
+        apply_cdc_batch(c, ins, spec(Engine.COLLAPSING_MERGE_TREE),
+                        epoch=f"e{b}", info={**rec, "batch": b, "num": 1})
+    apply_cdc_batch(c, ins, spec(Engine.COLLAPSING_MERGE_TREE),
+                    epoch="e1", info={**rec, "batch": 9, "num": 1})
+    assert [(h["op"], h["info"]["batch"]) for h in c.history()] == [
+        ("overwrite", 0), ("append", 1)]

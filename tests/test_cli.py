@@ -90,15 +90,22 @@ def test_cli_produce_consume_check_loop(tmp_path, capsys, spark):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["ok"] is True and out["check"]["db.region"]["target"] == 4
 
-    # monitor log carries BOTH sides: producer rows (type=1, ref
-    # reader/__init__.py:84) and consumer rows (type=2, continuous.py:154)
+    # BOTH sides leave monitor records in the commits they make:
+    # producer rounds (type=1, ref reader/__init__.py:84) in the
+    # _producer_state table, consumer batches (type=2,
+    # continuous.py:154) in the target; no separate monitor table
     from synch_spark.sources.table import ParquetTable
 
-    log = ParquetTable(spark, str(tmp_path / "wh" / "_synch_log")).read()
-    types = {r["type"] for r in log.select("type").distinct().collect()}
-    assert types == {1, 2}
-    produced = sum(r["num"] for r in log.filter("type = 1").collect())
+    wh = tmp_path / "wh"
+    prod = [h["info"] for h in ParquetTable(
+        spark, str(wh / "_producer_state" / "db" / "region")).history()]
+    cons = [h["info"] for h in ParquetTable(
+        spark, str(wh / "db" / "region")).history()]
+    assert {i["type"] for i in prod} == {1}
+    assert {i["type"] for i in cons} == {2}
+    produced = sum(i["num"] for i in prod)
     assert produced >= 5 + 2  # first snapshot + the two-change diff
+    assert not (wh / "_synch_log").exists()
 
 
 def test_cli_etl_then_check(tmp_path, capsys, spark):
@@ -1382,6 +1389,15 @@ def test_cli_status_snapshot(tmp_path, capsys, spark):
     assert t["exists"] and t["rows"] == 10 and t["files"]["files"] >= 1
     assert t["last_producer"]["num"] == 10
     assert t["last_consumer"]["num"] == 10
+    # the same counts, read straight from the two tables' commit records
+    from synch_spark.sources.table import ParquetTable
+
+    wh = tmp_path / "wh"
+    state = ParquetTable(spark, str(wh / "_producer_state" / "db" / "t"))
+    target = ParquetTable(spark, str(wh / "db" / "t"))
+    assert state.history()[-1]["info"]["num"] == 10
+    assert target.history()[-1]["info"]["num"] == 10
+    assert t["last_consumer"]["at"] == target.history()[-1]["committed_at"]
     sp = out["spool"]
     n_disk = len([f for f in glob.glob(str(ev_dir / "*"))
                   if os.path.isfile(f)])
@@ -1397,6 +1413,49 @@ def test_cli_status_snapshot(tmp_path, capsys, spark):
     out = _json.loads(capsys.readouterr().out)
     assert out["spool"]["backlog_files"] == 1
     assert out["spool"]["backlog_bytes"] == extra.stat().st_size
+
+
+def test_cli_status_reads_commit_records(tmp_path, capsys, spark):
+    """`status` takes a table's last consumer batch from the monitor
+    record in the target's newest commit: one apply_batch, no produce
+    step, no monitor table, and no producer record to report."""
+    import yaml
+
+    from synch_spark.config import SyncConfig, TableSpec
+    from synch_spark.events import RAW_EVENT_SCHEMA
+    from synch_spark.sources.table import ParquetTable
+    from synch_spark.streaming.pipeline import CdcPipeline
+    from pyspark.sql import types as T
+
+    wh = tmp_path / "wh"
+    cfg = {
+        "core": {"insert_num": 1000, "insert_interval": 1},
+        "source_dbs": [{"databases": [{"database": "db", "tables": [
+            {"table": "t", "pk": ["id"]}]}]}],
+        "spark": {"warehouse": str(wh),
+                  "checkpoint_dir": str(tmp_path / "ckpt")},
+    }
+    p = tmp_path / "synch.yaml"
+    p.write_text(yaml.dump(cfg))
+    sc = SyncConfig()
+    sc.add_table(TableSpec(schema="db", table="t", pk=("id",)))
+    pipe = CdcPipeline(
+        spark=spark, cfg=sc, warehouse=str(wh),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        value_schemas={"db.t": T.StructType(
+            [T.StructField("id", T.LongType())])})
+    rows = [("db", "t", "insert", None, f'{{"id": {i}}}', 100 + i)
+            for i in range(3)]
+    pipe.apply_batch(spark.createDataFrame(rows, RAW_EVENT_SCHEMA), 4)
+    capsys.readouterr()
+    assert main(["--config", str(p), "status"]) == 0
+    t = json.loads(capsys.readouterr().out)["tables"]["db.t"]
+    newest = ParquetTable(spark, str(wh / "db" / "t")).history()[-1]
+    assert newest["info"] == {"alias": "default", "batch": 4, "num": 3,
+                              "type": 2}
+    assert t["last_consumer"] == {"num": 3, "at": newest["committed_at"]}
+    assert "last_producer" not in t
+    assert not (wh / "_synch_log").exists()
 
 
 @pytest.mark.slow

@@ -108,7 +108,6 @@ def test_mv_refreshes_inside_cdc_pipeline(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         value_schemas={"db.t": vschema},
         views=[view],
-        monitor=False,
     )
     events_dir = tmp_path / "events"
     events_dir.mkdir()
@@ -404,7 +403,6 @@ def test_join_mv_refreshes_inside_cdc_pipeline(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         value_schemas={"db.f": vschema},
         views=[view],
-        monitor=False,
     )
     events_dir = tmp_path / "events"
     events_dir.mkdir()

@@ -192,7 +192,7 @@ def test_null_ts_ddl_segments_apply_once_and_execute_ddl(spark, tmp_path):
     pipe = CdcPipeline(spark=spark, cfg=cfg,
                        warehouse=str(tmp_path / "wh"),
                        checkpoint_dir=str(tmp_path / "ckpt"),
-                       value_schemas={"db.t": vschema}, monitor=False)
+                       value_schemas={"db.t": vschema})
     rows = [
         ("db", "t", "query", None,
          '{"query": "ALTER TABLE t ADD COLUMN note VARCHAR(8)"}', None),
@@ -229,7 +229,7 @@ def test_poison_ddl_payload_dead_letters(spark, tmp_path):
     pipe = CdcPipeline(spark=spark, cfg=cfg,
                        warehouse=str(tmp_path / "wh"),
                        checkpoint_dir=str(tmp_path / "ckpt"),
-                       value_schemas={"db.t": vschema}, monitor=False)
+                       value_schemas={"db.t": vschema})
     for bad_after in (None, "not json", '{"no_query_key": 1}',
                       '{"query": 42}'):
         rows = [

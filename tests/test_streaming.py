@@ -3,11 +3,12 @@
 Mirrors the reference's consumer tests but replayable: JSON event files
 stand in for the broker; availableNow processes everything then stops.
 Covers: update-split, last-wins dedup, delete, DDL barrier mid-stream,
-checkpoint resume, monitoring log."""
+checkpoint resume, the per-batch monitor record in the commit."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import types as T
@@ -76,9 +77,11 @@ def test_stream_cdc_end_to_end(spark, tmp_path, pipeline):
     table = ParquetTable(spark, f"{pipeline.warehouse}/db/t")
     rows = {r["id"]: r["amount"] for r in table.read().select("id", "amount").collect()}
     assert rows == {1: 9.0, 3: 3.0}
-    # monitoring log got a consumer row
-    log = ParquetTable(spark, f"{pipeline.warehouse}/_synch_log").read()
-    assert log.filter("type = 2").count() >= 1
+    # the batch's monitor record rides in the commit it made (5 events
+    # in, stream batch 0); no separate monitor table is written
+    assert table.history()[-1]["info"] == {
+        "alias": "default", "batch": 0, "num": 5, "type": 2}
+    assert not os.path.exists(f"{pipeline.warehouse}/_synch_log")
 
 
 def test_stream_resume_from_checkpoint(spark, tmp_path, pipeline):
@@ -208,38 +211,15 @@ def test_kafka_stream_reports_missing_connector(spark, tmp_path):
         pipe.start_kafka_stream("localhost:9092", "synch.db")
 
 
-def test_monitor_log_self_compacts(spark, tmp_path, monkeypatch):
-    """The monitor log is append-only (one file per row); without
-    periodic self-compaction its file list — and every checkpoint log
-    entry naming it — grows forever. At the compaction interval the
-    log folds back to a handful of files with every row intact."""
-    from synch_spark.sources.table import ParquetTable
-    from synch_spark.streaming import pipeline as sp
-
-    monkeypatch.setattr(sp, "MONITOR_COMPACT_EVERY", 5)
-    wh = str(tmp_path / "wh")
-    for i in range(7):
-        sp.log_monitor_row(spark, wh, "a1", "db", "t", i, 1)
-    t = ParquetTable(spark, f"{wh}/_synch_log")
-    n_files = len(t.snapshot().files)
-    assert n_files <= 4, f"compaction did not fold the log: {n_files} files"
-    rows = t.read().collect()
-    assert len(rows) == 7
-    assert {r["num"] for r in rows} == set(range(7))
-
-
-def test_monitor_append_adds_exactly_one_data_file(spark, tmp_path):
-    """A one-row monitor append pools one data file: the empty part
-    files Spark writes for the frame's empty tasks are dropped at
-    promotion instead of joining every later read."""
-    from synch_spark.sources.table import ParquetTable
-    from synch_spark.streaming import pipeline as sp
-
-    wh = str(tmp_path / "wh")
-    sp.log_monitor_row(spark, wh, "a1", "db", "t", 0, 1)
-    t = ParquetTable(spark, f"{wh}/_synch_log")
+def test_one_row_append_adds_exactly_one_data_file(spark, tmp_path):
+    """A one-row append pools one data file: the empty part files
+    Spark writes for the frame's empty tasks are dropped at promotion
+    instead of joining every later read."""
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    row = "alias string, num long"
+    t.append(spark.createDataFrame([("a1", 0)], row))
     before = set(t.snapshot().files)
-    sp.log_monitor_row(spark, wh, "a1", "db", "t", 1, 1)
+    t.append(spark.createDataFrame([("a1", 1)], row))
     added = set(t.snapshot().files) - before
     assert len(added) == 1, f"one row pooled {len(added)} files"
     assert t.read().count() == 2

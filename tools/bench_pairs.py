@@ -9,8 +9,9 @@ Each pair runs ``perfbench/run.py`` once on the parent and once on the
 change (this checkout, committed or not), same workload and seed, the
 side that goes first alternating from pair to pair so a host slowing
 down or speeding up does not favour one side. The parent is checked out
-with ``git worktree`` under ``/tmp`` and the worktree is removed at exit;
-``--parent-tree`` uses an existing checkout of the parent instead.
+with ``git worktree`` under the system temp dir (``$TMPDIR``) and the
+worktree is removed at exit; ``--parent-tree`` uses an existing
+checkout of the parent instead.
 
 For each workload and metric it prints the median and quartiles of each
 side and how many pairs each side won. Graded and per-layer metrics take
@@ -52,8 +53,8 @@ def _args(argv):
 
 
 def _parent_tree(rev: str) -> str:
-    """A detached worktree of ``rev`` under /tmp, removed at exit."""
-    path = tempfile.mkdtemp(prefix="bench-parent-", dir="/tmp")
+    """A detached worktree of ``rev`` under the temp dir, removed at exit."""
+    path = tempfile.mkdtemp(prefix="bench-parent-")
     os.rmdir(path)
     subprocess.run(["git", "-C", REPO, "worktree", "add", "--detach", path,
                     rev], check=True, stdout=subprocess.DEVNULL)
