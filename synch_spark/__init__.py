@@ -6,8 +6,8 @@ into ClickHouse), re-expressed Spark-first:
 
 - full-snapshot ETL        -> partitioned read -> managed parquet table
 - continuous CDC           -> Structured Streaming + foreachBatch apply
-- ClickHouse engine semantics (Replacing/Collapsing/VersionedCollapsing
-  MergeTree) -> native DataFrame window/aggregate views
+- ClickHouse engine semantics -> Replacing: the merge keeps the
+  max-version row; (Versioned)Collapsing: DataFrame window/aggregate views
 - DDL sync (ALTER translate) -> schema evolution on parquet tables
 - count/checksum verification, per-batch monitor records in the commit log
 - beyond-reference LLM-data-pipeline operators: dedup (exact, minhash

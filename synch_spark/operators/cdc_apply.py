@@ -7,15 +7,17 @@ engine-specific ``handle_event`` accumulators:
 - W3 in-batch last-wins dedup: the reference keeps a dict keyed by pk so
   a later event for the same pk overwrites an earlier one
   (/root/reference/synch/writer/merge_tree.py:63-85). Here: window over
-  pk ordered by (event_unixtime desc, action_seq desc), row_number()=1 —
-  a single pk-partitioned exchange, map-side combinable, skew-safe
-  under AQE.
+  pk ordered by (event_unixtime, action_seq) desc, row_number()=1 — a
+  single pk-partitioned exchange, skew-safe under AQE.
 - W5 delete-before-insert: the reference issues ALTER DELETE for all
   deleted pks before the batch insert
   (/root/reference/synch/replication/continuous.py:122-135). Compaction
   makes this order-free: each pk resolves to ONE net action (the
   latest), so delete+reinsert in one batch nets to insert, and
   insert+delete nets to delete. Equivalent final state, one pass.
+- Q2 ReplacingMergeTree(version) keeps each pk's max-version row. The
+  merge decides it once, in the batch (compact_batch) and against the
+  stored row (_merge), so FINAL reads return the stored rows.
 - The merge itself is MERGE emulation without Delta, one path for
   every pk-keyed table (partitioned or not, with or without key stats):
   the stats+bloom pruned candidate files are semi-joined with the
@@ -37,11 +39,12 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from synch_spark.config import Engine, TableSpec, WIRE_SEQ_COL
 from synch_spark.operators import engines
-from synch_spark.sources.table import ParquetTable
+from synch_spark.sources.table import ConcurrentWriteError, ParquetTable
 
 
-def compact_batch(events: DataFrame, pk: tuple[str, ...]) -> DataFrame:
-    """W3: reduce a batch to one net event per pk (last-wins).
+def compact_batch(events: DataFrame, pk: tuple[str, ...],
+                  version: str | None = None) -> DataFrame:
+    """W3: reduce a batch to one net event per pk.
 
     ``events`` must already have typed row columns (events.parse_values)
     including the pk columns, plus action/event_unixtime/action_seq.
@@ -52,13 +55,35 @@ def compact_batch(events: DataFrame, pk: tuple[str, ...]) -> DataFrame:
     resolve in wire order, while an update's delete+insert halves (same
     wire seq) still resolve by action_seq. Absent/null seqs sort as 0 —
     the pre-upgrade arbitrary-tie contract.
+
+    Without ``version`` the latest event wins. With it, a pk nets to its
+    latest event if that is a delete (a delete removes the pk whatever
+    its version), else to the highest-version upsert after its last
+    delete — a tie goes to the later event, a NULL version loses — and
+    ``_deleted`` says whether the batch deleted the pk. All windows
+    share the pk partitioning: one exchange.
     """
-    keys = [F.col("event_unixtime").desc()]
+    keys = [F.col("event_unixtime")]
     if WIRE_SEQ_COL in events.columns:
-        keys.append(F.coalesce(F.col(WIRE_SEQ_COL), F.lit(0)).desc())
-    keys.append(F.col("action_seq").desc())
-    w = W.partitionBy(*pk).orderBy(*keys)
-    return events.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+        keys.append(F.coalesce(F.col(WIRE_SEQ_COL), F.lit(0)))
+    keys.append(F.col("action_seq"))
+    order = F.struct(*keys)
+    out, rank = events.withColumn("_ord", order), [F.col("_ord").desc()]
+    if version is not None:
+        every = W.partitionBy(*pk)
+        dele = F.col("action") == "delete"
+        out = out.select("*", F.max(order).over(every).alias("_last"),
+                         F.max(F.when(dele, order)).over(every).alias("_del"))
+        # the latest delete, or the upserts after the last delete
+        out = (out.filter(F.when(dele, F.col("_ord") == F.col("_last"))
+                          .otherwise(F.col("_del").isNull()
+                                     | (F.col("_ord") > F.col("_del"))))
+               .withColumn("_deleted", F.col("_del").isNotNull())
+               .drop("_last", "_del"))
+        rank.insert(0, F.col(version).desc_nulls_last())
+    w = W.partitionBy(*pk).orderBy(*rank)
+    return (out.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn", "_ord"))
 
 
 def apply_cdc_batch(
@@ -110,24 +135,23 @@ def _apply_merging(
     epoch: str | None = None,
     info: dict | None = None,
 ) -> None:
+    cols = _row_cols(events, value_columns)
     if not spec.has_pk:
         # no pk: reference skips delete/update and appends inserts only
         # (/root/reference/synch/replication/etl.py:33-35 analog)
-        cols = _row_cols(events, value_columns)
         table.append(events.filter(F.col("action") == "insert").select(*cols),
                      spec.partition_by, epoch=epoch, info=info)
         return
 
     pk = spec.pk
-    cols = _row_cols(events, value_columns)
-    net = compact_batch(events, pk).select("action", *cols)
-    # one cache: net is used for both the anti-join keys and the inserts
+    version = replacing_version(spec, cols)
+    net = compact_batch(events, pk, version).select(
+        "action", *cols, *(["_deleted"] if version else []))
+    # one cache: net is used for the keys, the semi-join and the inserts
     net = net.persist()
     try:
-        upserts = net.filter(F.col("action") != "delete").drop("action")
+        upserts = net.filter(F.col("action") != "delete").select(*cols)
         if not table.exists:
-            from synch_spark.sources.table import ConcurrentWriteError
-
             try:
                 # expected_base=-1: the bootstrap must CREATE version 0.
                 # Unpinned, a racer's just-committed v0 would become the
@@ -143,13 +167,13 @@ def _apply_merging(
                 # stream on a one-off bootstrap race
                 pass
 
-        # one job over the cached net rows: the batch's leading-pk keys
-        # (the pruning probe) and its upsert count (the write width)
-        batch = net.select(pk[0], F.col("action") != "delete").collect()
+        # one job over the cached net rows: {pk: (upsert?, [deleted?,
+        # version])}, the merge's pruning probe, write width and rivals
+        batch = {_key(r[:len(pk)]): tuple(r[len(pk):]) for r in net.select(
+            *pk, F.col("action") != "delete",
+            *(["_deleted", version] if version else [])).collect()}
         if not batch:
             return
-        n_up = sum(1 for r in batch if r[1])
-        keys = [r[0] for r in batch]
 
         from synch_spark.sources.table import commit_with_retry
 
@@ -157,51 +181,105 @@ def _apply_merging(
         # on a lost race (commit_with_retry), so a concurrent commit
         # never sees masks computed against files it replaced
         commit_with_retry(
-            lambda: _merge(table, net.select(*pk), upserts, keys, n_up, spec,
-                           info),
+            lambda: _merge(table, net.select(*pk), upserts, batch, spec,
+                           version, info),
             retries=3)
     finally:
         net.unpersist()
 
 
+def replacing_version(spec: TableSpec, cols: list[str]) -> str | None:
+    """Q2: the version column whose max a Replacing table keeps per pk,
+    if the batch carries it (compact_batch, _merge)."""
+    return (spec.version_column if spec.engine == Engine.REPLACING_MERGE_TREE
+            and spec.version_column in cols else None)
+
+
+def _key(values) -> tuple:
+    """Collected pk values as a dict key: PySpark collects BinaryType as
+    an unhashable bytearray (before 4.1, or with
+    spark.sql.execution.pyspark.binaryAsBytes off)."""
+    return tuple(bytes(v) if isinstance(v, bytearray) else v for v in values)
+
+
+#: Stale upserts up to this many leave by an IN list (no Spark job, but
+#: driver work per key), more by a broadcast anti-join (one job). One
+#: merge on local[2]: IN is faster to 16 keys, even at 32, and 9x
+#: slower at 1024 (22 s against 2.5 s).
+STALE_IN_MAX = 32
+
+
+def _outranks(stored, net: tuple | None) -> bool:
+    """Whether a live stored row of version ``stored`` beats the batch's
+    net row ``net`` = (upsert?, deleted?, version) — the rule of
+    compact_batch, with the stored row as the earlier event."""
+    if net is None or not net[0] or net[1] or stored is None:
+        return False
+    return net[2] is None or stored > net[2]
+
+
 def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
-           keys: list, n_up: int, spec: TableSpec,
+           batch: dict, spec: TableSpec, version: str | None,
            info: dict | None = None) -> None:
-    """One merge attempt against the current head: mask every target
-    row whose pk is in the batch, append the net upserts, commit both
-    in one entry anchored to the head it read."""
+    """One merge attempt against the current head: mask every live target
+    row with a batch pk (under a ``version``, drop instead the upserts a
+    stored row outranks), append the net upserts, commit both in one
+    entry anchored to the head it read."""
     import numpy as np
     import pyarrow.parquet as pq
 
     from synch_spark.sources import bloom
     from synch_spark.sources.dv import read as read_dv
-    from synch_spark.sources.table import ConcurrentWriteError
 
     pk = list(spec.pk)
     base = table.current_version()
     snap = table.snapshot(base)
-    found = bloom.prune_files(table, pk[0], keys)
+    found = bloom.prune_files(table, pk[0], [k[0] for k in batch])
     if table.current_version() != base:
         raise ConcurrentWriteError(f"table {table.root}: head moved mid-merge")
     rels = sorted(snap.files) if found is None else sorted(
         os.path.relpath(p, table._data).replace(os.sep, "/") for p in found)
-    # the position of every target row the batch supersedes, wherever
-    # it lives (a pk that moved partition is found in its old one). Masked
-    # rows may match again: the new mask is a set union, so that is free.
-    hits = table.locate(rels, snap, pks, pk) if rels else {}
-    dvs, remove = {}, []
-    for rel, rows in hits.items():
+    # the table's columns and types: the unmasked scan reads no DV
+    schema = table._scan(sorted(snap.files), snap, None).schema
+    carry = [*pk, version] if version in schema.names else []
+    # every target row with a batch pk, masked or not, wherever it lives
+    # (a pk that moved partition is found in its old one)
+    hits = table.locate(rels, snap, pks, pk, carry) if rels else {}
+    dvs, remove, stale = {}, [], set()
+    for rel, matched in hits.items():
         d = snap.dv(rel)
         old = read_dv(table._abs(d)) if d else np.empty(0, np.int64)
-        rows = np.union1d(np.asarray(rows, dtype=np.int64), old)
-        if len(rows) == len(old):
-            continue  # only already-masked rows matched
+        dead, new = set(old.tolist()), []
+        for pos, *stored in matched:
+            if pos in dead:
+                continue  # masked already: no rival, nothing to mask
+            if stored and _outranks(stored[-1],
+                                    batch.get(key := _key(stored[:-1]))):
+                stale.add(key)  # the stored row stays
+            else:
+                new.append(pos)
+        if not new:
+            continue
+        rows = np.union1d(np.asarray(new, dtype=np.int64), old)
         if len(rows) == pq.ParquetFile(table._abs(rel)).metadata.num_rows:
             remove.append(rel)  # every row superseded: drop the file
         else:
             dvs[rel] = rows
+    n_up = sum(1 for a in batch.values() if a[0]) - len(stale)
     if not (dvs or remove or n_up):
-        return  # deletes of keys the table does not hold
+        return  # deletes of absent keys, or only stale upserts
+    if stale:
+        fields = upserts.select(*pk).schema.fields
+        if len(stale) <= STALE_IN_MAX:
+            upserts = upserts.filter(~F.struct(*pk).isin([
+                F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                           for v, f in zip(key, fields)]) for key in stale]))
+        else:
+            from pyspark.sql.types import StructType
+
+            gone = upserts.sparkSession.createDataFrame(
+                list(stale), StructType(fields))
+            upserts = upserts.join(F.broadcast(gone), pk, "left_anti")
     # the new rows take the table's column types: they share reads with
     # the masked files, so a wider batch type (a long key into an int
     # table) would split the table's physical schema. The partition
@@ -209,7 +287,6 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
     # directory names). One output file per partition for a
     # micro-batch; bulk batches split at ~2M rows so a backfill doesn't
     # land as one jumbo file.
-    schema = table.read(base).schema
     df = (upserts.select(*[
         F.col(f.name) if f.name == spec.partition_by
         else F.col(f.name).cast(f.dataType) for f in schema])
@@ -253,10 +330,11 @@ def compact_table(
 
     For collapsing engines this folds the accumulated ±1 rows down to the
     surviving state (keeping sign=+1 rows so subsequent appends keep
-    cancelling correctly); for Replacing it drops superseded versions.
-    At scale this is the periodic maintenance job that keeps read-time
-    window/aggregate cost bounded; with ``partition_by`` set it can run
-    per-partition.
+    cancelling correctly) — at scale the periodic maintenance job that
+    keeps the read-time aggregate bounded; with ``partition_by`` set it
+    can run per-partition. MergeTree and Replacing tables already store
+    their final state (the merge drops superseded versions), so for
+    them it is only a re-layout.
 
     ``zorder``: lay the compacted files out along a Morton curve over the
     given columns instead of pk-clustering — choose it when reads probe
@@ -264,12 +342,9 @@ def compact_table(
     elsewhere; Z-order trades a little pk tightness for usable min/max
     ranges on every listed column — the Delta OPTIMIZE ZORDER trade).
     """
-    # merging engines: the stored rows ARE the final state (every apply
-    # path keeps them pk-unique), so compaction is a pure re-layout —
-    # mark it dataChange=false and incremental change-feed consumers
-    # skip the hop instead of diffing the whole rewrite. Collapsing
-    # engines FOLD their stored ±sign rows here, which IS a storage-level
-    # row change, so their compactions stay unmarked.
+    # merging engines: a pure re-layout, marked dataChange=false so
+    # change-feed consumers skip the hop. Collapsing engines FOLD their
+    # stored ±sign rows, a row change: their compactions stay unmarked.
     row_preserving = spec.engine in (Engine.MERGE_TREE,
                                      Engine.REPLACING_MERGE_TREE)
     # pin the base BEFORE reading: compaction reads a snapshot and then
@@ -279,44 +354,26 @@ def compact_table(
     # overwrite()'s docstring warns about
     base = table.current_version()
     key = spec.pk[0] if spec.has_pk else None
-    if spec.engine in (Engine.COLLAPSING_MERGE_TREE, Engine.VERSIONED_COLLAPSING_MERGE_TREE):
-        # one table.read(): read_current_state would build the same
-        # reconciled-read plan a second time just to recover the stored
-        # column order — inline its collapsing branch over one df
-        df = table.read(base)
-        cols = df.columns
-        version = (spec.version_column
-                   if spec.engine == Engine.VERSIONED_COLLAPSING_MERGE_TREE
-                   and spec.version_column in cols else None)
-        state = engines.collapsing_view(
-            df, spec.pk, spec.sign_column, version,
-            # same guard as engines.engine_view: a signed table without
-            # the hidden order column (older writer, external bootstrap)
-            # reads fine — compaction must not crash on it
-            order_column=("_event_unixtime"
-                          if "_event_unixtime" in cols else None),
-        ).drop(spec.sign_column, "_event_unixtime")
-        state = (
-            state.withColumn(spec.sign_column, F.lit(1).cast("int"))
-            .withColumn("_event_unixtime", F.lit(0).cast("long"))
-            .select(*cols)
-        )
-    else:
-        # pinned read (not read_current_state): the snapshot must be the
-        # SAME version the expected_base commit guards
-        state = engines.engine_view(table.read(base), spec)
+    # pinned read (not read_current_state): the snapshot must be the
+    # SAME version the expected_base commit guards
+    df = table.read(base)
+    state = engines.engine_view(df, spec)
+    if not row_preserving:
+        # the folded rows are stored again as live +1 rows, so later
+        # appends keep cancelling against them
+        state = (state.withColumn(spec.sign_column, F.lit(1).cast("int"))
+                 .withColumn("_event_unixtime", F.lit(0).cast("long"))
+                 .select(*df.columns))
     if zorder:
         from synch_spark.sources.table import zorder_layout
 
         # zorder_layout range-partitions + sorts by the interleaved key;
         # overwrite preserves that file layout (no cluster_by re-sort)
-        table.overwrite(zorder_layout(state, list(zorder)), spec.partition_by,
-                        data_change=not row_preserving, op="optimize",
-                        expected_base=base, key=key)
-        return
-    # re-cluster on pk so post-compaction files have tight, disjoint pk
-    # ranges — restores file-level merge pruning degraded by appends
-    table.overwrite(state, spec.partition_by, cluster_by=spec.pk or None,
+        state = zorder_layout(state, list(zorder))
+    # else re-cluster on pk so post-compaction files have tight, disjoint
+    # pk ranges — restores file-level merge pruning degraded by appends
+    table.overwrite(state, spec.partition_by,
+                    cluster_by=None if zorder else spec.pk or None,
                     data_change=not row_preserving, op="optimize",
                     expected_base=base, key=key)
 
@@ -364,8 +421,6 @@ def register_final_view(table: ParquetTable, spec: TableSpec, name: str | None =
 
 
 def read_current_state(table: ParquetTable, spec: TableSpec) -> DataFrame:
-    """Read the table through its engine-semantics view (SURVEY §2.7).
-    Thin wrapper: engine_view carries the full dispatch (including the
-    collapsing arrival-order + internal-column drop), so the two public
-    entry points cannot diverge."""
+    """Read the table through its engine-semantics view (SURVEY §2.7),
+    ``engines.engine_view``, so the two entry points cannot diverge."""
     return engines.engine_view(table.read(), spec)

@@ -6,10 +6,12 @@ reads (engines created in /root/reference/synch/writer/*.py, enum
 the semantics are *views*: pure DataFrame transforms applied at read
 time (or eagerly at compaction time). SURVEY §2.7 Q1-Q4.
 
-Scale notes: the window dedup shuffles once on the pk — at 100 TB that
-is a single hash-partitioned exchange, skew-safe under AQE; when the
-target table is bucketed by pk the exchange disappears entirely. The
-collapsing aggregate is a partial-agg (map-side combine) groupBy.
+MergeTree and Replacing need no view: their merge keeps one row per pk
+(Replacing: the max-version one, cdc_apply._merge), so the stored rows
+are the final state. Scale note: the collapsing views shuffle once on
+the pk — at 100 TB a single hash-partitioned exchange, skew-safe under
+AQE, gone entirely when the table is bucketed by pk; the net-sign
+aggregate is a partial-agg (map-side combine) groupBy.
 """
 
 from __future__ import annotations
@@ -17,41 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from synch_spark.config import Engine, TableSpec
-
-
-def replacing_view(
-    df: DataFrame,
-    pk: tuple[str, ...],
-    version_column: str | None = None,
-    tiebreakers: tuple[str, ...] = (),
-) -> DataFrame:
-    """Q2 ReplacingMergeTree: last-writer-wins per pk.
-
-    Keeps the row with max(version) per pk (ClickHouse FINAL done
-    eagerly); ``tiebreakers`` break version ties (e.g. event_unixtime,
-    action_seq). Reference DDL: /root/reference/synch/writer/
-    replacing_merge_tree.py:10-41.
-    """
-    order = []
-    if version_column:
-        order.append(F.col(version_column).desc())
-    order += [F.col(c).desc() for c in tiebreakers]
-    # final fallback must be genuinely deterministic: there is no
-    # "latest" without a version, but the SAME query must return the
-    # SAME survivor across runs, task retries, and AQE re-partitions —
-    # monotonically_increasing_id depends on partition layout and would
-    # not. to_json of the non-pk values is value-determined and handles
-    # every type (maps are not directly orderable).
-    order.append(_value_order(df, pk))
-    w = W.partitionBy(*pk).orderBy(*order)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def _value_order(df: DataFrame, pk: tuple[str, ...]):
-    rest = [c for c in df.columns if c not in pk]
-    if not rest:
-        return F.lit(0)  # pk-only rows are identical: any winner is fine
-    return F.to_json(F.struct(*[F.col(c) for c in rest])).desc()
 
 
 def collapsing_view(
@@ -76,7 +43,9 @@ def collapsing_view(
         order.append(F.col(version_column).desc())
     if order_column:
         order.append(F.col(order_column).desc())
-    order.append(_value_order(df, pk))  # deterministic final tiebreak
+    rest = [c for c in df.columns if c not in pk]
+    if rest:  # deterministic final tiebreak, whatever the partitioning
+        order.append(F.to_json(F.struct(*rest)).desc())
     w = W.partitionBy(*pk).orderBy(*order)
     latest_pos = (
         df.filter(F.col(sign_column) > 0)
@@ -107,19 +76,12 @@ def collapse_aggregate(
 
 
 def engine_view(df: DataFrame, spec: TableSpec) -> DataFrame:
-    """Dispatch to the read-semantics view for the table's engine.
-
-    Matches read_current_state exactly for every engine (it delegates
-    here): the collapsing branches order by the stored
-    ``_event_unixtime`` arrival column when present — without it, two
-    entry points claiming the same semantics would disagree on which
-    pending +1 row survives — and drop the internal sign/order columns
-    from the result."""
-    if spec.engine == Engine.MERGE_TREE:
-        return df  # plain table; deletes were applied physically
-    if spec.engine == Engine.REPLACING_MERGE_TREE:
-        version = spec.version_column if spec.version_column in df.columns else None
-        return replacing_view(df, spec.pk, version)
+    """The read-semantics view of the table's engine (read_current_state
+    delegates here). The collapsing views order pending +1 rows by the
+    stored ``_event_unixtime`` arrival column when present and drop the
+    internal sign/order columns."""
+    if spec.engine in (Engine.MERGE_TREE, Engine.REPLACING_MERGE_TREE):
+        return df  # the merge stored the final state (one row per pk)
     if spec.engine in (Engine.COLLAPSING_MERGE_TREE,
                        Engine.VERSIONED_COLLAPSING_MERGE_TREE):
         version = (spec.version_column

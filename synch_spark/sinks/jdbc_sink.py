@@ -7,7 +7,10 @@ touched pk followed by a bulk INSERT
 that exact two-step shape Spark-side:
 
 1. the batch compacts to one net action per pk (cdc_apply.compact_batch
-   — W3), so delete-then-insert is order-free within the batch;
+   — W3), so delete-then-insert is order-free within the batch; under
+   a Replacing version column the batch's max version wins, as in the
+   parquet merge, but against the target's rows the target's own engine
+   (a ClickHouse ReplacingMergeTree) compares versions;
 2. DELETE .. WHERE pk IN (...) runs on the driver over a plain JDBC
    connection (the key set is micro-batch sized — the same bound the
    broadcast merge already relies on — chunked into bounded IN-lists;
@@ -36,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from synch_spark.config import TableSpec
-from synch_spark.operators.cdc_apply import compact_batch
+from synch_spark.operators.cdc_apply import compact_batch, replacing_version
 
 IN_CHUNK = 1000  # keys per DELETE statement
 
@@ -294,28 +297,24 @@ class JdbcSink:
         deletes — the target (e.g. an actual CollapsingMergeTree)
         collapses them itself."""
         from synch_spark.config import Engine
+        from synch_spark.events import annotate_sign
         from synch_spark.operators.cdc_apply import _row_cols
 
         cols = _row_cols(events, value_columns)
         if spec.engine in (Engine.COLLAPSING_MERGE_TREE,
                            Engine.VERSIONED_COLLAPSING_MERGE_TREE):
-            signed = events.withColumn(
-                spec.sign_column,
-                F.when(F.col("action") == "delete", F.lit(-1))
-                .otherwise(F.lit(1)).cast("int"),
-            )
+            signed = annotate_sign(events, spec.sign_column)
             self._write(signed.select(*cols, spec.sign_column))
             return
         if not spec.has_pk:
             inserts = events.filter(F.col("action") == "insert").select(*cols)
             self._write(inserts)
             return
-        net = compact_batch(events, spec.pk).select("action", *cols).persist()
+        net = compact_batch(events, spec.pk, replacing_version(spec, cols)
+                            ).select("action", *cols).persist()
         try:
-            keys = [
-                tuple(r[c] for c in spec.pk)
-                for r in net.select(*spec.pk).collect()  # micro-batch sized
-            ]
+            # micro-batch sized
+            keys = [tuple(r) for r in net.select(*spec.pk).collect()]
             if keys:
                 self._execute(
                     delete_statements(self.target_table, spec.pk, keys)

@@ -6,12 +6,13 @@ The reference distributes reads/writes by letting ClickHouse shard rows
 lost. Spark's bucketing is the strictly stronger layout: rows are
 hash-partitioned by key into a fixed number of bucket files AT WRITE
 TIME, and every later key-aligned operation — fact⋈fact joins,
-groupBy(pk), the Replacing-engine FINAL window — reads that distribution
-straight from the catalog and plans WITHOUT a shuffle exchange.
+groupBy(pk), a pk window such as the Collapsing-engine FINAL view's —
+reads that distribution straight from the catalog and plans WITHOUT a
+shuffle exchange.
 
 At 100 TB this is the difference between "every merge/join re-shuffles
 the table" and "the table was shuffled once, at load". Pair it with
-``sortBy(pk)`` and the sort inside SortMergeJoin / the FINAL window is
+``sortBy(pk)`` and the sort inside SortMergeJoin / the pk window is
 free too.
 
 Scope note: bucket metadata lives in the session catalog (in-memory here;

@@ -813,17 +813,17 @@ class ParquetTable:
         )
 
     def locate(self, rels: list[str], snap: Snapshot, keys: DataFrame,
-               on: list[str]) -> dict[str, list[int]]:
-        """{rel: row positions} of the rows of the pool files ``rels``
-        (read under ``snap``'s schema, masked rows included) whose ``on``
-        columns match a row of ``keys`` — one broadcast semi-join, the
-        merge's search for the rows a batch supersedes."""
+               on: list[str], carry=()) -> dict[str, list[tuple]]:
+        """{rel: [(row position, *``carry`` column values)]} of the rows
+        of the pool files ``rels`` (read under ``snap``'s schema, masked
+        rows included) whose ``on`` columns match a row of ``keys`` —
+        one broadcast semi-join, the merge's search for its rivals."""
         by_uri = {_file_uri(self._abs(r)): r for r in rels}
-        hits: dict[str, list[int]] = {}
-        for f, i in (self._scan(rels, snap, None, positions=True)
-                     .join(F.broadcast(keys), on, "left_semi")
-                     .select(_POS_FILE, _POS_ROW).collect()):
-            hits.setdefault(by_uri[f], []).append(i)
+        hits: dict[str, list[tuple]] = {}
+        for f, *hit in (self._scan(rels, snap, None, positions=True)
+                        .join(F.broadcast(keys), on, "left_semi")
+                        .select(_POS_FILE, _POS_ROW, *carry).collect()):
+            hits.setdefault(by_uri[f], []).append(tuple(hit))
         return hits
 
     def read_files(self, paths: list[str], version: int | None = None) -> DataFrame:

@@ -464,6 +464,9 @@ class CdcPipeline:
                 part_after = (renames.get(spec.partition_by,
                                           spec.partition_by)
                               if spec.partition_by else None)
+                # index the new files on the merge key's new name
+                key_after = (renames.get(spec.pk[0], spec.pk[0])
+                             if spec.has_pk else None)
 
                 def rewrite():
                     # anchor to the version the plan reads: a concurrent
@@ -471,7 +474,8 @@ class CdcPipeline:
                     # one (retried) — not be silently clobbered
                     base = table.current_version()
                     table.overwrite(apply_alter(table.read(), ops),
-                                    part_after, expected_base=base)
+                                    part_after, expected_base=base,
+                                    key=key_after)
 
                 commit_with_retry(rewrite, retries=3)
             else:

@@ -197,7 +197,7 @@ def test_distributed_decode_feeds_cdc_pipeline(spark, tmp_path):
     from pyspark.sql import functions as F, types as T
 
     from synch_spark.events import parse_values, split_updates
-    from synch_spark.operators.engines import replacing_view
+    from synch_spark.operators.cdc_apply import compact_batch
 
     b = _one_table()
     b.insert(7, (1, "10.00", "a", "2024-01-01", "2024-01-01 00:00:00"),
@@ -224,9 +224,7 @@ def test_distributed_decode_feeds_cdc_pipeline(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
     ])
     typed = parse_values(split_updates(raw), vschema)
-    latest = replacing_view(
-        typed, ("id",), version_column="event_unixtime",
-        tiebreakers=("action_seq",))
+    latest = compact_batch(typed, ("id",))
     final = latest.filter(F.col("action") != "delete").orderBy("id")
     rows = [(r["id"], str(r["amount"]), r["name"]) for r in final.collect()]
     assert rows == [(1, "11.00", "a2"), (3, "30.00", "c")]
@@ -243,7 +241,7 @@ def test_rotation_within_one_second_keeps_cross_file_order(spark, tmp_path):
     from pyspark.sql import functions as F, types as T
 
     from synch_spark.events import parse_values, split_updates
-    from synch_spark.operators.engines import replacing_view
+    from synch_spark.operators.cdc_apply import compact_batch
 
     row = lambda amt, nm: (1, amt, nm, "2024-01-01", "2024-01-01 00:00:00")
     b1 = _one_table()
@@ -271,9 +269,7 @@ def test_rotation_within_one_second_keeps_cross_file_order(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
     ])
     typed = parse_values(split_updates(raw), vschema)
-    latest = replacing_view(
-        typed, ("id",), version_column="event_unixtime",
-        tiebreakers=("action_seq",))
+    latest = compact_batch(typed, ("id",))
     (final,) = latest.filter(F.col("action") != "delete").collect()
     assert final["name"] == "final"  # file 2 wins, deterministically
 
@@ -425,7 +421,7 @@ def test_multi_file_replay_ordering(spark, tmp_path):
     from pyspark.sql import functions as F, types as T
 
     from synch_spark.events import parse_values, split_updates
-    from synch_spark.operators.engines import replacing_view
+    from synch_spark.operators.cdc_apply import compact_batch
 
     cols = [("id", B.T_LONG, 0), ("v", B.T_VARCHAR, 32)]
     b1 = BinlogBuilder(timestamp=1_700_000_000)
@@ -445,8 +441,7 @@ def test_multi_file_replay_ordering(spark, tmp_path):
         split_updates(raw),
         T.StructType([T.StructField("id", T.LongType()),
                       T.StructField("v", T.StringType())]))
-    latest = replacing_view(typed, ("id",), version_column="event_unixtime",
-                            tiebreakers=("action_seq",))
+    latest = compact_batch(typed, ("id",))
     rows = sorted((r["id"], r["v"]) for r in
                   latest.filter(F.col("action") != "delete").collect())
     assert rows == [(1, "new"), (2, "keep")]

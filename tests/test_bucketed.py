@@ -1,6 +1,6 @@
 """Bucketed layout: assert at the PLAN level that bucketing removes the
-shuffle — co-located fact⋈fact join and the Replacing FINAL window both
-execute without an Exchange node."""
+shuffle — co-located fact⋈fact join and a pk window (the shape of the
+Collapsing FINAL view) both execute without an Exchange node."""
 
 from __future__ import annotations
 
@@ -42,9 +42,10 @@ def test_cobucketed_join_no_shuffle(spark, two_bucketed):
 
 
 def test_bucketed_final_window_no_shuffle(spark, tmp_path):
-    """Replacing-engine FINAL read (row_number window over pk) over a
-    pk-bucketed table needs no exchange: the scan's bucket distribution
-    satisfies the window's clustering requirement."""
+    """A latest-row-per-pk window (row_number over pk, the Collapsing
+    FINAL view's shape) over a pk-bucketed table needs no exchange: the
+    scan's bucket distribution satisfies the window's clustering
+    requirement."""
     hist = spark.range(0, 2000).select(
         (F.col("id") % 500).alias("pk"),
         F.col("id").alias("version"),

@@ -454,3 +454,69 @@ def test_apply_record_rides_in_the_commit_it_makes(spark, tmp_path):
                     epoch="e1", info={**rec, "batch": 9, "num": 1})
     assert [(h["op"], h["info"]["batch"]) for h in c.history()] == [
         ("overwrite", 0), ("append", 1)]
+
+
+#: Spark jobs of one merge micro-batch on a Replacing table with a
+#: version column (bootstrap excluded), measured at the commit before
+#: the version rule moved into the merge: the rule must add none.
+#: Lower it when the merge loses a job; never raise it.
+MERGE_JOB_BUDGET = 8
+
+
+def test_replacing_merge_job_budget(spark, tmp_path):
+    import uuid
+
+    vspec = TableSpec(schema="db", table="t", pk=("k",),
+                      engine=Engine.REPLACING_MERGE_TREE)
+    cols = ["k", "version", "v"]
+    ddl = ("action string, k long, version long, v string, "
+           "event_unixtime long, action_seq int")
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    apply_cdc_batch(t, spark.createDataFrame(
+        [("insert", k, 5, "a", 1, 2) for k in range(20)], ddl), vspec,
+        value_columns=cols)
+    sc = spark.sparkContext
+    # an upsert that wins, a stale one (dropped by its stored version),
+    # a delete and a new key
+    ev = spark.createDataFrame([
+        ("insert", 3, 9, "b", 10, 2), ("insert", 4, 1, "stale", 10, 2),
+        ("delete", 5, 5, "a", 10, 1), ("insert", 100, 1, "new", 10, 2)], ddl)
+    group = f"merge-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one merge micro-batch")
+    try:
+        apply_cdc_batch(t, ev, vspec, value_columns=cols)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= MERGE_JOB_BUDGET
+    got = {r["k"]: (r["version"], r["v"]) for r in t.read().collect()}
+    assert got[3] == (9, "b") and got[4] == (5, "a") and 5 not in got
+    assert got[100] == (1, "new") and len(got) == 20
+
+
+def test_merge_reads_only_the_dvs_of_the_files_it_touches(spark, tmp_path,
+                                                          monkeypatch):
+    from synch_spark.sources import dv
+
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame(
+        [(k, str(k)) for k in range(30)], "id long, amount string")
+        .repartitionByRange(3, "id"), key="id")
+    assert len(t.snapshot().files) == 3
+    # one masked row in each of the three files
+    apply_cdc_batch(t, _typed(spark, [
+        ("delete", {"id": k, "amount": str(k)}, None, 1) for k in (1, 11, 21)
+    ]), spec())
+    snap = t.snapshot()
+    assert all(snap.dv(r) for r in snap.files)
+    (touched,) = [r for r in snap.files if snap.files[r]["id"][0] <= 12
+                  <= snap.files[r]["id"][1]]
+    reads = []
+    real = dv.read
+    monkeypatch.setattr(dv, "read",
+                        lambda p: reads.append(p) or real(p))
+    apply_cdc_batch(t, _typed(spark, [
+        ("update", {"id": 12, "amount": "12"}, {"id": 12, "amount": "x"}, 2),
+    ]), spec())
+    assert reads == [t._abs(snap.dv(touched))]
+    assert t.read().count() == 27

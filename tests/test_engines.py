@@ -7,17 +7,31 @@ import pytest
 from synch_spark.operators import engines
 
 
-def test_replacing_view_version_ties(spark):
+def test_replacing_view_version_ties(spark, tmp_path):
+    """Replacing FINAL keeps the max-version row of each pk, whether the
+    rows arrive in one batch or one batch each."""
+    from synch_spark.config import Engine, TableSpec
+    from synch_spark.operators.cdc_apply import apply_cdc_batch, read_current_state
+    from synch_spark.sources.table import ParquetTable
+
     rows = [
         (1, 1, 100, "a"),
         (1, 2, 50, "b"),  # higher version wins even with older time
         (2, 1, 10, "c"),
-        (2, 1, 20, "d"),  # same version: tiebreaker = event_unixtime
+        (2, 1, 20, "d"),  # same version: the later event wins
     ]
-    df = spark.createDataFrame(rows, ["id", "version", "event_unixtime", "v"])
-    out = engines.replacing_view(df, ("id",), "version", ("event_unixtime",))
-    got = {r["id"]: r["v"] for r in out.collect()}
-    assert got == {1: "b", 2: "d"}
+    spec = TableSpec(schema="db", table="t", pk=("id",),
+                     engine=Engine.REPLACING_MERGE_TREE)
+    for name, batches in (("one", [rows]), ("per_row", [[r] for r in rows])):
+        t = ParquetTable(spark, str(tmp_path / name))
+        for b in batches:
+            ev = spark.createDataFrame(
+                [("insert", *r, 2) for r in b],
+                "action string, id long, version long, event_unixtime long, "
+                "v string, action_seq int")
+            apply_cdc_batch(t, ev, spec, value_columns=["id", "version", "v"])
+        got = {r["id"]: r["v"] for r in read_current_state(t, spec).collect()}
+        assert got == {1: "b", 2: "d"}, name
 
 
 def test_collapsing_view_cancellation(spark):

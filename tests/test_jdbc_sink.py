@@ -79,6 +79,32 @@ def test_jdbc_sink_delete_insert_roundtrip(spark, tmp_path):
     assert back2 == back
 
 
+def test_jdbc_sink_keeps_the_batch_max_version(spark, tmp_path):
+    """A Replacing table with its version column keeps the batch's
+    max-version upsert, as the parquet merge does."""
+    url = f"jdbc:derby:{tmp_path}/sinkdbv;create=true"
+    spec = TableSpec(schema="db", table="t", pk=("K",),
+                     engine=Engine.REPLACING_MERGE_TREE, version_column="V")
+    try:
+        spark.range(3).select(
+            F.col("id").alias("K"), (F.col("id") * 1.0).alias("V")
+        ).write.format("jdbc").option("url", url).option(
+            "dbtable", "APP.TV"
+        ).mode("overwrite").save()
+    except Exception as e:  # noqa: BLE001
+        pytest.skip(f"embedded Derby unavailable: {str(e).splitlines()[0]}")
+    sink = JdbcSink(spark, url, "APP.TV")
+    sink.apply_batch(_events(spark, [
+        ("insert", 7, 5.0, 10), ("insert", 7, 3.0, 11),
+    ]), spec, value_columns=["K", "V"])
+    back = {
+        r["K"]: r["V"]
+        for r in spark.read.format("jdbc").option("url", url)
+        .option("dbtable", "APP.TV").load().collect()
+    }
+    assert back == {0: 0.0, 1: 1.0, 2: 2.0, 7: 5.0}
+
+
 def test_jdbc_sink_composite_pk(spark, tmp_path):
     url = f"jdbc:derby:{tmp_path}/sinkdb2;create=true"
     spec = TableSpec(schema="db", table="t", pk=("A", "B"),

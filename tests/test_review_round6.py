@@ -325,17 +325,6 @@ def test_engine_view_matches_read_current_state_for_collapsing(spark, tmp_path):
     assert set(engine_view(t.read(), spec).columns) == {"k", "v"}
 
 
-def test_replacing_view_version_tie_is_value_deterministic(spark):
-    from synch_spark.operators.engines import replacing_view
-
-    df = spark.createDataFrame(
-        [(1, 5, "aa"), (1, 5, "zz"), (2, 1, "q")], "k long, ver long, v string")
-    for _ in range(3):
-        got = {r["k"]: r["v"]
-               for r in replacing_view(df.repartition(7), ("k",), "ver").collect()}
-        assert got == {1: "zz", 2: "q"}  # max to_json wins, every run
-
-
 def test_interleave_bits_validates_inputs():
     from synch_spark.functions import interleave_bits
 

@@ -428,6 +428,30 @@ def test_layout_drop_refused_and_rename_followed(spark, tmp_path, pipeline):
     assert got == {1: 5.0}
 
 
+def test_ddl_rewrite_indexes_its_files_on_the_renamed_key(spark, tmp_path,
+                                                         pipeline):
+    """A layout ALTER rewrites the table: every file it publishes
+    carries its key range in the entry and its bloom beside it, under
+    the key's new name, so later merges can prune it."""
+    from synch_spark.sources.bloom import sidecar_path
+
+    pipeline.apply_batch(_raw_df(spark, [
+        ("db", "t", "insert", None, {"id": i, "amount": float(i)}, 100 + i)
+        for i in range(20)
+    ]), 0)
+    pipeline.apply_batch(_raw_df(spark, [
+        ("db", "t", "query", None,
+         {"query": "ALTER TABLE db.t CHANGE id doc_id bigint"}, 160),
+    ]), 1)
+    t = ParquetTable(spark, str(tmp_path / "wh" / "db" / "t"))
+    assert t.history()[-1]["op"] == "overwrite", "the ALTER must rewrite"
+    files = t.snapshot().files
+    assert files
+    for rel, stats in files.items():
+        assert stats.get("doc_id"), f"{rel} has no key range"
+        assert os.path.exists(sidecar_path(t._abs(rel))), f"{rel} has no bloom"
+
+
 def test_null_event_unixtime_applies_even_with_ddl_in_batch(spark, tmp_path, pipeline):
     """A NULL-stamped row used to fail BOTH sides of every DDL-segment
     filter and vanish silently; it must apply (earliest segment). The
