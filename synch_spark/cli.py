@@ -1451,9 +1451,9 @@ def cmd_consume(args) -> int:
     # every event for the table (the failure mode of an undeclared
     # schema). The reference reads column types from the source
     # catalog (synch/reader/mysql.py); the equivalents here are an
-    # already-materialized target (authoritative: it IS the applied
-    # schema, minus internal bookkeeping columns) or the configured
-    # source path. Explicit spark.value_schemas always wins.
+    # already-materialized target (authoritative: its logged schema IS
+    # the applied schema, minus internal bookkeeping columns; no Spark
+    # job) or the configured source path. value_schemas always wins.
     from synch_spark.streaming.pipeline import hidden_target_columns
 
     for name, spec in cfg.tables.items():
@@ -1468,7 +1468,7 @@ def cmd_consume(args) -> int:
             spark, f"{raw['spark']['warehouse']}/{spec.schema}/{spec.table}",
             retain=spec.retain)
         if tbl.exists:
-            inferred = tbl.read().schema
+            inferred = tbl.schema()
         else:
             src_path = (raw["spark"].get("sources") or {}).get(name)
             if src_path:

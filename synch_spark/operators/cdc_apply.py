@@ -239,8 +239,7 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
         raise ConcurrentWriteError(f"table {table.root}: head moved mid-merge")
     rels = sorted(snap.files) if found is None else sorted(
         os.path.relpath(p, table._data).replace(os.sep, "/") for p in found)
-    # the table's columns and types: the unmasked scan reads no DV
-    schema = table._scan(sorted(snap.files), snap, None).schema
+    schema = table.schema(base)
     carry = [*pk, version] if version in schema.names else []
     # every target row with a batch pk, masked or not, wherever it lives
     # (a pk that moved partition is found in its old one)
@@ -282,14 +281,10 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
             upserts = upserts.join(F.broadcast(gone), pk, "left_anti")
     # the new rows take the table's column types: they share reads with
     # the masked files, so a wider batch type (a long key into an int
-    # table) would split the table's physical schema. The partition
-    # column keeps the batch's type (its table type is inferred from
-    # directory names). One output file per partition for a
-    # micro-batch; bulk batches split at ~2M rows so a backfill doesn't
-    # land as one jumbo file.
-    df = (upserts.select(*[
-        F.col(f.name) if f.name == spec.partition_by
-        else F.col(f.name).cast(f.dataType) for f in schema])
+    # table) would split the table's physical schema. One output file
+    # per partition for a micro-batch; bulk batches split at ~2M rows so
+    # a backfill doesn't land as one jumbo file.
+    df = (upserts.select(*[F.col(f.name).cast(f.dataType) for f in schema])
           .coalesce(max(1, -(-n_up // 2_000_000))) if n_up else None)
     table.overwrite_cow_files(df, remove, expected_base=base, key=pk[0],
                               partition_by=spec.partition_by, dvs=dvs,

@@ -284,7 +284,7 @@ class VectorIndex:
         if ins_ev is not None:
             schema = ins_ev.schema
         elif self.assignments.exists:
-            schema = self.assignments.read().schema
+            schema = self.assignments.schema()
         else:
             return  # delete-only feed against a never-written index: no-op
         vt = schema["v"].dataType

@@ -50,9 +50,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from synch_spark.sources import dv, schema_evolution as se
 from synch_spark.sources.bloom import sidecar_path
@@ -285,8 +287,8 @@ def _dv_of(rel: str, stats: dict | None) -> str | None:
 
 class Snapshot:
     """Materialized view of one committed version: file membership (with
-    per-file stats), the schema-evolution document, and the logical
-    Spark schema captured at the last full write (for zero-file reads)."""
+    per-file stats), the schema-evolution document, and the Spark schema
+    of the last full write; ``struct`` is the schema every read declares."""
 
     __slots__ = ("version", "files", "schema_raw", "sschema")
 
@@ -309,6 +311,14 @@ class Snapshot:
     @property
     def schema_doc(self) -> "se.TableSchema | None":
         return se.TableSchema.loads(self.schema_raw) if self.schema_raw else None
+
+    @property
+    def struct(self) -> "StructType | None":
+        """The columns a read returns; None in a log older than both."""
+        if (spec := self.schema_doc) is not None:
+            return StructType.fromDDL(
+                ", ".join(f"`{c.name}` {c.type}" for c in spec.columns))
+        return StructType.fromJson(json.loads(self.sschema)) if self.sschema else None
 
 
 class ParquetTable:
@@ -735,6 +745,10 @@ class ParquetTable:
             return None
         return self.snapshot(version).schema_doc
 
+    def schema(self, version: int | None = None) -> StructType:
+        """``read(version).schema``, from the log when it records one."""
+        return self.snapshot(version).struct or self.read(version).schema
+
     def _abs(self, rel: str) -> str:
         return os.path.join(self._data, rel)
 
@@ -756,18 +770,20 @@ class ParquetTable:
 
     def _scan(self, rels: list[str], snap: Snapshot, mask: Snapshot | None,
               positions: bool = False) -> DataFrame:
-        """Read the pool files ``rels`` under ``snap``'s schema document,
-        dropping the rows masked by ``mask``'s DVs of those files (None:
-        drop nothing). The DVs are read on the driver and the rows
-        dropped by ONE broadcast left-anti join on (file, row_index),
-        before schema reconciliation. ``positions`` keeps each row's
-        (file URI, row_index) as ``_POS_FILE`` / ``_POS_ROW``."""
+        """Read the pool files ``rels`` under ``snap``'s recorded schema
+        (declared, so planning runs no Spark job and a partition column
+        keeps its written type), dropping the rows masked by ``mask``'s
+        DVs of those files (None: drop nothing) with ONE broadcast
+        left-anti join on (file, row_index), before schema
+        reconciliation. ``positions`` keeps each row's (file URI,
+        row_index) as ``_POS_FILE`` / ``_POS_ROW``."""
         if not rels:
             return self._empty_df(snap)
         spec = snap.schema_doc
+        declared = spec.read_struct() if spec is not None else snap.struct
         reader = self.spark.read.option("basePath", self._data)
-        if spec is not None:
-            reader = reader.schema(spec.read_struct())
+        if declared is not None:
+            reader = reader.schema(declared)
         raw = reader.parquet(*[self._abs(r) for r in rels])
         masked = [(r, d) for r in rels
                   if mask and (d := _dv_of(r, mask.files.get(r)))]
@@ -783,8 +799,8 @@ class ParquetTable:
             rows = [dv.read(self._abs(d)) for _, d in masked]
             uris = np.array([_file_uri(self._abs(r)) for r, _ in masked],
                             dtype=object)
-            # an Arrow table becomes a LocalRelation: the broadcast side
-            # is built on the driver, with no Spark job
+            # an Arrow table becomes a LocalRelation built on the driver;
+            # broadcasting it still runs one Spark job per read
             gone = self.spark.createDataFrame(pa.table({
                 _POS_FILE: pa.array(np.repeat(uris, [len(x) for x in rows]),
                                     pa.string()),
@@ -797,20 +813,10 @@ class ParquetTable:
         return raw.select(*spec.select_exprs(), *pos)
 
     def _empty_df(self, snap: Snapshot) -> DataFrame:
-        spec = snap.schema_doc
-        if spec is not None:
-            ddl = ", ".join(f"`{c.name}` {c.type}" for c in spec.columns)
-            return self.spark.createDataFrame([], ddl)
-        if snap.sschema:
-            from pyspark.sql.types import StructType
-
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(snap.sschema))
-            )
-        raise FileNotFoundError(
-            f"table {self.root}: version {snap.version} has no files and "
-            f"no recorded schema"
-        )
+        if (struct := snap.struct) is None:
+            raise FileNotFoundError(f"table {self.root}: version {snap.version}"
+                                    " has no files and no recorded schema")
+        return self.spark.createDataFrame([], struct)
 
     def locate(self, rels: list[str], snap: Snapshot, keys: DataFrame,
                on: list[str], carry=()) -> dict[str, list[tuple]]:
@@ -914,7 +920,10 @@ class ParquetTable:
         if cluster_by:
             cols = ([partition_by] if partition_by else []) + list(cluster_by)
             df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        sschema = df.schema.json()
+        # as a read returns it: partition column last, all nullable
+        fields = sorted(df.schema, key=lambda f: f.name == partition_by)
+        sschema = re.sub(r'"(nullable|containsNull|valueContainsNull)":false',
+                         r'"\1":true', StructType(fields).json())
         rels = self._stage(df, partition_by)
         entry = self._make_entry(
             base + 1,
@@ -1404,11 +1413,11 @@ class ParquetTable:
         new_df = self._scan(added, sto, sto)
         # BOTH sides read through v_to's schema document: the feed is
         # expressed in the destination schema, and reconciled reads
-        # resolve pre-DDL physical files against a newer doc by design
-        # (that's the metadata-only-DDL read path). Reading the old side
-        # with v_from's doc instead would misalign images across a
-        # rename — every carried-over row would stop cancelling.
-        old_raw = self._scan(removed, sto, sfrom)
+        # resolve pre-DDL physical files against a newer doc by design.
+        # v_from's doc would misalign images across a rename, so that no
+        # carried-over row cancels. With no doc, v_to's schema is a full
+        # rewrite's, which may narrow a column: old files read as v_from's.
+        old_raw = self._scan(removed, sto if sto.schema_doc else sfrom, sfrom)
         cols = new_df.columns
         old_df = old_raw.select([
             F.col(c).alias(c) if c in old_raw.columns

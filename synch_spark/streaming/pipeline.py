@@ -188,11 +188,8 @@ class CdcPipeline:
                     # string files into it would mix types in one table
                     # and break every later read. Migrate ONCE, in
                     # place, before the first string append.
-                    legacy = next(
-                        (f for f in dl.read().schema.fields
-                         if f.name == "_epoch"
-                         and f.dataType.simpleString() != "string"), None)
-                    if legacy is not None:
+                    types = {f.name: f.dataType for f in dl.schema()}
+                    if types.get("_epoch", T.StringType()) != T.StringType():
                         dl.overwrite(dl.read().withColumn(
                             "_epoch", F.col("_epoch").cast("string")))
                 dl.append(
@@ -332,8 +329,7 @@ class CdcPipeline:
         if not table.exists:
             return
         hidden = hidden_target_columns(spec)
-        fields = [f for f in table.read().schema.fields
-                  if f.name not in hidden]
+        fields = [f for f in table.schema() if f.name not in hidden]
         have = {f.name for f in fields}
         fields += [f for f in vschema.fields if f.name not in have]
         self.value_schemas[qname] = T.StructType(fields)
@@ -452,7 +448,7 @@ class CdcPipeline:
                    if op.action == "rename_column" and op.new_column}
         table = self.table_for(spec)
         if table.exists:
-            ts = table.schema_spec() or TableSchema.from_struct(table.read().schema)
+            ts = table.schema_spec() or TableSchema.from_struct(table.schema())
             evolved, reasons = evolve_schema(ts, ops)
             touches_layout = any(
                 op.column in layout_cols or (op.new_column or "") in layout_cols

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
 
 import pytest
 
@@ -20,3 +22,18 @@ def spark():
 @pytest.fixture(scope="session")
 def tables(spark):
     return load_tables(spark, SF_DIR)
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs the block runs: ``with spark_jobs(spark) as
+    jobs:`` leaves their ids in ``jobs`` when the block exits."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs counted by a test")
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
