@@ -28,7 +28,11 @@ engine-specific ``handle_event`` accumulators:
   rows are all masked is removed instead.
 - W6 collapsing engines never merge: they append sign-annotated rows
   (/root/reference/synch/writer/collapsing_merge_tree.py:37-58); state
-  is recovered at read time by engines.collapsing_view.
+  is recovered at read time by engines.collapsing_view. Each batch is
+  first folded to at most one cancel row and one state row per key
+  (fold_collapsing), as a ClickHouse merge of the batch would fold it,
+  so stored rows grow with the keys a batch touches, not with its
+  events.
 """
 
 from __future__ import annotations
@@ -42,19 +46,31 @@ from synch_spark.operators import engines
 from synch_spark.sources.table import ConcurrentWriteError, ParquetTable
 
 
-def compact_batch(events: DataFrame, pk: tuple[str, ...],
-                  version: str | None = None) -> DataFrame:
-    """W3: reduce a batch to one net event per pk.
+def arrival_order(events: DataFrame):
+    """The order a batch's events arrived in, as one sortable struct:
+    (event_unixtime, wire seq, action_seq).
 
-    ``events`` must already have typed row columns (events.parse_values)
-    including the pk columns, plus action/event_unixtime/action_seq.
     When the frame carries the decoder-attached wire-order column
     (events.WIRE_SEQ_COL), it breaks event_unixtime ties BEFORE
     action_seq: distinct wire changes sharing one stamp (a wal2json
     transaction's shared commit timestamp, Debezium's millisecond ts_ms)
     resolve in wire order, while an update's delete+insert halves (same
     wire seq) still resolve by action_seq. Absent/null seqs sort as 0 —
-    the pre-upgrade arbitrary-tie contract.
+    the pre-upgrade arbitrary-tie contract."""
+    keys = [F.col("event_unixtime")]
+    if WIRE_SEQ_COL in events.columns:
+        keys.append(F.coalesce(F.col(WIRE_SEQ_COL), F.lit(0)))
+    keys.append(F.col("action_seq"))
+    return F.struct(*keys)
+
+
+def compact_batch(events: DataFrame, pk: tuple[str, ...],
+                  version: str | None = None) -> DataFrame:
+    """W3: reduce a batch to one net event per pk, the latest in
+    ``arrival_order``.
+
+    ``events`` must already have typed row columns (events.parse_values)
+    including the pk columns, plus action/event_unixtime/action_seq.
 
     Without ``version`` the latest event wins. With it, a pk nets to its
     latest event if that is a delete (a delete removes the pk whatever
@@ -63,11 +79,7 @@ def compact_batch(events: DataFrame, pk: tuple[str, ...],
     ``_deleted`` says whether the batch deleted the pk. All windows
     share the pk partitioning: one exchange.
     """
-    keys = [F.col("event_unixtime")]
-    if WIRE_SEQ_COL in events.columns:
-        keys.append(F.coalesce(F.col(WIRE_SEQ_COL), F.lit(0)))
-    keys.append(F.col("action_seq"))
-    order = F.struct(*keys)
+    order = arrival_order(events)
     out, rank = events.withColumn("_ord", order), [F.col("_ord").desc()]
     if version is not None:
         every = W.partitionBy(*pk)
@@ -97,7 +109,7 @@ def apply_cdc_batch(
     """Merge one micro-batch of typed change events into ``table``.
 
     Dispatches on engine: MergeTree/Replacing do compaction + upsert
-    merge; Collapsing engines do the append-only sign write.
+    merge; Collapsing engines append their folded signed rows.
 
     ``epoch``: at-least-once replay marker for the APPEND-ONLY paths
     (collapsing engines, no-pk tables). The pk-keyed merge is naturally
@@ -299,21 +311,73 @@ def _apply_collapsing(
     epoch: str | None = None,
     info: dict | None = None,
 ) -> None:
-    """W6: append-only write with sign = +1 insert / -1 delete.
+    """W6: append the batch's folded signed rows (fold_collapsing).
 
-    No compaction, no merge — the fastest write path; read-time
-    collapsing_view recovers the current state. For the reference's
-    exact arrival-order cancellation semantics the event time rides
-    along as a hidden ordering column. ``epoch`` (see apply_cdc_batch)
-    makes a micro-batch replay skip the duplicate append.
+    No merge: read-time collapsing_view recovers the current state. The
+    event time rides along as a hidden ordering column for it. ``epoch``
+    (see apply_cdc_batch) makes a micro-batch replay skip the duplicate
+    append.
+    """
+    cols = _row_cols(events, value_columns)
+    out = fold_collapsing(events, spec, cols).select(
+        *cols, spec.sign_column,
+        F.col("event_unixtime").alias("_event_unixtime"))
+    table.append(out, spec.partition_by, epoch=epoch, info=info)
+
+
+def fold_collapsing(events: DataFrame, spec: TableSpec,
+                    cols: list[str]) -> DataFrame:
+    """T6 + fold: sign a Collapsing batch (+1 insert / -1 delete) and keep
+    at most one cancel row and one state row per key — the one write
+    rule of the store (_apply_collapsing) and the JDBC sink.
+
+    A key is the pk, or (pk, version) for VersionedCollapsing (SURVEY
+    Q4). In ``arrival_order`` a key's group keeps:
+
+    - its first row, if that is a cancel (-1): it cancels a stored row;
+    - its last row, if that is a state (+1): the key's new state;
+    - for a key the batch inserts and then deletes (first row +1, last
+      -1), its last state row and the last row. ClickHouse would keep
+      neither; the pair stays as the tombstone backfill_missing needs.
+
+    A group is written unfolded when its first or last position ties in
+    arrival order (which row is first is then undecided), or when the
+    kept rows' Σ sign differs from the group's (an ill-formed stream: a
+    duplicate insert, a double delete). Every aggregate is an unbounded
+    window over the one key partitioning: one exchange.
     """
     from synch_spark.events import annotate_sign
 
-    cols = _row_cols(events, value_columns)
-    signed = annotate_sign(events, spec.sign_column)  # T6, one definition
-    out = signed.select(*cols, spec.sign_column,
-                        F.col("event_unixtime").alias("_event_unixtime"))
-    table.append(out, spec.partition_by, epoch=epoch, info=info)
+    signed = annotate_sign(events, spec.sign_column)
+    if not spec.has_pk:
+        return signed
+    keys = list(spec.pk)
+    if (spec.engine == Engine.VERSIONED_COLLAPSING_MERGE_TREE
+            and spec.version_column in cols):
+        keys.append(spec.version_column)
+    # SQL text, not Column trees: one py4j call per expression, where
+    # the same Column trees took ~800 calls to build
+    over = f" OVER (PARTITION BY {', '.join(map(_sql_name, keys))})"
+    sign = _sql_name(spec.sign_column)
+    out = signed.select("*", arrival_order(signed).alias("_ord")).selectExpr(
+        "*", f"min(named_struct('o', _ord, 's', {sign})){over} AS _first",
+        f"max(named_struct('o', _ord, 's', {sign})){over} AS _last",
+        f"max(IF({sign} > 0, _ord, NULL)){over} AS _state",
+        f"sum({sign}){over} AS _net")
+    first, last = "_ord = _first.o", "_ord = _last.o"
+    keep = (f"({first} AND {sign} < 0) OR ({last} AND {sign} > 0) OR "
+            f"(_first.s > 0 AND _last.s < 0 AND "
+            f"({last} OR ({sign} > 0 AND _ord = _state)))")
+    folds = (f"sum(CAST({first} AS INT)){over} = 1 AND "
+             f"sum(CAST({last} AS INT)){over} = 1 AND "
+             f"sum(IF({keep}, {sign}, 0)){over} = _net")
+    return (out.selectExpr(*map(_sql_name, signed.columns),
+                           f"({keep}) OR NOT ({folds}) AS _kept")
+            .filter("_kept").drop("_kept"))
+
+
+def _sql_name(column: str) -> str:
+    return "`" + column.replace("`", "``") + "`"
 
 
 def compact_table(

@@ -297,10 +297,13 @@ def backfill_missing(
       missing keys is the DBLog/Debezium incremental-snapshot guarantee
       achieved with set semantics instead of watermark fencing.
     - collapsing engines keep ±sign tombstones physically, so a key the
-      CDC stream DELETED still "exists" and is correctly skipped. For
-      merge-family engines a CDC delete leaves a true hole the snapshot
-      will re-fill if the source still has the row — run deletes after
-      backfill completes, or reconcile with repair() afterwards.
+      CDC stream DELETED still "exists" and is correctly skipped: the
+      cancel row of a stored key, or, for a key one batch inserts and
+      deletes, the state row and cancel row the batch fold keeps
+      (cdc_apply.fold_collapsing). For merge-family engines a CDC
+      delete leaves a true hole the snapshot will re-fill if the source
+      still has the row — run deletes after backfill completes, or
+      reconcile with repair() afterwards.
     - chunking is pmod(xxhash64(pk), n): uniform without knowing the key
       distribution. Each chunk filter re-scans the source; a JDBC
       deployment should instead push pk-range predicates per chunk

@@ -39,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from synch_spark.config import TableSpec
-from synch_spark.operators.cdc_apply import compact_batch, replacing_version
+from synch_spark.operators.cdc_apply import (compact_batch, fold_collapsing,
+                                             replacing_version)
 
 IN_CHUNK = 1000  # keys per DELETE statement
 
@@ -292,19 +293,18 @@ class JdbcSink:
     ) -> None:
         """One micro-batch: compact -> driver-side chunked DELETE of the
         touched pks -> distributed INSERT of the net upserts. Collapsing
-        engines instead take the reference's append-only signed-insert
-        path (writer/collapsing_merge_tree.py:37-58): +1/-1 rows, no
-        deletes — the target (e.g. an actual CollapsingMergeTree)
-        collapses them itself."""
+        engines instead take the reference's signed-insert path
+        (writer/collapsing_merge_tree.py:37-58): the store's folded +1/-1
+        rows (cdc_apply.fold_collapsing), no deletes — the target (e.g.
+        an actual CollapsingMergeTree) collapses them itself."""
         from synch_spark.config import Engine
-        from synch_spark.events import annotate_sign
         from synch_spark.operators.cdc_apply import _row_cols
 
         cols = _row_cols(events, value_columns)
         if spec.engine in (Engine.COLLAPSING_MERGE_TREE,
                            Engine.VERSIONED_COLLAPSING_MERGE_TREE):
-            signed = annotate_sign(events, spec.sign_column)
-            self._write(signed.select(*cols, spec.sign_column))
+            self._write(fold_collapsing(events, spec, cols)
+                        .select(*cols, spec.sign_column))
             return
         if not spec.has_pk:
             inserts = events.filter(F.col("action") == "insert").select(*cols)

@@ -33,6 +33,8 @@ changed) paths — never O(table):
   document rides in the entry too — schema, membership, and stats
   commit atomically as one JSON object, and a published entry is never
   rewritten.
+- every data file is written zstd (``_stage``); a file's codec is in
+  its own footer, so files of older writers (snappy) read beside them.
 - a merge never rewrites a file: it appends its net rows and masks the
   superseded rows of each touched file with a deletion vector
   (``sources.dv``), named in the entry beside the file's stats. Every
@@ -425,11 +427,14 @@ class ParquetTable:
         return snap
 
     def _stage(self, df: DataFrame, partition_by: str | None) -> list[str]:
-        """Write ``df`` as parquet into a private ``.staging-*`` dir and
-        pool the files (``_promote_files``); returns the pool-relative
-        paths. Nothing is visible to readers until an entry names them."""
+        """Write ``df`` as zstd parquet into a private ``.staging-*`` dir
+        and pool the files (``_promote_files``); returns the pool-relative
+        paths. Nothing is visible to readers until an entry names them.
+        Every table file is written here. Readers take each file's codec
+        from its footer, so files of other codecs (snappy, Spark's
+        default, from older writers) stay readable beside them."""
         staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:12]}")
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite").option("compression", "zstd")
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(staging)

@@ -95,12 +95,14 @@ def test_replacing_upsert(spark, tmp_path):
 def test_collapsing_append_and_view(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     s = spec(Engine.COLLAPSING_MERGE_TREE)
-    apply_cdc_batch(t, _typed(spark, [
-        ("insert", None, {"id": 1, "amount": "1"}, 100),
-        ("insert", None, {"id": 2, "amount": "2"}, 100),
-        ("update", {"id": 1, "amount": "1"}, {"id": 1, "amount": "5"}, 200),
-        ("delete", {"id": 2, "amount": "2"}, None, 300),
-    ]), s)
+    # one batch per change: a batch folds each pk to at most one cancel
+    # and one state row, so the sign history builds up across batches
+    for events in ([("insert", None, {"id": 1, "amount": "1"}, 100),
+                    ("insert", None, {"id": 2, "amount": "2"}, 100)],
+                   [("update", {"id": 1, "amount": "1"},
+                     {"id": 1, "amount": "5"}, 200)],
+                   [("delete", {"id": 2, "amount": "2"}, None, 300)]):
+        apply_cdc_batch(t, _typed(spark, events), s)
     # physical storage is append-only: 1 + 2(update) + 1 + 1 = 5 signed rows
     assert t.read().count() == 5
     rows = {r["id"]: r["amount"] for r in read_current_state(t, s).collect()}

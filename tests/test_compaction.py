@@ -39,12 +39,16 @@ def test_collapsing_compaction_preserves_state(spark, tmp_path):
         schema="db", table="t", pk=("id",), engine=Engine.COLLAPSING_MERGE_TREE
     )
     t = ParquetTable(spark, str(tmp_path / "t"))
-    apply_cdc_batch(t, _typed(spark, [
-        ("insert", None, {"id": 1, "amount": 1.0, "day": "d1"}, 100),
-        ("update", {"id": 1, "amount": 1.0, "day": "d1"}, {"id": 1, "amount": 2.0, "day": "d1"}, 200),
-        ("insert", None, {"id": 2, "amount": 5.0, "day": "d2"}, 300),
-        ("delete", {"id": 2, "amount": 5.0, "day": "d2"}, None, 400),
-    ]), spec)
+    # pk 1's insert and update in separate batches, so its sign history
+    # accumulates; pk 2, inserted and deleted in one batch, keeps its
+    # state row and the cancel row after it
+    for events in (
+        [("insert", None, {"id": 1, "amount": 1.0, "day": "d1"}, 100)],
+        [("update", {"id": 1, "amount": 1.0, "day": "d1"}, {"id": 1, "amount": 2.0, "day": "d1"}, 200)],
+        [("insert", None, {"id": 2, "amount": 5.0, "day": "d2"}, 300),
+         ("delete", {"id": 2, "amount": 5.0, "day": "d2"}, None, 400)],
+    ):
+        apply_cdc_batch(t, _typed(spark, events), spec)
     before = read_current_state(t, spec).collect()
     assert t.read().count() == 5  # signed rows accumulated
     compact_table(t, spec)

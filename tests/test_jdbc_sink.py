@@ -304,6 +304,20 @@ def test_jdbc_sink_collapsing_engine_signed_append(spark, tmp_path):
             .option("dbtable", "APP.C").load().collect()]
     assert sorted(rows) == [(1, -1), (1, 1), (2, 1)]  # all three, signed
 
+    # an insert and three updates of one key: the store's fold ships the
+    # last state row only
+    sink.apply_batch(spark.createDataFrame([
+        ("insert", 3, 1.0, 20, 2), ("delete", 3, 1.0, 21, 1),
+        ("insert", 3, 2.0, 21, 2), ("delete", 3, 2.0, 22, 1),
+        ("insert", 3, 3.0, 22, 2), ("delete", 3, 3.0, 23, 1),
+        ("insert", 3, 4.0, 23, 2),
+    ], "action string, K long, V double, event_unixtime long, action_seq int"),
+        spec, value_columns=["K", "V"])
+    rows = [(r["K"], r["V"], r["sign"]) for r in
+            spark.read.format("jdbc").option("url", url)
+            .option("dbtable", "APP.C").load().filter("K = 3").collect()]
+    assert rows == [(3, 4.0, 1)]
+
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 

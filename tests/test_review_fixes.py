@@ -135,8 +135,10 @@ def test_check_engine_aware_for_collapsing(spark, tmp_path):
     )
     spec = TableSpec(schema="db", table="t", pk=("id",), engine=Engine.COLLAPSING_MERGE_TREE)
     t = ParquetTable(spark, str(tmp_path / "t"))
+    # two batches: one batch would fold the insert and update to one row
     apply_cdc_batch(t, _typed(spark, [
-        ("insert", None, {"id": 1, "v": "a"}, 100),
+        ("insert", None, {"id": 1, "v": "a"}, 100)], vschema), spec)
+    apply_cdc_batch(t, _typed(spark, [
         ("update", {"id": 1, "v": "a"}, {"id": 1, "v": "b"}, 200),
     ], vschema), spec)
     source = spark.createDataFrame([(1, "b")], ["id", "v"])
