@@ -24,7 +24,7 @@ All are pure Column expressions — whole-stage-codegen'd, streamable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from synch_spark.config import WIRE_SEQ_COL as _config_wire_seq_col
 
@@ -135,6 +135,15 @@ def filter_dml(
     indistinguishable by design (both carry action_seq=1), so ordering
     matters: filter first, split second.
     """
+    return raw.filter(dml_kept(skip_dmls, skip_delete_tables, skip_update_tables))
+
+
+def dml_kept(
+    skip_dmls: tuple[str, ...] = (),
+    skip_delete_tables: tuple[str, ...] = (),
+    skip_update_tables: tuple[str, ...] = (),
+) -> Column:
+    """T2's skip rule: true for a raw event ``filter_dml`` keeps."""
     qual = F.concat_ws(".", F.col("schema"), F.col("table"))
     cond = F.lit(True)
     if "delete" in skip_dmls:
@@ -145,7 +154,7 @@ def filter_dml(
         cond = cond & ~((F.col("action") == "delete") & qual.isin(*skip_delete_tables))
     if skip_update_tables:
         cond = cond & ~((F.col("action") == "update") & qual.isin(*skip_update_tables))
-    return raw.filter(cond)
+    return cond
 
 
 def filter_tables(

@@ -69,12 +69,13 @@ def collapse_aggregate(
 
     The ClickHouse idiom for aggregating a collapsing table without
     FINAL — correct under pending cancellations, and in Spark a single
-    partial-aggregated groupBy (no window, no join).
+    partial-aggregated groupBy (no window, no join). Groups that cancel
+    to 0 drop (``HAVING sum(Sign) != 0``), whatever the stored layout.
     """
     return df.groupBy(*group_cols).agg(
         F.sum(F.col(value_col) * F.col(sign_column)).alias(f"sum_{value_col}"),
         F.sum(sign_column).alias("net_count"),
-    )
+    ).filter(F.col("net_count") != 0)
 
 
 def engine_view(df: DataFrame, spec: TableSpec) -> DataFrame:

@@ -7,8 +7,9 @@ Parity map (SURVEY §2.3-§2.4, reference EP3
   kafka in production — same code path after normalization)
 - insert_num / insert_interval     -> maxFilesPerTrigger-or-
   maxOffsetsPerTrigger + Trigger.ProcessingTime (W1)
-- per-(table,action) accumulators  -> groupBy-free: each micro-batch is
-  routed per table and merged in one pass (W2)
+- per-(table,action) accumulators  -> one aggregate over the persisted
+  micro-batch counts each table's events, bad rows and DDL rows; each
+  table is then merged in one pass (W2)
 - in-batch pk dedup + delete-before-insert flush
                                    -> operators.cdc_apply (W3/W5)
 - DDL barrier (W7)                 -> 'query' events sort the batch into
@@ -37,7 +38,7 @@ from synch_spark.ddl import apply_alter, parse_alter
 from synch_spark.events import (
     RAW_EVENT_WIRE_SCHEMA,
     WIRE_SEQ_COL,
-    filter_dml,
+    dml_kept,
     parse_values,
     split_updates,
 )
@@ -162,17 +163,32 @@ class CdcPipeline:
         if debezium_types is None:
             debezium_types = self.debezium_types
         raw = batch.persist()
-        batch = raw
         try:
+            routable = (F.col("action").isNotNull() & F.col("schema").isNotNull()
+                        & F.col("table").isNotNull())
+            # a NULL event_unixtime floors to 0 (the earliest segment), on
+            # DDL and data rows alike: a NULL stamp orders against no DDL,
+            # so its row would land in whichever segment the CASE falls to
+            ts = F.coalesce(F.col("event_unixtime"), F.lit(0).cast("long"))
+            # the events the batch applies, by filter_dml's own skip rule:
+            # the count below and the filter cannot disagree
+            kept = (routable & (F.col("action") != "query") & dml_kept(
+                self.cfg.skip_dmls, self.cfg.skip_delete_tables,
+                self.cfg.skip_update_tables))
+            # the prologue's one Spark action, per table: its unroutable
+            # rows, its kept source events (the monitor num; an update is
+            # one) and its DDL rows, which are rare
+            tables = raw.groupBy("schema", "table").agg(
+                F.count(F.when(~routable, 1)).alias("bad"),
+                F.count(F.when(kept, 1)).alias("num"),
+                F.collect_list(F.when(
+                    routable & (F.col("action") == "query"),
+                    F.struct(ts.alias("event_unixtime"), "after"))).alias("ddl"),
+            ).collect()
             # dead-letter capture (reference's --skip-error, continuous.py:120-152,
             # upgraded from silent skip to an inspectable table): rows that
             # didn't parse into a routable event land in _synch_dead_letter
-            bad = batch.filter(
-                F.col("action").isNull()
-                | F.col("schema").isNull()
-                | F.col("table").isNull()
-            )
-            if bad.limit(1).count() > 0:
+            if any(r["bad"] for r in tables):
                 # drop the optional wire-seq column: the dead-letter
                 # table's schema must not flip with the source format.
                 # _epoch stamps as STRING always: epoch_id is a long on
@@ -193,82 +209,56 @@ class CdcPipeline:
                         dl.overwrite(dl.read().withColumn(
                             "_epoch", F.col("_epoch").cast("string")))
                 dl.append(
-                    bad.drop(WIRE_SEQ_COL).withColumn(
+                    raw.filter(~routable).drop(WIRE_SEQ_COL).withColumn(
                         "_epoch", F.lit(str(epoch_id)))
                 )
-            batch = batch.filter(
-                F.col("action").isNotNull()
-                & F.col("schema").isNotNull()
-                & F.col("table").isNotNull()
-            )
-            # DDL barrier: 'query' events are rare — pull them to the driver
-            # NULL-timestamp DDL floors to 0 like the data rows below:
-            # a None boundary would otherwise leave every segment filter
-            # open — the whole batch applied once per segment (distinct
-            # epoch markers defeat the replay guard: doubled appends)
-            # while the DDL itself silently never executes
-            ddls = (
-                batch.filter(F.col("action") == "query")
-                .select("schema", "table", "after",
-                        F.coalesce(F.col("event_unixtime"),
-                                   F.lit(0).cast("long"))
-                        .alias("event_unixtime"))
-                .orderBy("event_unixtime")
-                .collect()
-            )
+            # DDL barrier: 'query' rows sort the batch into segments; data
+            # before a DDL is applied, then the DDL, then the rest
+            ddls = sorted(
+                ({"schema": r["schema"], "table": r["table"], **d.asDict()}
+                 for r in tables for d in r["ddl"]),
+                key=lambda d: d["event_unixtime"])
             # filter raw events FIRST (skip semantics distinguish standalone
-            # deletes from update-halves); each segment splits updates
-            # after counting its source events
-            data = filter_dml(
-                batch.filter(F.col("action") != "query"),
-                self.cfg.skip_dmls,
-                self.cfg.skip_delete_tables,
-                self.cfg.skip_update_tables,
-            )
-            # a NULL event_unixtime fails BOTH sides of every segment
-            # filter below — with a DDL in the batch the row would apply
-            # nowhere and dead-letter nowhere (silent, timing-dependent
-            # loss); floor it to 0 so it lands in the earliest segment,
-            # consistent with the no-DDL path that applies it
-            data = data.withColumn(
-                "event_unixtime",
-                F.coalesce(F.col("event_unixtime"), F.lit(0).cast("long")),
-            )
-            boundaries = [r["event_unixtime"] for r in ddls] + [None]
-            lo = None
-            for i, hi in enumerate(boundaries):
-                seg = data
-                if lo is not None:
-                    seg = seg.filter(F.col("event_unixtime") >= lo)
-                if hi is not None:
-                    seg = seg.filter(F.col("event_unixtime") < hi)
-                self._apply_data_segment(seg, debezium_types,
+            # deletes from update-halves); each segment splits its updates
+            data = raw.filter(kept).withColumn("event_unixtime", ts)
+            counts = [{(r["schema"], r["table"]): r["num"]
+                       for r in tables if r["num"]}]
+            segments = [data]
+            if ddls:
+                # segment i holds ddls[i-1] <= ts < ddls[i]; one more
+                # aggregate counts the tables of every segment at once
+                at = F.col("event_unixtime")
+                seg_of = F.when(at < ddls[0]["event_unixtime"], 0)
+                for i, d in enumerate(ddls[1:], 1):
+                    seg_of = seg_of.when(at < d["event_unixtime"], i)
+                seg_of = seg_of.otherwise(len(ddls))
+                counts = [{} for _ in range(len(ddls) + 1)]
+                for r in data.groupBy(seg_of.alias("seg"), "schema",
+                                      "table").count().collect():
+                    counts[r["seg"]][(r["schema"], r["table"])] = r["count"]
+                segments = [data.filter(seg_of == i) for i in range(len(counts))]
+            for i, seg in enumerate(segments):
+                self._apply_data_segment(seg, counts[i], debezium_types,
                                          epoch_id=epoch_id, segment=i)
-                if hi is not None:
+                if i < len(ddls):
                     self._apply_ddl(ddls[i])
-                    lo = hi
         finally:
             raw.unpersist()
 
     def _apply_data_segment(self, seg: DataFrame,
+                            counts: "dict[tuple[str, str], int]",
                             debezium_types: bool = False,
                             epoch_id: "int | str | None" = None,
                             segment: int = 0) -> None:
+        """One merge per table in ``counts``: {(schema, table): its
+        source events in the segment, the monitor record's ``num``}."""
         # at-least-once replay guard for the NON-idempotent appliers
         # (collapsing/no-pk appends, mv delta folds): one marker per
         # (stream, micro-batch, DDL segment, table) rides in the commit
         epoch = (f"{self.checkpoint_dir}:{epoch_id}:{segment}"
                  if epoch_id is not None else None)
-        # one merge per table present in the segment; table list is tiny.
-        # The same scan counts each table's source events (an update is
-        # one) for its monitor record
-        counts = {
-            (r["schema"], r["table"]): r["count"]
-            for r in seg.groupBy("schema", "table").count().collect()
-        }
         seg = split_updates(seg)
-        present = list(counts)
-        for schema, tbl in present:
+        for schema, tbl in counts:
             spec = self.cfg.tables.get(f"{schema}.{tbl}")
             if spec is None:
                 continue  # unconfigured table: intentionally ignored

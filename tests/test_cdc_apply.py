@@ -489,6 +489,68 @@ def test_replacing_merge_job_budget(spark, tmp_path):
     assert got[100] == (1, "new") and len(got) == 20
 
 
+#: Spark jobs of one DDL-free micro-batch through ``CdcPipeline`` on two
+#: existing tables, one Replacing and one Collapsing, measured once one
+#: aggregate over the persisted batch replaced the dead-letter probe, the
+#: DDL collect and the per-table counts (14 and 6 before). The jobs
+#: before the first table's apply are that aggregate's alone. Lower them
+#: when the batch loses a job; never raise them.
+BATCH_JOB_BUDGET = 11
+PROLOGUE_JOB_BUDGET = 3
+
+
+def test_micro_batch_job_budget(spark, tmp_path, monkeypatch):
+    from synch_spark.config import SyncConfig
+    from synch_spark.streaming import pipeline as pipeline_mod
+    from synch_spark.streaming.pipeline import CdcPipeline
+
+    cfg = SyncConfig()
+    cfg.add_table(TableSpec(schema="db", table="r", pk=("id",),
+                            engine=Engine.REPLACING_MERGE_TREE))
+    cfg.add_table(TableSpec(schema="db", table="c", pk=("id",),
+                            engine=Engine.COLLAPSING_MERGE_TREE))
+    pipe = CdcPipeline(spark=spark, cfg=cfg, warehouse=str(tmp_path / "wh"),
+                       checkpoint_dir=str(tmp_path / "ckpt"),
+                       value_schemas={"db.r": VALUE_SCHEMA,
+                                      "db.c": VALUE_SCHEMA})
+
+    def batch(rows):
+        return spark.createDataFrame([
+            ("db", tbl, a, json.dumps(b) if b else None,
+             json.dumps(af) if af else None, us)
+            for tbl, a, b, af, us in rows], RAW_EVENT_SCHEMA)
+
+    def row(k, v):
+        return {"id": k, "amount": v}
+
+    pipe.apply_batch(batch(
+        [(t, "insert", None, row(k, "a"), 1) for t in ("r", "c")
+         for k in range(10)]), 0)
+    ev = batch([(t, a, b, af, 10) for t in ("r", "c") for a, b, af in (
+        ("update", row(1, "a"), row(1, "b")), ("delete", row(2, "a"), None),
+        ("insert", None, row(50, "n")))])
+    before_apply = []
+
+    def first_apply(*args, **kwargs):
+        if not before_apply:
+            sc = spark.sparkContext
+            before_apply.append(len(sc.statusTracker().getJobIdsForGroup(
+                sc.getLocalProperty("spark.jobGroup.id"))))
+        return apply_cdc_batch(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "apply_cdc_batch", first_apply)
+    with spark_jobs(spark) as jobs:
+        pipe.apply_batch(ev, 1)
+    assert 0 < before_apply[0] <= PROLOGUE_JOB_BUDGET
+    assert before_apply[0] < len(jobs) <= BATCH_JOB_BUDGET
+    for t in ("r", "c"):
+        got = read_current_state(
+            ParquetTable(spark, str(tmp_path / "wh" / "db" / t)),
+            cfg.tables[f"db.{t}"]).collect()
+        assert {r["id"]: r["amount"] for r in got} == {
+            **{k: "a" for k in range(10) if k != 2}, 1: "b", 50: "n"}
+
+
 def test_merge_reads_only_the_dvs_of_the_files_it_touches(spark, tmp_path,
                                                           monkeypatch):
     from synch_spark.sources import dv

@@ -483,6 +483,74 @@ def test_null_event_unixtime_applies_even_with_ddl_in_batch(spark, tmp_path, pip
     assert {r["id"] for r in t.read().collect()} == {7, 8}
 
 
+def test_batch_bookkeeping_dead_letter_skip_ddl_segments_and_num(spark,
+                                                                 tmp_path):
+    """One batch holding every kind of bookkeeping the micro-batch
+    prologue does: an unroutable row (NULL table), two tables, a delete
+    skipped through skip_delete_tables, and an ADD COLUMN between data
+    rows. The bad row is dead-lettered with its _epoch, the ALTER lands
+    between the two segments, each segment's commit records the source
+    events it kept as its monitor ``num``, and nothing else is
+    written."""
+    cfg = SyncConfig(skip_delete_tables=("db.t",))
+    # a window wide enough for history() to list every commit
+    cfg.add_table(TableSpec(schema="db", table="t", pk=("id",),
+                            engine=Engine.REPLACING_MERGE_TREE, retain=8))
+    cfg.add_table(TableSpec(schema="db", table="u", pk=("id",),
+                            engine=Engine.COLLAPSING_MERGE_TREE, retain=8))
+    wh = tmp_path / "wh"
+    pipe = CdcPipeline(spark=spark, cfg=cfg, warehouse=str(wh),
+                       checkpoint_dir=str(tmp_path / "ckpt"),
+                       value_schemas={"db.t": VALUE_SCHEMA,
+                                      "db.u": VALUE_SCHEMA})
+
+    def row(k, note):
+        return {"id": k, "amount": float(k), "note": note}
+
+    def raw_df(events):
+        # a parsed source marks nothing non-nullable (see the JSON read
+        # above); the declared schema would refuse the unroutable row
+        from synch_spark.events import RAW_EVENT_SCHEMA
+
+        nullable = T.StructType([T.StructField(f.name, f.dataType)
+                                 for f in RAW_EVENT_SCHEMA.fields])
+        return spark.createDataFrame([
+            (s, t, a, json.dumps(b) if b else None,
+             json.dumps(af) if af else None, us)
+            for s, t, a, b, af, us in events], nullable)
+
+    pipe.apply_batch(raw_df([
+        ("db", "t", "insert", None, row(1, "a"), 100),
+        ("db", "t", "insert", None, row(3, "a"), 100),
+        ("db", "u", "insert", None, row(1, "a"), 100),
+        ("db", "t", "delete", row(1, "a"), None, 110),  # skipped
+        ("db", None, "insert", None, row(9, "a"), 120),  # unroutable
+        ("db", "t", "query", None,
+         {"query": "ALTER TABLE db.t ADD COLUMN note varchar(8)"}, 150),
+        ("db", "t", "insert", None, row(2, "b"), 200),
+        ("db", "t", "update", row(1, "a"), row(1, "c"), 210),
+        ("db", "u", "delete", row(1, "a"), None, 200),
+        ("db", "u", "insert", None, row(2, "b"), 210),
+    ]), 7)
+
+    dead = ParquetTable(spark, str(wh / "_synch_dead_letter")).read()
+    assert [(r["schema"], r["table"], r["_epoch"]) for r in dead.collect()] \
+        == [("db", None, "7")]
+    t = ParquetTable(spark, str(wh / "db" / "t"), retain=8)
+    # rows before the ALTER parsed without the column; rows after, with it
+    assert sorted((r["id"], r["note"]) for r in t.read().collect()) == [
+        (1, "c"), (2, "b"), (3, None)]
+    rec = {"alias": "default", "batch": 7, "type": 2}
+    assert [(h["op"], h["info"]) for h in t.history()] == [
+        ("overwrite", {**rec, "num": 2}), ("ddl", None),
+        ("merge", {**rec, "num": 2})]
+    u = ParquetTable(spark, str(wh / "db" / "u"), retain=8)
+    assert [h["info"] for h in u.history()] == [
+        {**rec, "num": 1}, {**rec, "num": 2}]
+    assert sorted(os.listdir(wh)) == ["_synch_dead_letter", "db"]
+    assert sorted(os.listdir(wh / "db")) == ["t", "u"]
+
+
 def test_collapsing_replay_same_epoch_is_idempotent(spark, tmp_path):
     """foreachBatch replays the whole micro-batch after a late failure;
     the collapsing append is NOT last-wins, so without the epoch marker
