@@ -295,9 +295,11 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
     # the masked files, so a wider batch type (a long key into an int
     # table) would split the table's physical schema. One output file
     # per partition for a micro-batch; bulk batches split at ~2M rows so
-    # a backfill doesn't land as one jumbo file.
+    # a backfill doesn't land as one jumbo file. Rows are pk-sorted within
+    # each file (no extra job): sorted keys delta-encode small.
     df = (upserts.select(*[F.col(f.name).cast(f.dataType) for f in schema])
-          .coalesce(max(1, -(-n_up // 2_000_000))) if n_up else None)
+          .coalesce(max(1, -(-n_up // 2_000_000)))
+          .sortWithinPartitions(*pk) if n_up else None)
     table.overwrite_cow_files(df, remove, expected_base=base, key=pk[0],
                               partition_by=spec.partition_by, dvs=dvs,
                               info=info)

@@ -58,6 +58,10 @@ def get_spark(app_name: str = "sparksynch", cpus: int | None = None) -> SparkSes
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
+        # table files store timestamps as INT64 micros, not legacy 12-byte
+        # INT96: a session conf, since Spark's parquet writer takes it from
+        # the SQLConf and ignores writer options (see ensure_session_confs)
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # driver fixtures store events.ts as TIMESTAMP(NANOS); Spark has no
         # nanos timestamp — read as long and convert in read_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -70,10 +74,11 @@ def get_spark(app_name: str = "sparksynch", cpus: int | None = None) -> SparkSes
 def ensure_session_confs(spark: SparkSession) -> None:
     """Make an externally-created session (e.g. the driver's) safe for our
     queries: nanos-timestamp fixtures readable, UTC timestamps (oracle
-    parity). Both confs are runtime-settable — verified on a vanilla
-    session."""
+    parity), and table files written with the layout ``get_spark`` gives
+    them (INT64 micros timestamps). All three confs are runtime-settable."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):

@@ -65,6 +65,18 @@ _CURRENT = "_CURRENT"  # informational pointer (the log is the truth)
 _MDIR = "_v"
 _DATA = "data"
 CKPT_EVERY = 10
+#: dictionary page cap of every table file (``_stage``): a column whose
+#: dictionary outgrows it falls back to DELTA_BINARY_PACKED or
+#: DELTA_BYTE_ARRAY pages. Low-cardinality columns (status, kind, sign,
+#: version, qty) stay dictionaries; near-unique ones stop being turned
+#: into index pages zstd cannot shrink, which matters most for a
+#: Collapsing fold's cancel/state pairs (equal ids and times side by
+#: side). Catch-up batch 2 of the replication benchmark (seed 1): its
+#: order_events file 40,400 -> 24,951 B against Spark's 1 MiB default,
+#: orders 37,813 -> 37,247 B; 1 KiB gives the same bytes, 8 KiB keeps
+#: ``note`` a dictionary (+566 B), no dictionaries at all grows
+#: ``status`` 1,245 -> 5,462 B.
+DICTIONARY_PAGE_BYTES = 4096
 #: restore/clone diffs at or above this many files copy via an executor
 #: fan-out instead of a driver-serial loop
 _COPY_FANOUT_MIN = 64
@@ -168,7 +180,9 @@ def _file_uri(path: str) -> str:
 # batch key (lost update). INT96 is excluded too: its min/max has no
 # defined sort order (PARQUET-1065 — legacy writers compared the raw
 # bytes, which is not chronological), so trusting it could also prune
-# a file that holds the key. Remaining numeric stats are always exact.
+# a file that holds the key. Only files of older writers hold INT96;
+# ``_stage`` writes timestamps as INT64 micros, whose range is exact.
+# Remaining numeric stats are always exact.
 _EXACT_STAT_TYPES = {"INT32", "INT64", "FLOAT", "DOUBLE", "BOOLEAN"}
 
 
@@ -427,14 +441,22 @@ class ParquetTable:
         return snap
 
     def _stage(self, df: DataFrame, partition_by: str | None) -> list[str]:
-        """Write ``df`` as zstd parquet into a private ``.staging-*`` dir
-        and pool the files (``_promote_files``); returns the pool-relative
+        """Write ``df`` as parquet into a private ``.staging-*`` dir and
+        pool the files (``_promote_files``); returns the pool-relative
         paths. Nothing is visible to readers until an entry names them.
-        Every table file is written here. Readers take each file's codec
-        from its footer, so files of other codecs (snappy, Spark's
-        default, from older writers) stay readable beside them."""
+        Every table file is written here, in one layout: zstd, v2 data
+        pages (delta encodings for ints, timestamps and strings once a
+        dictionary passes ``DICTIONARY_PAGE_BYTES``), and timestamps as
+        INT64 micros (the session conf ``get_spark`` and
+        ``ensure_session_confs`` set; Spark's writer ignores it as an
+        option). Readers take codec, encodings and timestamp type from
+        each file's footer, so files of older writers (snappy, INT96, v1
+        pages) stay readable beside them."""
         staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:12]}")
-        writer = df.write.mode("overwrite").option("compression", "zstd")
+        writer = (df.write.mode("overwrite").option("compression", "zstd")
+                  .option("parquet.writer.version", "v2")
+                  .option("parquet.dictionary.page.size",
+                          str(DICTIONARY_PAGE_BYTES)))
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(staging)
