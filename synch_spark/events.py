@@ -61,7 +61,7 @@ RAW_EVENT_SCHEMA = T.StructType(
 #: whole transaction, Debezium's millisecond ts_ms) attach it instead of
 #: mutating event_unixtime — fake sub-second digits added to a stamp
 #: that already has real microsecond precision can leapfrog a later
-#: transaction and invert last-wins. compact_batch sorts by it BETWEEN
+#: transaction and invert last-wins. cdc_apply.arrival_order sorts by it BETWEEN
 #: event_unixtime and action_seq; it is never stored in tables
 #: (cdc_apply meta-strips it) and rides the broker hop as an extra JSON
 #: field that old payloads simply lack (parses as null = 0).

@@ -4,11 +4,19 @@ This is the Spark-native rewrite of the reference's consumer flush
 (/root/reference/synch/replication/continuous.py:102-154) and the
 engine-specific ``handle_event`` accumulators:
 
+- The batch's row rules run on Arrow tables, once per batch: the
+  latest-wins and version rule (``net_rows``), the Collapsing fold
+  (``fold_rows``) and the merge's key dict (``_key_dict``). One function
+  per rule, in two placements (``_on_driver``): a streaming batch of at
+  most ``DRIVER_EVENTS_MAX`` events is collected with one ``toArrow()``
+  and its net rows go back to Spark as a LocalRelation, which runs no
+  job; any larger batch, or a caller that gives no count, runs the same
+  function per pk-hash group in ``applyInArrow`` (``compact_batch``,
+  ``fold_collapsing``).
 - W3 in-batch last-wins dedup: the reference keeps a dict keyed by pk so
   a later event for the same pk overwrites an earlier one
-  (/root/reference/synch/writer/merge_tree.py:63-85). Here: window over
-  pk ordered by (event_unixtime, action_seq) desc, row_number()=1 — a
-  single pk-partitioned exchange, skew-safe under AQE.
+  (/root/reference/synch/writer/merge_tree.py:63-85). Here: each pk's
+  latest row in ``arrival_order``.
 - W5 delete-before-insert: the reference issues ALTER DELETE for all
   deleted pks before the batch insert
   (/root/reference/synch/replication/continuous.py:122-135). Compaction
@@ -16,7 +24,7 @@ engine-specific ``handle_event`` accumulators:
   latest), so delete+reinsert in one batch nets to insert, and
   insert+delete nets to delete. Equivalent final state, one pass.
 - Q2 ReplacingMergeTree(version) keeps each pk's max-version row. The
-  merge decides it once, in the batch (compact_batch) and against the
+  merge decides it once, in the batch (net_rows) and against the
   stored row (_merge), so FINAL reads return the stored rows.
 - The merge itself is MERGE emulation without Delta, one path for
   every pk-keyed table (partitioned or not, with or without key stats):
@@ -30,72 +38,221 @@ engine-specific ``handle_event`` accumulators:
   (/root/reference/synch/writer/collapsing_merge_tree.py:37-58); state
   is recovered at read time by engines.collapsing_view. Each batch is
   first folded to at most one cancel row and one state row per key
-  (fold_collapsing), as a ClickHouse merge of the batch would fold it,
-  so stored rows grow with the keys a batch touches, not with its
-  events.
+  (fold_rows), as a ClickHouse merge of the batch would fold it, so
+  stored rows grow with the keys a batch touches, not with its events.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from synch_spark.config import Engine, TableSpec, WIRE_SEQ_COL
 from synch_spark.operators import engines
 from synch_spark.sources.table import ConcurrentWriteError, ParquetTable
 
+#: A batch of at most this many source events (the streaming prologue's
+#: per-table count) runs its row rules on the driver: one ``toArrow()``
+#: of its typed events, at most two rows per event. A 10k-event batch of
+#: the benchmark's tables is ~1 MB of Arrow.
+DRIVER_EVENTS_MAX = 100_000
 
-def arrival_order(events: DataFrame):
-    """The order a batch's events arrived in, as one sortable struct:
-    (event_unixtime, wire seq, action_seq).
+#: pk-hash groups of the grouped placement: each group's rows are one
+#: Arrow table in a Python worker, so a bulk batch of N rows holds about
+#: N / GROUPS rows per call.
+GROUPS = 256
 
-    When the frame carries the decoder-attached wire-order column
+
+def _arrival_cols(columns) -> list[str]:
+    """The columns of ``arrival_order``, as far as ``columns`` has them."""
+    return [c for c in ("event_unixtime", WIRE_SEQ_COL, "action_seq")
+            if c in columns]
+
+
+def _dense(cols) -> np.ndarray:
+    """Each row's 0-based dense rank over the Arrow ``cols`` together:
+    ascending, column by column, NULL first; equal rows share a rank."""
+    ranks = [pc.rank(c, null_placement="at_start", tiebreaker="dense")
+             .to_numpy().astype(np.int64) for c in cols]
+    if len(ranks) == 1:
+        return ranks[0] - 1
+    order = np.lexsort(ranks[::-1])
+    s = np.stack(ranks)[:, order]
+    out = np.empty(len(order), np.int64)
+    out[order] = np.concatenate(
+        [[0], np.cumsum((s[:, 1:] != s[:, :-1]).any(axis=0))])[:len(order)]
+    return out
+
+
+def arrival_order(t: pa.Table) -> np.ndarray:
+    """The order a batch's events arrived in, as each row's dense rank
+    over (event_unixtime, wire seq, action_seq); rows that tie share one.
+
+    When the batch carries the decoder-attached wire-order column
     (events.WIRE_SEQ_COL), it breaks event_unixtime ties BEFORE
     action_seq: distinct wire changes sharing one stamp (a wal2json
     transaction's shared commit timestamp, Debezium's millisecond ts_ms)
     resolve in wire order, while an update's delete+insert halves (same
     wire seq) still resolve by action_seq. Absent/null seqs sort as 0 —
     the pre-upgrade arbitrary-tie contract."""
-    keys = [F.col("event_unixtime")]
-    if WIRE_SEQ_COL in events.columns:
-        keys.append(F.coalesce(F.col(WIRE_SEQ_COL), F.lit(0)))
-    keys.append(F.col("action_seq"))
-    return F.struct(*keys)
+    return _dense([pc.fill_null(t[c], 0) if c == WIRE_SEQ_COL else t[c]
+                   for c in _arrival_cols(t.column_names)])
 
 
-def compact_batch(events: DataFrame, pk: tuple[str, ...],
-                  version: str | None = None) -> DataFrame:
-    """W3: reduce a batch to one net event per pk, the latest in
-    ``arrival_order``.
+def _per_key(ufunc, g: np.ndarray, values: np.ndarray, n: int,
+             init: int) -> np.ndarray:
+    """``ufunc`` (np.maximum, np.minimum) of ``values`` per key id ``g``
+    in [0, n); ``init`` for a key without values."""
+    out = np.full(n, init, np.int64)
+    ufunc.at(out, g, values)
+    return out
 
-    ``events`` must already have typed row columns (events.parse_values)
-    including the pk columns, plus action/event_unixtime/action_seq.
+
+def net_rows(t: pa.Table, pk: tuple[str, ...],
+             version: str | None = None) -> pa.Table:
+    """W3: one net event per pk, the latest in ``arrival_order``; the
+    rows come out sorted by pk.
+
+    ``t`` holds typed row columns including the pk columns, plus
+    action and the ``arrival_order`` columns.
 
     Without ``version`` the latest event wins. With it, a pk nets to its
     latest event if that is a delete (a delete removes the pk whatever
     its version), else to the highest-version upsert after its last
     delete — a tie goes to the later event, a NULL version loses — and
-    ``_deleted`` says whether the batch deleted the pk. All windows
-    share the pk partitioning: one exchange.
+    an added ``_deleted`` column says whether the batch deleted the pk.
     """
-    order = arrival_order(events)
-    out, rank = events.withColumn("_ord", order), [F.col("_ord").desc()]
+    if not t.num_rows:
+        return t if version is None else t.append_column(
+            "_deleted", pa.array([], pa.bool_()))
+    g, o = _dense([t[c] for c in pk]), arrival_order(t)
+    pos = np.arange(len(g))
+    rank, cand = [pos, o], pos
     if version is not None:
-        every = W.partitionBy(*pk)
-        dele = F.col("action") == "delete"
-        out = out.select("*", F.max(order).over(every).alias("_last"),
-                         F.max(F.when(dele, order)).over(every).alias("_del"))
+        n = int(g.max()) + 1
+        dele = pc.fill_null(pc.equal(t["action"], "delete"),
+                            False).to_numpy(zero_copy_only=False)
+        last = _per_key(np.maximum, g, o, n, -1)
+        gone = _per_key(np.maximum, g[dele], o[dele], n, -1)[g]
         # the latest delete, or the upserts after the last delete
-        out = (out.filter(F.when(dele, F.col("_ord") == F.col("_last"))
-                          .otherwise(F.col("_del").isNull()
-                                     | (F.col("_ord") > F.col("_del"))))
-               .withColumn("_deleted", F.col("_del").isNotNull())
-               .drop("_last", "_del"))
-        rank.insert(0, F.col(version).desc_nulls_last())
-    w = W.partitionBy(*pk).orderBy(*rank)
-    return (out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn", "_ord"))
+        cand = np.flatnonzero(np.where(dele, o == last[g], o > gone))
+        rank.append(_dense([t[version]]))  # NULL ranks lowest: it loses
+    rank.append(g)
+    order = cand[np.lexsort([r[cand] for r in rank])]
+    win = order[np.r_[g[order][1:] != g[order][:-1], True]]
+    out = t.take(win)
+    if version is not None:
+        out = out.append_column("_deleted", pa.array(gone[win] >= 0))
+    return out
+
+
+def fold_rows(t: pa.Table, keys: list[str], sign: str) -> pa.Table:
+    """The Collapsing fold of one signed batch: at most one cancel row
+    and one state row per key, sorted by (key, arrival).
+
+    A key is the pk, or (pk, version) for VersionedCollapsing (SURVEY
+    Q4). In ``arrival_order`` a key's group keeps:
+
+    - its first row, if that is a cancel (-1): it cancels a stored row;
+    - its last row, if that is a state (+1): the key's new state;
+    - for a key the batch inserts and then deletes (first row +1, last
+      -1), its last state row and the last row. ClickHouse would keep
+      neither; the pair stays as the tombstone backfill_missing needs.
+
+    A group is kept unfolded when its first or last position ties in
+    arrival order (which row is first is then undecided), or when the
+    kept rows' Σ sign differs from the group's (an ill-formed stream: a
+    duplicate insert, a double delete).
+    """
+    if not t.num_rows:
+        return t
+    g, o = _dense([t[c] for c in keys]), arrival_order(t)
+    s = pc.fill_null(t[sign], 0).to_numpy().astype(np.int64)
+    n = int(g.max()) + 1
+    first, last = (_per_key(np.minimum, g, o, n, len(o)),
+                   _per_key(np.maximum, g, o, n, -1))
+    is_first, is_last = o == first[g], o == last[g]
+    # the sign of the first and the last row, a cancel first on a tie
+    s_first = _per_key(np.minimum, g[is_first], s[is_first], n, 2)[g]
+    s_last = _per_key(np.maximum, g[is_last], s[is_last], n, -2)[g]
+    state = _per_key(np.maximum, g[s > 0], o[s > 0], n, -1)[g]
+    keep = ((is_first & (s < 0)) | (is_last & (s > 0))
+            | ((s_first > 0) & (s_last < 0)
+               & (is_last | ((s > 0) & (o == state)))))
+    folds = ((np.bincount(g[is_first], minlength=n) == 1)
+             & (np.bincount(g[is_last], minlength=n) == 1)
+             & (np.bincount(g, s * keep, n) == np.bincount(g, s, n)))
+    rows = np.flatnonzero(keep | ~folds[g])
+    return t.take(rows[np.lexsort((rows, o[rows], g[rows]))])
+
+
+def _on_driver(num: int | None) -> bool:
+    """Whether a batch of ``num`` source events runs its row rules on
+    the driver; None (a caller that did not count) never does."""
+    return num is not None and num <= DRIVER_EVENTS_MAX
+
+
+def _local(spark, rows: pa.Table, schema: T.StructType) -> DataFrame:
+    """Driver-built ``rows`` as a DataFrame of ``schema``: a
+    LocalRelation (no Spark job), in ONE partition so that its write
+    lands one file per table partition (createDataFrame would slice it
+    into defaultParallelism files)."""
+    return spark.createDataFrame(rows, schema).coalesce(1)
+
+
+def _grouped(frame: DataFrame, by, rule, schema: T.StructType,
+             **args) -> DataFrame:
+    """The grouped placement of an Arrow row ``rule``: ``rule(table,
+    **args)`` once per group of ``frame``'s rows by the hash of its
+    ``by`` columns, in the executors' Python workers."""
+    def run(t):  # unannotated: applyInArrow reads annotations as a mode
+        return rule(t, **args)
+
+    return (frame.groupBy(F.pmod(F.xxhash64(*by), F.lit(GROUPS)))
+            .applyInArrow(run, schema))
+
+
+def _net_schema(events: DataFrame, version: str | None) -> T.StructType:
+    """The schema of ``net_rows`` over ``events``."""
+    extra = [T.StructField("_deleted", T.BooleanType())] if version else []
+    return T.StructType([*events.schema.fields, *extra])
+
+
+def compact_batch(events: DataFrame, pk: tuple[str, ...],
+                  version: str | None = None) -> DataFrame:
+    """``net_rows`` of ``events`` per pk-hash group (applyInArrow): the
+    batch's net rows, with ``_deleted`` under a ``version``."""
+    return _grouped(events, pk, net_rows, _net_schema(events, version),
+                    pk=tuple(pk), version=version)
+
+
+@contextlib.contextmanager
+def compacted(events: DataFrame, pk: tuple[str, ...], version: str | None,
+              cols: list[str], num: int | None = None):
+    """The batch's net rows (``net_rows`` over action, ``cols`` and the
+    arrival columns) as a DataFrame, with their key columns (pk, action,
+    and ``_deleted`` and ``version`` under a version) as an Arrow table.
+
+    On the driver (``_on_driver(num)``) that is one ``toArrow()``; the
+    grouped placement persists its net rows for the key collect and the
+    caller's write, until the block exits."""
+    frame = events.select("action", *cols, *_arrival_cols(events.columns))
+    keys = [*pk, "action", *(["_deleted", version] if version else [])]
+    if _on_driver(num):
+        rows = net_rows(frame.toArrow(), tuple(pk), version)
+        yield (_local(frame.sparkSession, rows, _net_schema(frame, version)),
+               rows.select(keys))
+        return
+    net = compact_batch(frame, pk, version).persist()
+    try:
+        yield net, net.select(*keys).toArrow()
+    finally:
+        net.unpersist()
 
 
 def apply_cdc_batch(
@@ -105,6 +262,7 @@ def apply_cdc_batch(
     value_columns: list[str] | None = None,
     epoch: str | None = None,
     info: dict | None = None,
+    num: int | None = None,
 ) -> None:
     """Merge one micro-batch of typed change events into ``table``.
 
@@ -124,13 +282,17 @@ def apply_cdc_batch(
     commit the apply makes (bootstrap overwrite, merge, or append —
     see ``ParquetTable.overwrite``). An apply that commits nothing
     (deletes of absent keys, a replayed append) stores no record.
+
+    ``num``: the batch's source-event count, when the caller has it (the
+    streaming prologue does). Up to ``DRIVER_EVENTS_MAX`` the row rules
+    run on the driver; without it they run per pk-hash group.
     """
     if spec.engine in (Engine.COLLAPSING_MERGE_TREE, Engine.VERSIONED_COLLAPSING_MERGE_TREE):
         _apply_collapsing(table, events, spec, value_columns, epoch=epoch,
-                          info=info)
+                          info=info, num=num)
     else:
         _apply_merging(table, events, spec, value_columns, epoch=epoch,
-                       info=info)
+                       info=info, num=num)
 
 
 def _row_cols(events: DataFrame, value_columns: list[str] | None) -> list[str]:
@@ -146,6 +308,7 @@ def _apply_merging(
     value_columns: list[str] | None,
     epoch: str | None = None,
     info: dict | None = None,
+    num: int | None = None,
 ) -> None:
     cols = _row_cols(events, value_columns)
     if not spec.has_pk:
@@ -157,11 +320,7 @@ def _apply_merging(
 
     pk = spec.pk
     version = replacing_version(spec, cols)
-    net = compact_batch(events, pk, version).select(
-        "action", *cols, *(["_deleted"] if version else []))
-    # one cache: net is used for the keys, the semi-join and the inserts
-    net = net.persist()
-    try:
+    with compacted(events, pk, version, cols, num) as (net, keys):
         upserts = net.filter(F.col("action") != "delete").select(*cols)
         if not table.exists:
             try:
@@ -179,11 +338,7 @@ def _apply_merging(
                 # stream on a one-off bootstrap race
                 pass
 
-        # one job over the cached net rows: {pk: (upsert?, [deleted?,
-        # version])}, the merge's pruning probe, write width and rivals
-        batch = {_key(r[:len(pk)]): tuple(r[len(pk):]) for r in net.select(
-            *pk, F.col("action") != "delete",
-            *(["_deleted", version] if version else [])).collect()}
+        batch = _key_dict(keys, pk, version)
         if not batch:
             return
 
@@ -196,22 +351,25 @@ def _apply_merging(
             lambda: _merge(table, net.select(*pk), upserts, batch, spec,
                            version, info),
             retries=3)
-    finally:
-        net.unpersist()
+
+
+def _key_dict(keys: pa.Table, pk: tuple[str, ...],
+              version: str | None) -> dict:
+    """{pk: (upsert?,)} of the net rows, or {pk: (upsert?, deleted?,
+    version)} under a ``version``: the merge's pruning probe, write width
+    and rivals. Keys are Arrow's Python values, as ``table.locate``
+    returns them (binary as bytes, timestamps tz-aware)."""
+    flags = [pc.not_equal(keys["action"], "delete"),
+             *([keys["_deleted"], keys[version]] if version else [])]
+    return dict(zip(zip(*(keys[c].to_pylist() for c in pk)),
+                    zip(*(f.to_pylist() for f in flags))))
 
 
 def replacing_version(spec: TableSpec, cols: list[str]) -> str | None:
     """Q2: the version column whose max a Replacing table keeps per pk,
-    if the batch carries it (compact_batch, _merge)."""
+    if the batch carries it (net_rows, _merge)."""
     return (spec.version_column if spec.engine == Engine.REPLACING_MERGE_TREE
             and spec.version_column in cols else None)
-
-
-def _key(values) -> tuple:
-    """Collected pk values as a dict key: PySpark collects BinaryType as
-    an unhashable bytearray (before 4.1, or with
-    spark.sql.execution.pyspark.binaryAsBytes off)."""
-    return tuple(bytes(v) if isinstance(v, bytearray) else v for v in values)
 
 
 #: Stale upserts up to this many leave by an IN list (no Spark job, but
@@ -224,7 +382,7 @@ STALE_IN_MAX = 32
 def _outranks(stored, net: tuple | None) -> bool:
     """Whether a live stored row of version ``stored`` beats the batch's
     net row ``net`` = (upsert?, deleted?, version) — the rule of
-    compact_batch, with the stored row as the earlier event."""
+    net_rows, with the stored row as the earlier event."""
     if net is None or not net[0] or net[1] or stored is None:
         return False
     return net[2] is None or stored > net[2]
@@ -237,7 +395,6 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
     row with a batch pk (under a ``version``, drop instead the upserts a
     stored row outranks), append the net upserts, commit both in one
     entry anchored to the head it read."""
-    import numpy as np
     import pyarrow.parquet as pq
 
     from synch_spark.sources import bloom
@@ -265,7 +422,7 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
             if pos in dead:
                 continue  # masked already: no rival, nothing to mask
             if stored and _outranks(stored[-1],
-                                    batch.get(key := _key(stored[:-1]))):
+                                    batch.get(key := tuple(stored[:-1]))):
                 stale.add(key)  # the stored row stays
             else:
                 new.append(pos)
@@ -312,8 +469,9 @@ def _apply_collapsing(
     value_columns: list[str] | None,
     epoch: str | None = None,
     info: dict | None = None,
+    num: int | None = None,
 ) -> None:
-    """W6: append the batch's folded signed rows (fold_collapsing).
+    """W6: append the batch's folded signed rows (``folded``).
 
     No merge: read-time collapsing_view recovers the current state. The
     event time rides along as a hidden ordering column for it. ``epoch``
@@ -321,65 +479,51 @@ def _apply_collapsing(
     append.
     """
     cols = _row_cols(events, value_columns)
-    out = fold_collapsing(events, spec, cols).select(
+    out = folded(events, spec, cols, num).select(
         *cols, spec.sign_column,
         F.col("event_unixtime").alias("_event_unixtime"))
     table.append(out, spec.partition_by, epoch=epoch, info=info)
 
 
+def _fold_keys(spec: TableSpec, cols: list[str]) -> list[str]:
+    """The fold's key: the pk, or (pk, version) for VersionedCollapsing
+    (SURVEY Q4)."""
+    keys = list(spec.pk)
+    if (spec.engine == Engine.VERSIONED_COLLAPSING_MERGE_TREE
+            and spec.version_column in cols):
+        keys.append(spec.version_column)
+    return keys
+
+
+def folded(events: DataFrame, spec: TableSpec, cols: list[str],
+           num: int | None = None) -> DataFrame:
+    """A Collapsing batch signed and folded (``fold_rows``): the one
+    write rule of the store (_apply_collapsing) and the JDBC sink. The
+    rows hold ``cols``, the sign and the arrival columns. On the driver
+    when ``_on_driver(num)``, else ``fold_collapsing``."""
+    from synch_spark.events import annotate_sign
+
+    frame = events.select("action", *cols, *_arrival_cols(events.columns))
+    if not (spec.has_pk and _on_driver(num)):
+        return fold_collapsing(frame, spec, cols)
+    signed = annotate_sign(frame, spec.sign_column)
+    return _local(signed.sparkSession, fold_rows(
+        signed.toArrow(), _fold_keys(spec, cols), spec.sign_column),
+        signed.schema)
+
+
 def fold_collapsing(events: DataFrame, spec: TableSpec,
                     cols: list[str]) -> DataFrame:
-    """T6 + fold: sign a Collapsing batch (+1 insert / -1 delete) and keep
-    at most one cancel row and one state row per key — the one write
-    rule of the store (_apply_collapsing) and the JDBC sink.
-
-    A key is the pk, or (pk, version) for VersionedCollapsing (SURVEY
-    Q4). In ``arrival_order`` a key's group keeps:
-
-    - its first row, if that is a cancel (-1): it cancels a stored row;
-    - its last row, if that is a state (+1): the key's new state;
-    - for a key the batch inserts and then deletes (first row +1, last
-      -1), its last state row and the last row. ClickHouse would keep
-      neither; the pair stays as the tombstone backfill_missing needs.
-
-    A group is written unfolded when its first or last position ties in
-    arrival order (which row is first is then undecided), or when the
-    kept rows' Σ sign differs from the group's (an ill-formed stream: a
-    duplicate insert, a double delete). Every aggregate is an unbounded
-    window over the one key partitioning: one exchange.
-    """
+    """T6 + fold: sign a Collapsing batch (+1 insert / -1 delete) and run
+    ``fold_rows`` per pk-hash group (applyInArrow). A table without a pk
+    keeps every signed row."""
     from synch_spark.events import annotate_sign
 
     signed = annotate_sign(events, spec.sign_column)
     if not spec.has_pk:
         return signed
-    keys = list(spec.pk)
-    if (spec.engine == Engine.VERSIONED_COLLAPSING_MERGE_TREE
-            and spec.version_column in cols):
-        keys.append(spec.version_column)
-    # SQL text, not Column trees: one py4j call per expression, where
-    # the same Column trees took ~800 calls to build
-    over = f" OVER (PARTITION BY {', '.join(map(_sql_name, keys))})"
-    sign = _sql_name(spec.sign_column)
-    out = signed.select("*", arrival_order(signed).alias("_ord")).selectExpr(
-        "*", f"min(named_struct('o', _ord, 's', {sign})){over} AS _first",
-        f"max(named_struct('o', _ord, 's', {sign})){over} AS _last",
-        f"max(IF({sign} > 0, _ord, NULL)){over} AS _state",
-        f"sum({sign}){over} AS _net")
-    first, last = "_ord = _first.o", "_ord = _last.o"
-    keep = (f"({first} AND {sign} < 0) OR ({last} AND {sign} > 0) OR "
-            f"(_first.s > 0 AND _last.s < 0 AND "
-            f"({last} OR ({sign} > 0 AND _ord = _state)))")
-    folds = (f"sum(CAST({first} AS INT)){over} = 1 AND "
-             f"sum(CAST({last} AS INT)){over} = 1 AND "
-             f"sum(IF({keep}, {sign}, 0)){over} = _net")
-    return (out.selectExpr(*map(_sql_name, signed.columns),
-                           f"({keep}) OR NOT ({folds}) AS _kept")
-            .filter("_kept").drop("_kept"))
-
-
-def _sql_name(column: str) -> str:
-    return "`" + column.replace("`", "``") + "`"
+    return _grouped(signed, spec.pk, fold_rows, signed.schema,
+                    keys=_fold_keys(spec, cols), sign=spec.sign_column)
 
 
 def compact_table(

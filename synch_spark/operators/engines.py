@@ -9,8 +9,9 @@ time (or eagerly at compaction time). SURVEY §2.7 Q1-Q4.
 MergeTree and Replacing need no view: their merge keeps one row per pk
 (Replacing: the max-version one, cdc_apply._merge), so the stored rows
 are the final state. Collapsing tables store signed rows, at most one
-cancel and one state row per key and batch (cdc_apply.fold_collapsing),
-so the views below still cancel across batches. Scale note: the
+cancel and one state row per key and batch (the write folds each batch's
+Arrow rows with cdc_apply.fold_rows, no Spark window), so the views
+below still cancel across batches. Scale note: the
 collapsing views shuffle once on the pk — at 100 TB a single hash-partitioned exchange, skew-safe under
 AQE, gone entirely when the table is bucketed by pk; the net-sign
 aggregate is a partial-agg (map-side combine) groupBy.

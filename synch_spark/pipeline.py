@@ -300,7 +300,7 @@ def backfill_missing(
       CDC stream DELETED still "exists" and is correctly skipped: the
       cancel row of a stored key, or, for a key one batch inserts and
       deletes, the state row and cancel row the batch fold keeps
-      (cdc_apply.fold_collapsing). For merge-family engines a CDC
+      (cdc_apply.fold_rows). For merge-family engines a CDC
       delete leaves a true hole the snapshot will re-fill if the source
       still has the row — run deletes after backfill completes, or
       reconcile with repair() afterwards.

@@ -6,11 +6,13 @@ touched pk followed by a bulk INSERT
 /root/reference/synch/writer/merge_tree.py:28-61). This sink reproduces
 that exact two-step shape Spark-side:
 
-1. the batch compacts to one net action per pk (cdc_apply.compact_batch
-   — W3), so delete-then-insert is order-free within the batch; under
-   a Replacing version column the batch's max version wins, as in the
-   parquet merge, but against the target's rows the target's own engine
-   (a ClickHouse ReplacingMergeTree) compares versions;
+1. the batch compacts to one net action per pk (cdc_apply.net_rows —
+   W3, the store's rule and placement: on the driver for a counted
+   streaming batch, per pk-hash group otherwise), so delete-then-insert
+   is order-free within the batch; under a Replacing version column the
+   batch's max version wins, as in the parquet merge, but against the
+   target's rows the target's own engine (a ClickHouse
+   ReplacingMergeTree) compares versions;
 2. DELETE .. WHERE pk IN (...) runs on the driver over a plain JDBC
    connection (the key set is micro-batch sized — the same bound the
    broadcast merge already relies on — chunked into bounded IN-lists;
@@ -39,8 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from synch_spark.config import TableSpec
-from synch_spark.operators.cdc_apply import (compact_batch, fold_collapsing,
-                                             replacing_version)
+from synch_spark.operators.cdc_apply import compacted, folded, replacing_version
 
 IN_CHUNK = 1000  # keys per DELETE statement
 
@@ -290,38 +291,37 @@ class JdbcSink:
         events: DataFrame,
         spec: TableSpec,
         value_columns: list[str] | None = None,
+        num: int | None = None,
     ) -> None:
         """One micro-batch: compact -> driver-side chunked DELETE of the
         touched pks -> distributed INSERT of the net upserts. Collapsing
         engines instead take the reference's signed-insert path
         (writer/collapsing_merge_tree.py:37-58): the store's folded +1/-1
-        rows (cdc_apply.fold_collapsing), no deletes — the target (e.g.
-        an actual CollapsingMergeTree) collapses them itself."""
+        rows (cdc_apply.folded), no deletes — the target (e.g. an actual
+        CollapsingMergeTree) collapses them itself. ``num``: the batch's
+        source-event count, as ``apply_cdc_batch`` takes it."""
         from synch_spark.config import Engine
         from synch_spark.operators.cdc_apply import _row_cols
 
         cols = _row_cols(events, value_columns)
         if spec.engine in (Engine.COLLAPSING_MERGE_TREE,
                            Engine.VERSIONED_COLLAPSING_MERGE_TREE):
-            self._write(fold_collapsing(events, spec, cols)
+            self._write(folded(events, spec, cols, num)
                         .select(*cols, spec.sign_column))
             return
         if not spec.has_pk:
             inserts = events.filter(F.col("action") == "insert").select(*cols)
             self._write(inserts)
             return
-        net = compact_batch(events, spec.pk, replacing_version(spec, cols)
-                            ).select("action", *cols).persist()
-        try:
+        with compacted(events, spec.pk, replacing_version(spec, cols), cols,
+                       num) as (net, keys):
             # micro-batch sized
-            keys = [tuple(r) for r in net.select(*spec.pk).collect()]
-            if keys:
+            pks = list(zip(*(keys[c].to_pylist() for c in spec.pk)))
+            if pks:
                 self._execute(
-                    delete_statements(self.target_table, spec.pk, keys)
+                    delete_statements(self.target_table, spec.pk, pks)
                 )
-            self._write(net.filter(F.col("action") != "delete").drop("action"))
-        finally:
-            net.unpersist()
+            self._write(net.filter(F.col("action") != "delete").select(*cols))
 
     def apply_ddl(self, ops) -> None:
         """DDL channel for a JDBC-sunk table: translate the parsed

@@ -35,6 +35,7 @@ Design:
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
 import os
@@ -51,8 +52,9 @@ _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
 
 def bloom_safe_key(value) -> bool:
-    """Key types whose build-side (pyarrow) and probe-side (Spark
-    ``collect``) python representations are IDENTICAL — the
+    """Key types whose build-side (pyarrow) and probe-side (the merge's
+    Arrow keys, a caller's Spark ``collect``) python representations are
+    IDENTICAL — the
     no-false-negative invariant is only type-enforceable for these.
     Timestamps (tz-aware vs naive), decimals, and floats (float32
     widening) can differ across the two paths, and a divergence would
@@ -189,6 +191,16 @@ def might_contain_any(bloom, keys) -> bool:
     return False
 
 
+def _comparable(value):
+    """``value`` in the one form a key range and a probe key compare in:
+    a datetime as UTC-naive. Footer ranges and Arrow keys carry tz-aware
+    UTC datetimes, Spark's ``collect`` naive local ones, and the two
+    kinds do not order against each other."""
+    if isinstance(value, datetime.datetime):
+        return value.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return value
+
+
 def prune_files(table, column: str, keys) -> list[str] | None:
     """Current-version data files that might hold any of ``keys`` in
     ``column``, by the log entry's key range (footer fallback for
@@ -202,7 +214,7 @@ def prune_files(table, column: str, keys) -> list[str] | None:
     from synch_spark.sources.table import file_key_range
 
     try:
-        sk = sorted(keys)
+        sk = sorted(map(_comparable, keys))
     except TypeError:
         # mixed-type keys don't order: same contract as the bisect
         # fallback below — degrade to "can't prove anything" (full scan)
@@ -221,6 +233,8 @@ def prune_files(table, column: str, keys) -> list[str] | None:
                 rng = file_key_range(path, column)
             except Exception:  # unreadable footer: treat as statless
                 rng = None
+        if rng is not None:
+            rng = tuple(map(_comparable, rng))
         if rng is None:
             if bl is None:
                 return None  # this file is unprovable either way

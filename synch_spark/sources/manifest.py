@@ -28,8 +28,8 @@ TIMESTAMP / DECIMAL footer stats as datetime.date / datetime.datetime /
 decimal.Decimal OBJECTS (logical, not physical values — json.dump would
 TypeError and kill every micro-batch of a temporal-pk table), so those
 encode as a ["d"|"t"|"n", iso/str] tag pair and ``load_manifest``
-decodes them back to the same comparable objects the footer path and
-Spark-collected batch keys use. A value no encoder covers stores the
+decodes them back to the objects the footer path returns
+(``bloom.prune_files`` compares datetimes in one form, UTC-naive). A value no encoder covers stores the
 whole range as null (bloom/conservative rules) rather than crashing.
 """
 

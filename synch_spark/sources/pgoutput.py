@@ -237,7 +237,7 @@ def iter_pgoutput_changes(
     transaction tie on (event_unixtime, action_seq) and last-wins picks
     arbitrarily; the counter carries wire order out-of-band (the
     wal2json/Debezium convention — events.WIRE_SEQ_COL), which
-    compact_batch sorts between event_unixtime and action_seq. Emission
+    cdc_apply.arrival_order sorts between event_unixtime and action_seq. Emission
     order = wire order within a transaction (buffered streamed/prepared
     chunks preserve arrival order through their commit), and commit
     order across transactions. Opt-in: graded/offline decodes keep the

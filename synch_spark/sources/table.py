@@ -850,12 +850,15 @@ class ParquetTable:
         """{rel: [(row position, *``carry`` column values)]} of the rows
         of the pool files ``rels`` (read under ``snap``'s schema, masked
         rows included) whose ``on`` columns match a row of ``keys`` —
-        one broadcast semi-join, the merge's search for its rivals."""
+        one broadcast semi-join, the merge's search for its rivals. The
+        values are Arrow's Python values, as the merge's Arrow-built key
+        dict holds them (binary as bytes, timestamps tz-aware)."""
         by_uri = {_file_uri(self._abs(r)): r for r in rels}
         hits: dict[str, list[tuple]] = {}
-        for f, *hit in (self._scan(rels, snap, None, positions=True)
-                        .join(F.broadcast(keys), on, "left_semi")
-                        .select(_POS_FILE, _POS_ROW, *carry).collect()):
+        found = (self._scan(rels, snap, None, positions=True)
+                 .join(F.broadcast(keys), on, "left_semi")
+                 .select(_POS_FILE, _POS_ROW, *carry).toArrow())
+        for f, *hit in zip(*(c.to_pylist() for c in found.columns)):
             hits.setdefault(by_uri[f], []).append(tuple(hit))
         return hits
 

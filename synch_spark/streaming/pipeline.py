@@ -284,11 +284,12 @@ class CdcPipeline:
                     "num": counts[(schema, tbl)], "type": 2}
             sink = self.jdbc_sinks.get(spec.qualified_name)
             if sink is not None:
-                sink.apply_batch(typed, spec)
+                sink.apply_batch(typed, spec, num=info["num"])
                 log_monitor_row(schema, tbl, info)
                 continue
             table = self.table_for(spec)
-            apply_cdc_batch(table, typed, spec, epoch=epoch, info=info)
+            apply_cdc_batch(table, typed, spec, epoch=epoch, info=info,
+                            num=info["num"])
             for view in self.views:
                 if view.source == spec.qualified_name:
                     # base read AFTER apply: min/max partial recompute must

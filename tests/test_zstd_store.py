@@ -341,3 +341,63 @@ def test_timestamp_pk_merges_with_an_exact_key_range(spark, tmp_path):
     state.update({new: 2.5, _ts(40): 40.0})
     state.pop(_ts(7))
     assert read() == sorted(state.items())
+
+
+def test_timestamp_pk_prunes_to_the_overlapping_file(spark, tmp_path,
+                                                     monkeypatch):
+    """Two files of disjoint TIMESTAMP pk ranges: a probe inside the first
+    range keeps only that file, whether its keys are tz-aware (Arrow) or
+    naive (Spark ``collect``), and the merges that probe so read the
+    oracle's rows."""
+    import datetime
+
+    from synch_spark.sources import bloom
+    from synch_spark.sources.manifest import load_manifest
+
+    spec = TableSpec(schema="db", table="ts", pk=("ts",),
+                     engine=Engine.REPLACING_MERGE_TREE)
+
+    def events(rows):
+        return spark.createDataFrame(
+            rows, "action string, ts string, v double, event_unixtime long"
+        ).withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
+            "action_seq", F.lit(0))
+
+    def read():
+        return sorted((r["ts"], r["v"]) for r in t.read().select(
+            _text("ts"), "v").collect())
+
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    state = {_ts(i): float(i) for i in range(20)}
+    t.overwrite(spark.createDataFrame(sorted(state.items()),
+                                      "ts string, v double")
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+                .repartitionByRange(2, "ts"), key="ts")
+    ranges = load_manifest(t, "ts")
+    assert len(ranges) == 2 and all(ranges.values())
+    first = min(ranges, key=lambda rel: ranges[rel][0])
+    at = datetime.datetime.fromisoformat(_ts(3))
+    for key in (at.replace(tzinfo=datetime.timezone.utc), at):
+        assert bloom.prune_files(t, "ts", [key]) == [t._abs(first)]
+
+    kept = []
+    real = bloom.prune_files
+    monkeypatch.setattr(bloom, "prune_files", lambda *a: kept.append(
+        real(*a)) or kept[-1])
+    new = "2024-05-02 10:00:00.000001"
+    apply_cdc_batch(t, events([("update", _ts(3), 33.0, 10),
+                               ("delete", _ts(4), 0.0, 10),
+                               ("insert", new, 1.5, 10)]),
+                    spec, value_columns=["ts", "v"])
+    state.update({_ts(3): 33.0, new: 1.5})
+    state.pop(_ts(4))
+    assert read() == sorted(state.items())
+    assert kept == [[t._abs(first)]]
+    apply_cdc_batch(t, events([("update", new, 2.5, 20),
+                               ("delete", _ts(17), 0.0, 20),
+                               ("insert", _ts(40), 40.0, 20)]),
+                    spec, value_columns=["ts", "v"])
+    state.update({new: 2.5, _ts(40): 40.0})
+    state.pop(_ts(17))
+    assert read() == sorted(state.items())
+    assert kept[-1] is not None

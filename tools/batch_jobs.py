@@ -1,5 +1,5 @@
 """Count the Spark jobs of every micro-batch of a replication benchmark
-run, by the ``synch_spark`` call site that launched them.
+run, and time them, by the ``synch_spark`` call site that launched them.
 
     python3 tools/batch_jobs.py --workload catchup_final_read --seed 1 \
         [--seconds 10] [--tree DIR] [--out jobs.json]
@@ -11,7 +11,8 @@ classic ``DataFrame`` actions (``collect``, ``count``, ``take``,
 action runs under a job group of its own, and the jobs it launched are
 read back from ``statusTracker().getJobIdsForGroup`` when it returns;
 the thread's previous job group (a streaming query's own) is restored.
-An action is charged to the micro-batch whose
+Each action's wall time is taken around the same call. An action is
+charged to the micro-batch whose
 ``CdcPipeline._apply_batch`` frame is on the stack (its ``epoch_id``)
 and to the innermost ``synch_spark`` frame on the stack, e.g.
 ``streaming/pipeline.py:195 _apply_batch``. Actions outside a
@@ -20,8 +21,9 @@ that no wrapped action launches (a streaming source's own listing).
 
 ``--tree`` runs the benchmark and the package of another checkout
 (say a ``git archive`` of the parent commit), so one copy of this tool
-counts both sides. Prints, per micro-batch, its jobs and the sites in
-the order they first ran, then the jobs per batch over the run;
+counts both sides. Prints, per micro-batch, its jobs and the wall
+milliseconds of its actions, and each site's jobs and milliseconds in
+the order the sites first ran, then the jobs per batch over the run;
 ``--out`` also writes every counted action as JSON. Stdlib + pyspark;
 it patches classes in memory only and changes no file.
 """
@@ -35,6 +37,7 @@ import os
 import statistics
 import sys
 import threading
+import time
 import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -50,7 +53,7 @@ _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
 
 class Counter:
     """Wraps the actions; ``records`` holds one
-    ``{"batch", "site", "action", "jobs"}`` per counted action."""
+    ``{"batch", "site", "action", "jobs", "ms"}`` per counted action."""
 
     def __init__(self, package_dir: str):
         self.package = os.path.join(os.path.realpath(package_dir), "")
@@ -96,31 +99,36 @@ class Counter:
             group = f"batch-jobs-{uuid.uuid4().hex}"
             sc.setJobGroup(group, f"batch {where[0]}: {where[1]}")
             local.depth = 1
+            t0 = time.perf_counter()
             try:
                 return fn(obj, *args, **kwargs)
             finally:
+                ms = (time.perf_counter() - t0) * 1e3
                 local.depth = 0
                 for k, v in zip(_GROUP_PROPS, saved):
                     sc.setLocalProperty(k, v)
                 jobs = len(sc.statusTracker().getJobIdsForGroup(group))
                 counter.records.append({"batch": where[0], "site": where[1],
-                                        "action": name, "jobs": jobs})
+                                        "action": name, "jobs": jobs,
+                                        "ms": round(ms, 1)})
 
         setattr(cls, name, counted)
 
 
 def report(records: list[dict]) -> None:
-    batches: dict[str, dict[str, int]] = {}
+    batches: dict[str, dict[str, list]] = {}
     for r in records:
-        sites = batches.setdefault(r["batch"], {})
-        sites[r["site"]] = sites.get(r["site"], 0) + r["jobs"]
+        site = batches.setdefault(r["batch"], {}).setdefault(r["site"], [0, 0.0])
+        site[0] += r["jobs"]
+        site[1] += r["ms"]
     totals = []
     for batch, sites in batches.items():
-        total = sum(sites.values())
+        total = sum(jobs for jobs, _ in sites.values())
         totals.append(total)
-        print(f"batch {batch}: {total} jobs")
-        for site, jobs in sites.items():
-            print(f"  {jobs:4d}  {site}")
+        ms = sum(ms for _, ms in sites.values())
+        print(f"batch {batch}: {total} jobs, {ms:.0f} ms")
+        for site, (jobs, ms) in sites.items():
+            print(f"  {jobs:4d} {ms:7.0f} ms  {site}")
     if totals:
         print(f"jobs per batch: {totals} (median "
               f"{statistics.median(totals):g})")
