@@ -7,12 +7,14 @@ engine-specific ``handle_event`` accumulators:
 - The batch's row rules run on Arrow tables, once per batch: the
   latest-wins and version rule (``net_rows``), the Collapsing fold
   (``fold_rows``) and the merge's key dict (``_key_dict``). One function
-  per rule, in two placements (``_on_driver``): a streaming batch of at
-  most ``DRIVER_EVENTS_MAX`` events is collected with one ``toArrow()``
-  and its net rows go back to Spark as a LocalRelation, which runs no
-  job; any larger batch, or a caller that gives no count, runs the same
-  function per pk-hash group in ``applyInArrow`` (``compact_batch``,
-  ``fold_collapsing``).
+  per rule, in two placements chosen by the batch's size (``_placed``):
+  a batch of at most ``DRIVER_EVENTS_MAX`` events is collected with one
+  ``toArrow()`` and its net rows go back to Spark as a LocalRelation,
+  which runs no job; a larger batch runs the same function per pk-hash
+  group in ``applyInArrow`` (``compact_batch``, ``fold_collapsing``),
+  each group about that size. The size is the caller's event count
+  (the streaming prologue, repair and backfill have one), else the
+  batch's row count.
 - W3 in-batch last-wins dedup: the reference keeps a dict keyed by pk so
   a later event for the same pk overwrites an earlier one
   (/root/reference/synch/writer/merge_tree.py:63-85). Here: each pk's
@@ -56,16 +58,18 @@ from synch_spark.config import Engine, TableSpec, WIRE_SEQ_COL
 from synch_spark.operators import engines
 from synch_spark.sources.table import ConcurrentWriteError, ParquetTable
 
-#: A batch of at most this many source events (the streaming prologue's
-#: per-table count) runs its row rules on the driver: one ``toArrow()``
-#: of its typed events, at most two rows per event. A 10k-event batch of
-#: the benchmark's tables is ~1 MB of Arrow.
+#: A batch of at most this many events runs its row rules on the
+#: driver, one ``toArrow()`` of its typed rows (at most two per event);
+#: a larger one runs them in groups of about this many events, one
+#: Arrow table per Python worker call. Measured with
+#: tools/placement_cost.py (local[4], a Replacing batch of bigint,
+#: decimal, timestamp and string columns, compaction plus the write):
+#: with 16-char strings the driver takes 0.18 / 0.44 / 0.87 / 1.65 s at
+#: 10k / 100k / 200k / 400k events against 0.63 / 0.67 / 0.96 / 1.16 s
+#: grouped, so the two cross between 200k and 400k; with 512-char
+#: strings it still wins at 100k (0.78 against 0.96 s) holding 55 MB of
+#: Arrow, +72 MB of driver Python memory. The cap sits below both.
 DRIVER_EVENTS_MAX = 100_000
-
-#: pk-hash groups of the grouped placement: each group's rows are one
-#: Arrow table in a Python worker, so a bulk batch of N rows holds about
-#: N / GROUPS rows per call.
-GROUPS = 256
 
 
 def _arrival_cols(columns) -> list[str]:
@@ -191,10 +195,11 @@ def fold_rows(t: pa.Table, keys: list[str], sign: str) -> pa.Table:
     return t.take(rows[np.lexsort((rows, o[rows], g[rows]))])
 
 
-def _on_driver(num: int | None) -> bool:
-    """Whether a batch of ``num`` source events runs its row rules on
-    the driver; None (a caller that did not count) never does."""
-    return num is not None and num <= DRIVER_EVENTS_MAX
+def _placed(frame: DataFrame, num: int | None) -> int:
+    """The size that places a batch's row rules: ``num``, the caller's
+    count of its events, else ``frame``'s row count (two Spark jobs
+    under AQE). Up to ``DRIVER_EVENTS_MAX`` they run on the driver."""
+    return frame.count() if num is None else num
 
 
 def _local(spark, rows: pa.Table, schema: T.StructType) -> DataFrame:
@@ -206,14 +211,19 @@ def _local(spark, rows: pa.Table, schema: T.StructType) -> DataFrame:
 
 
 def _grouped(frame: DataFrame, by, rule, schema: T.StructType,
-             **args) -> DataFrame:
+             num: int | None, **args) -> DataFrame:
     """The grouped placement of an Arrow row ``rule``: ``rule(table,
     **args)`` once per group of ``frame``'s rows by the hash of its
-    ``by`` columns, in the executors' Python workers."""
+    ``by`` columns, in the executors' Python workers. A batch of ``num``
+    events (``_placed``) splits into groups of about
+    ``DRIVER_EVENTS_MAX``. The hash is murmur3 (``F.hash``), not the
+    xxhash64 that backfill_missing chunks by, so that one chunk spreads
+    over every group."""
     def run(t):  # unannotated: applyInArrow reads annotations as a mode
         return rule(t, **args)
 
-    return (frame.groupBy(F.pmod(F.xxhash64(*by), F.lit(GROUPS)))
+    groups = max(1, -(-_placed(frame, num) // DRIVER_EVENTS_MAX))
+    return (frame.groupBy(F.pmod(F.hash(*by), F.lit(groups)))
             .applyInArrow(run, schema))
 
 
@@ -224,11 +234,13 @@ def _net_schema(events: DataFrame, version: str | None) -> T.StructType:
 
 
 def compact_batch(events: DataFrame, pk: tuple[str, ...],
-                  version: str | None = None) -> DataFrame:
+                  version: str | None = None,
+                  num: int | None = None) -> DataFrame:
     """``net_rows`` of ``events`` per pk-hash group (applyInArrow): the
-    batch's net rows, with ``_deleted`` under a ``version``."""
+    batch's net rows, with ``_deleted`` under a ``version``. ``num``:
+    the batch's event count, if the caller has it (``_grouped``)."""
     return _grouped(events, pk, net_rows, _net_schema(events, version),
-                    pk=tuple(pk), version=version)
+                    num, pk=tuple(pk), version=version)
 
 
 @contextlib.contextmanager
@@ -238,17 +250,20 @@ def compacted(events: DataFrame, pk: tuple[str, ...], version: str | None,
     arrival columns) as a DataFrame, with their key columns (pk, action,
     and ``_deleted`` and ``version`` under a version) as an Arrow table.
 
-    On the driver (``_on_driver(num)``) that is one ``toArrow()``; the
-    grouped placement persists its net rows for the key collect and the
-    caller's write, until the block exits."""
+    On the driver (``_placed``) that is one ``toArrow()``; the grouped
+    placement persists its net rows for the key collect and the caller's
+    write, until the block exits. A version column that is also a pk
+    column appears once among the keys."""
     frame = events.select("action", *cols, *_arrival_cols(events.columns))
-    keys = [*pk, "action", *(["_deleted", version] if version else [])]
-    if _on_driver(num):
+    keys = list(dict.fromkeys(
+        [*pk, "action", *(["_deleted", version] if version else [])]))
+    num = _placed(frame, num)
+    if num <= DRIVER_EVENTS_MAX:
         rows = net_rows(frame.toArrow(), tuple(pk), version)
         yield (_local(frame.sparkSession, rows, _net_schema(frame, version)),
                rows.select(keys))
         return
-    net = compact_batch(frame, pk, version).persist()
+    net = compact_batch(frame, pk, version, num).persist()
     try:
         yield net, net.select(*keys).toArrow()
     finally:
@@ -284,8 +299,9 @@ def apply_cdc_batch(
     (deletes of absent keys, a replayed append) stores no record.
 
     ``num``: the batch's source-event count, when the caller has it (the
-    streaming prologue does). Up to ``DRIVER_EVENTS_MAX`` the row rules
-    run on the driver; without it they run per pk-hash group.
+    streaming prologue, repair and backfill do); without it the apply
+    counts the batch's rows. Up to ``DRIVER_EVENTS_MAX`` the row rules
+    run on the driver, above it per pk-hash group.
     """
     if spec.engine in (Engine.COLLAPSING_MERGE_TREE, Engine.VERSIONED_COLLAPSING_MERGE_TREE):
         _apply_collapsing(table, events, spec, value_columns, epoch=epoch,
@@ -409,7 +425,10 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
     rels = sorted(snap.files) if found is None else sorted(
         os.path.relpath(p, table._data).replace(os.sep, "/") for p in found)
     schema = table.schema(base)
-    carry = [*pk, version] if version in schema.names else []
+    # a version that is also a pk column is carried once
+    carry = (list(dict.fromkeys([*pk, version]))
+             if version in schema.names else [])
+    at = carry.index(version) if carry else None
     # every target row with a batch pk, masked or not, wherever it lives
     # (a pk that moved partition is found in its old one)
     hits = table.locate(rels, snap, pks, pk, carry) if rels else {}
@@ -421,8 +440,8 @@ def _merge(table: ParquetTable, pks: DataFrame, upserts: DataFrame,
         for pos, *stored in matched:
             if pos in dead:
                 continue  # masked already: no rival, nothing to mask
-            if stored and _outranks(stored[-1],
-                                    batch.get(key := tuple(stored[:-1]))):
+            if carry and _outranks(stored[at], batch.get(
+                    key := tuple(stored[:len(pk)]))):
                 stale.add(key)  # the stored row stays
             else:
                 new.append(pos)
@@ -500,29 +519,34 @@ def folded(events: DataFrame, spec: TableSpec, cols: list[str],
     """A Collapsing batch signed and folded (``fold_rows``): the one
     write rule of the store (_apply_collapsing) and the JDBC sink. The
     rows hold ``cols``, the sign and the arrival columns. On the driver
-    when ``_on_driver(num)``, else ``fold_collapsing``."""
+    up to ``DRIVER_EVENTS_MAX`` events (``_placed``), else
+    ``fold_collapsing``."""
     from synch_spark.events import annotate_sign
 
     frame = events.select("action", *cols, *_arrival_cols(events.columns))
-    if not (spec.has_pk and _on_driver(num)):
-        return fold_collapsing(frame, spec, cols)
+    if not spec.has_pk:
+        return annotate_sign(frame, spec.sign_column)
+    num = _placed(frame, num)
+    if num > DRIVER_EVENTS_MAX:
+        return fold_collapsing(frame, spec, cols, num)
     signed = annotate_sign(frame, spec.sign_column)
     return _local(signed.sparkSession, fold_rows(
         signed.toArrow(), _fold_keys(spec, cols), spec.sign_column),
         signed.schema)
 
 
-def fold_collapsing(events: DataFrame, spec: TableSpec,
-                    cols: list[str]) -> DataFrame:
+def fold_collapsing(events: DataFrame, spec: TableSpec, cols: list[str],
+                    num: int | None = None) -> DataFrame:
     """T6 + fold: sign a Collapsing batch (+1 insert / -1 delete) and run
     ``fold_rows`` per pk-hash group (applyInArrow). A table without a pk
-    keeps every signed row."""
+    keeps every signed row. ``num``: the batch's event count, if the
+    caller has it (``_grouped``)."""
     from synch_spark.events import annotate_sign
 
     signed = annotate_sign(events, spec.sign_column)
     if not spec.has_pk:
         return signed
-    return _grouped(signed, spec.pk, fold_rows, signed.schema,
+    return _grouped(signed, spec.pk, fold_rows, signed.schema, num,
                     keys=_fold_keys(spec, cols), sign=spec.sign_column)
 
 

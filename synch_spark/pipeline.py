@@ -263,7 +263,7 @@ def repair(
     if value_schema is None:
         value_schema = _nullable_value_schema(source_df)
     typed = parse_values(split_updates(events), value_schema)
-    apply_cdc_batch(table, typed, spec)
+    apply_cdc_batch(table, typed, spec, num=n)
     return n
 
 
@@ -339,14 +339,16 @@ def backfill_missing(
         # materialize BEFORE the write: the anti-join plan reads the table
         # this chunk's apply is about to version (read-after-write hazard)
         chunk = chunk.localCheckpoint(eager=True)
-        if chunk.isEmpty():
+        n = chunk.count()
+        if not n:
             continue
         events = diff_snapshots(
             chunk.limit(0), chunk, spec.pk, spec.schema, spec.table,
             event_unixtime=us,
         )
-        apply_cdc_batch(table, parse_values(split_updates(events), value_schema), spec)
-        total += chunk.count()
+        apply_cdc_batch(table, parse_values(split_updates(events), value_schema),
+                        spec, num=n)
+        total += n
     return total
 
 

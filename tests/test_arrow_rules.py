@@ -1,6 +1,8 @@
 """The batch's row rules on Arrow (cdc_apply.net_rows, fold_rows): a
 plain-Python oracle on random streams, and the two placements of one
-rule — on the driver and per pk-hash group (applyInArrow) — agree."""
+rule — on the driver and per pk-hash group (applyInArrow) — agree.
+
+A count above ``DRIVER_EVENTS_MAX`` places a small batch in groups."""
 
 from __future__ import annotations
 
@@ -13,10 +15,14 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
 
 from synch_spark.config import WIRE_SEQ_COL, Engine, TableSpec
+from synch_spark.operators import cdc_apply
 from synch_spark.operators.cdc_apply import (
-    apply_cdc_batch, compacted, fold_rows, folded, net_rows,
-    read_current_state)
+    DRIVER_EVENTS_MAX, apply_cdc_batch, compacted, fold_rows, folded,
+    net_rows, read_current_state)
 from synch_spark.sources.table import ParquetTable
+
+#: a count that places a batch in the grouped placement
+GROUPED = DRIVER_EVENTS_MAX + 1
 
 UTC = datetime.timezone.utc
 PK_TYPES = {
@@ -206,7 +212,7 @@ def _batch(spark):
 def test_compaction_is_the_same_on_the_driver_and_grouped(spark, version):
     events = _batch(spark)
     got = {}
-    for num in (events.count(), None):
+    for num in (None, GROUPED):
         with compacted(events, ("id",), version, COLS, num) as (net, keys):
             got[num] = (net.schema, sorted(map(tuple, net.collect())),
                         sorted(tuple(r.values()) for r in keys.to_pylist()))
@@ -222,15 +228,18 @@ def test_fold_is_the_same_on_the_driver_and_grouped(spark):
     spec = TableSpec(schema="db", table="t", pk=("id",),
                      engine=Engine.COLLAPSING_MERGE_TREE)
     driver, grouped = (folded(events, spec, COLS, num)
-                       for num in (events.count(), None))
+                       for num in (None, GROUPED))
     assert driver.schema == grouped.schema
     assert sorted(map(tuple, driver.collect())) == sorted(
         map(tuple, grouped.collect()))
 
 
-def test_a_bulk_backfill_runs_the_grouped_rule(spark, tmp_path):
-    """backfill_missing gives no count: its chunks run the rule per
-    pk-hash group and fill only the missing keys."""
+def test_a_bulk_backfill_above_the_cap_runs_the_grouped_rule(
+        spark, tmp_path, monkeypatch):
+    """backfill_missing passes each chunk's count: a chunk above the cap
+    runs the rule per pk-hash group, and fills only the missing keys."""
+    from pyspark.sql import GroupedData
+
     from synch_spark.pipeline import backfill_missing
 
     spec = TableSpec(schema="db", table="t", pk=("id",),
@@ -240,16 +249,35 @@ def test_a_bulk_backfill_runs_the_grouped_rule(spark, tmp_path):
         [("insert", 1, "live", 10, 1)],
         "action string, id long, v string, event_unixtime long, "
         "action_seq int"), spec, value_columns=["id", "v"], num=1)
+    grouped, apply_in_arrow = [], GroupedData.applyInArrow
+
+    def spy(self, *a, **k):
+        grouped.append(1)
+        return apply_in_arrow(self, *a, **k)
+
+    monkeypatch.setattr(GroupedData, "applyInArrow", spy)
+    monkeypatch.setattr(cdc_apply, "DRIVER_EVENTS_MAX", 8)
     source = spark.createDataFrame([(k, f"snap{k}") for k in range(40)],
                                    "id long, v string")
     assert backfill_missing(source, t, spec, num_chunks=2) == 39
+    assert len(grouped) == 2
     got = {r["id"]: r["v"] for r in read_current_state(t, spec).collect()}
     assert got == {**{k: f"snap{k}" for k in range(40)}, 1: "live"}
 
 
+def test_a_backfill_chunk_spreads_over_every_group(spark):
+    """The groups hash the pk apart from backfill_missing's chunks: the
+    keys of one chunk fall in every group."""
+    keys = spark.range(4000).withColumnRenamed("id", "k")
+    chunk = keys.filter(F.pmod(F.xxhash64("k"), F.lit(4)) == 0)
+    groups = chunk.select(F.pmod(F.hash("k"), F.lit(4)).alias("g"))
+    assert sorted(r["g"] for r in groups.distinct().collect()) == [0, 1, 2, 3]
+
+
 def test_a_counted_streaming_batch_starts_no_python_worker(spark, tmp_path,
                                                            monkeypatch):
-    """The driver placement runs no applyInArrow."""
+    """The driver placement runs no applyInArrow, for a counted batch
+    and for one the apply counts itself."""
     from pyspark.sql import GroupedData
 
     def refuse(*a, **k):
@@ -259,10 +287,10 @@ def test_a_counted_streaming_batch_starts_no_python_worker(spark, tmp_path,
     for engine in (Engine.REPLACING_MERGE_TREE, Engine.COLLAPSING_MERGE_TREE):
         spec = TableSpec(schema="db", table="t", pk=("id",), engine=engine)
         t = ParquetTable(spark, str(tmp_path / engine.value))
-        for us in (1, 2):
+        for us, num in ((1, 9), (2, None)):
             ev = _batch(spark).withColumn(
                 "event_unixtime", F.col("event_unixtime") + us * 1000)
-            apply_cdc_batch(t, ev, spec, value_columns=COLS, num=9)
+            apply_cdc_batch(t, ev, spec, value_columns=COLS, num=num)
         ids = sorted(r["id"] for r in read_current_state(t, spec).collect())
         assert ids == [b"\x00", b"a", b"b"], engine
 
@@ -273,6 +301,56 @@ def test_a_null_wire_seq_sorts_as_zero_on_both_placements(spark):
          ("insert", 1, "seq -1", 5, -1, 3)],
         f"action string, id long, v string, event_unixtime long, "
         f"{WIRE_SEQ_COL} long, action_seq int")
-    for num in (2, None):
+    for num in (2, GROUPED):
         with compacted(events, ("id",), None, ["id", "v"], num) as (net, _):
             assert [r["v"] for r in net.collect()] == ["null seq"]
+
+
+@pytest.mark.parametrize("num", [None, GROUPED])
+def test_a_version_column_in_the_pk_merges(spark, tmp_path, num):
+    """A Replacing table whose version column is also a pk column: each
+    (id, version) is its own key, on both placements."""
+    spec = TableSpec(schema="db", table="t", pk=("id", "version"),
+                     engine=Engine.REPLACING_MERGE_TREE)
+    ddl = ("action string, id long, version long, v string, "
+           "event_unixtime long, action_seq int")
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    for rows in ([("insert", 1, 1, "a", 1, 2), ("insert", 1, 2, "b", 1, 2),
+                  ("insert", 2, 1, "c", 1, 2)],
+                 [("insert", 1, 1, "a2", 5, 2), ("delete", 2, 1, "c", 5, 1),
+                  ("insert", 3, 0, "d", 5, 2)],
+                 [("insert", 1, 2, "b2", 9, 2)]):
+        apply_cdc_batch(t, spark.createDataFrame(rows, ddl), spec,
+                        value_columns=["id", "version", "v"], num=num)
+    got = {(r["id"], r["version"]): r["v"]
+           for r in read_current_state(t, spec).collect()}
+    assert got == {(1, 1): "a2", (1, 2): "b2", (3, 0): "d"}
+
+
+def test_a_version_column_in_the_pk_through_the_jdbc_sink(spark, tmp_path):
+    from synch_spark.sinks.jdbc_sink import JdbcSink
+
+    # upper case: Derby folds the sink's unquoted names to it
+    url = f"jdbc:derby:{tmp_path}/sinkdbpk;create=true"
+    spec = TableSpec(schema="db", table="t", pk=("K", "VERSION"),
+                     engine=Engine.REPLACING_MERGE_TREE,
+                     version_column="VERSION")
+    try:
+        spark.createDataFrame([(1, 1, 1.0), (1, 2, 2.0), (2, 1, 3.0)],
+                              "K long, VERSION long, V double").write.format(
+            "jdbc").option("url", url).option("dbtable", "APP.VP").mode(
+            "overwrite").save()
+    except Exception as e:  # noqa: BLE001
+        pytest.skip(f"embedded Derby unavailable: {str(e).splitlines()[0]}")
+    sink = JdbcSink(spark, url, "APP.VP")
+    for num in (None, GROUPED):
+        sink.apply_batch(spark.createDataFrame(
+            [("insert", 1, 2, 22.0, 10, 2), ("delete", 2, 1, None, 10, 1),
+             ("insert", 3, 0, 30.0, 10, 2)],
+            "action string, K long, VERSION long, V double, "
+            "event_unixtime long, action_seq int"),
+            spec, value_columns=["K", "VERSION", "V"], num=num)
+        back = {(r["K"], r["VERSION"]): r["V"]
+                for r in spark.read.format("jdbc").option("url", url)
+                .option("dbtable", "APP.VP").load().collect()}
+        assert back == {(1, 1): 1.0, (1, 2): 22.0, (3, 0): 30.0}, num

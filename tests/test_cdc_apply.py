@@ -459,15 +459,17 @@ def test_apply_record_rides_in_the_commit_it_makes(spark, tmp_path):
         ("overwrite", 0), ("append", 1)]
 
 
-#: Spark jobs of one counted merge micro-batch on a Replacing table with
-#: a version column (bootstrap excluded), measured once the batch's row
-#: rules ran on one Arrow collect (8, then 6, with Spark windows): that
-#: collect, the locate semi-join (2) and the commit write. Lower it when
-#: the merge loses a job; never raise it.
-MERGE_JOB_BUDGET = 4
-#: The same for a counted Collapsing batch: the Arrow collect and the
+#: Spark jobs of one merge micro-batch on a Replacing table with a
+#: version column (bootstrap excluded), by the caller's count of the
+#: batch (None: the apply counts it, two jobs under AQE), measured once
+#: the batch's row rules ran on one Arrow collect (6 with Spark windows,
+#: 8 before the merge took the table's schema from the log): the count,
+#: that collect, the locate semi-join (2) and the commit write. Lower
+#: them when the merge loses a job; never raise them.
+MERGE_JOB_BUDGET = {None: 6, 4: 4}
+#: The same for a Collapsing batch: the count, the Arrow collect and the
 #: append's write.
-COLLAPSING_JOB_BUDGET = 2
+COLLAPSING_JOB_BUDGET = {None: 4, 4: 2}
 
 
 def test_replacing_merge_job_budget(spark, tmp_path):
@@ -476,41 +478,45 @@ def test_replacing_merge_job_budget(spark, tmp_path):
     cols = ["k", "version", "v"]
     ddl = ("action string, k long, version long, v string, "
            "event_unixtime long, action_seq int")
-    t = ParquetTable(spark, str(tmp_path / "t"))
-    apply_cdc_batch(t, spark.createDataFrame(
-        [("insert", k, 5, "a", 1, 2) for k in range(20)], ddl), vspec,
-        value_columns=cols)
-    # an upsert that wins, a stale one (dropped by its stored version),
-    # a delete and a new key
-    ev = spark.createDataFrame([
-        ("insert", 3, 9, "b", 10, 2), ("insert", 4, 1, "stale", 10, 2),
-        ("delete", 5, 5, "a", 10, 1), ("insert", 100, 1, "new", 10, 2)], ddl)
-    with spark_jobs(spark) as jobs:
-        apply_cdc_batch(t, ev, vspec, value_columns=cols, num=4)
-    assert 0 < len(jobs) <= MERGE_JOB_BUDGET
-    got = {r["k"]: (r["version"], r["v"]) for r in t.read().collect()}
-    assert got[3] == (9, "b") and got[4] == (5, "a") and 5 not in got
-    assert got[100] == (1, "new") and len(got) == 20
+    for num, budget in MERGE_JOB_BUDGET.items():
+        t = ParquetTable(spark, str(tmp_path / f"t{num}"))
+        apply_cdc_batch(t, spark.createDataFrame(
+            [("insert", k, 5, "a", 1, 2) for k in range(20)], ddl), vspec,
+            value_columns=cols)
+        # an upsert that wins, a stale one (dropped by its stored
+        # version), a delete and a new key
+        ev = spark.createDataFrame([
+            ("insert", 3, 9, "b", 10, 2), ("insert", 4, 1, "stale", 10, 2),
+            ("delete", 5, 5, "a", 10, 1), ("insert", 100, 1, "new", 10, 2)],
+            ddl)
+        with spark_jobs(spark) as jobs:
+            apply_cdc_batch(t, ev, vspec, value_columns=cols, num=num)
+        assert 0 < len(jobs) <= budget, num
+        got = {r["k"]: (r["version"], r["v"]) for r in t.read().collect()}
+        assert got[3] == (9, "b") and got[4] == (5, "a") and 5 not in got
+        assert got[100] == (1, "new") and len(got) == 20
 
 
 def test_collapsing_apply_job_budget(spark, tmp_path):
-    c = ParquetTable(spark, str(tmp_path / "c"))
     s = spec(Engine.COLLAPSING_MERGE_TREE)
-    apply_cdc_batch(c, _typed(spark, [
-        ("insert", None, {"id": k, "amount": "a"}, 1) for k in range(10)]), s)
     ev = _typed(spark, [
         ("update", {"id": 1, "amount": "a"}, {"id": 1, "amount": "b"}, 10),
         ("update", {"id": 1, "amount": "b"}, {"id": 1, "amount": "c"}, 20),
         ("delete", {"id": 2, "amount": "a"}, None, 10),
         ("insert", None, {"id": 50, "amount": "n"}, 10)])
-    with spark_jobs(spark) as jobs:
-        apply_cdc_batch(c, ev, s, num=4)
-    assert 0 < len(jobs) <= COLLAPSING_JOB_BUDGET
-    # pk 1 folds to its first cancel and its last state
-    assert c.read().count() == 10 + 2 + 1 + 1
-    got = read_current_state(c, s).collect()
-    assert {r["id"]: r["amount"] for r in got} == {
-        **{k: "a" for k in range(10) if k != 2}, 1: "c", 50: "n"}
+    for num, budget in COLLAPSING_JOB_BUDGET.items():
+        c = ParquetTable(spark, str(tmp_path / f"c{num}"))
+        apply_cdc_batch(c, _typed(spark, [
+            ("insert", None, {"id": k, "amount": "a"}, 1)
+            for k in range(10)]), s)
+        with spark_jobs(spark) as jobs:
+            apply_cdc_batch(c, ev, s, num=num)
+        assert 0 < len(jobs) <= budget, num
+        # pk 1 folds to its first cancel and its last state
+        assert c.read().count() == 10 + 2 + 1 + 1
+        got = read_current_state(c, s).collect()
+        assert {r["id"]: r["amount"] for r in got} == {
+            **{k: "a" for k in range(10) if k != 2}, 1: "c", 50: "n"}
 
 
 #: Spark jobs of one DDL-free micro-batch through ``CdcPipeline`` on two
